@@ -1,12 +1,20 @@
 """Text-analysis column functions (SURVEY.md §2.7 N3) — all pure Catalyst
 expressions (JVM-side, codegen'd); no Python in the hot path.
 
-The documents testdata is single-space-joined word text, so tokenization is
-`split(text, ' ')`, which matches DuckDB's `string_split(text, ' ')` exactly
-(the oracle contract). A regex tokenizer is provided for messier input.
+Each text primitive is defined once, here. One tokenizer: the documents
+testdata is single-space-joined word text, so :func:`tokens` is
+``split(text, ' ')``, which matches DuckDB's ``string_split(text, ' ')``
+exactly (the oracle contract). One n-gram builder, :func:`ngrams`, under
+bigrams, shingles, struct bigrams and the winnowing k-gram hashes.
+Arrays are bound once per row with :func:`let`: HOF lambdas run in the
+interpreter, and a lambda body that mentions an outer expression (the
+split, a hash array) re-evaluates it for every element. Plan-lint's
+``hof-invariant`` rule (plans/lint.py) flags such a lambda.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -25,6 +33,14 @@ STOPWORDS = ["the", "a", "of", "and", "is", "to", "in"]
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
+
+
+def let(value: Column, fn: Callable[[Column], Column]) -> Column:
+    """``fn(value)`` with ``value`` evaluated once per row: ``fn`` receives
+    it as a lambda variable, so HOF lambdas inside ``fn`` that mention it
+    read the bound array instead of re-evaluating ``value`` per element.
+    A null ``value`` reaches ``fn`` as null, exactly as when inlined."""
+    return F.element_at(F.transform(F.array(value), fn), 1)
 
 
 def tokens(col: Column | str) -> Column:
@@ -104,29 +120,54 @@ def lang_id(col: Column | str) -> Column:
     return F.when(best["score"] <= 0, F.lit("und")).otherwise(best["lang"])
 
 
+def ngrams(col: Column | str, n: int) -> Column:
+    """All word n-grams of a text column in order, occurrences included
+    (NOT distinct), each the n tokens joined by single spaces."""
+
+    def grams(t: Column) -> Column:
+        starts = F.sequence(F.lit(1), F.size(t) - (n - 1))
+        joined = F.transform(starts, lambda i: F.array_join(F.slice(t, i, n), " "))
+        # sequence(1, 0) is the DESCENDING [1, 0]: guard docs under n tokens
+        return F.when(F.size(t) >= n, joined).otherwise(F.array().cast("array<string>"))
+
+    return let(tokens(col), grams)
+
+
+def shingles(col: Column | str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of a text column."""
+    return F.array_distinct(ngrams(col, n))
+
+
 def bigrams(col: Column | str) -> Column:
     """ALL word bigrams in order (duplicates kept — unlike shingles, which
-    dedupe): the repetition-signal denominator. Pure Catalyst."""
-    toks = tokens(col)
-    count = F.size(toks) - 1
-    return F.when(
-        count >= 1,
-        F.transform(
-            F.sequence(F.lit(1), count),
-            lambda i: F.array_join(F.slice(toks, i, 2), " "),
+    dedupe): the repetition-signal denominator."""
+    return ngrams(col, 2)
+
+
+def bigram_pairs(col: Column | str) -> Column:
+    """:func:`bigrams` as ``struct<w1, w2>``, for relations keyed on the two
+    words: each bigram split at its one space (a token never holds one)."""
+    return F.transform(
+        bigrams(col),
+        lambda b: F.struct(
+            F.substring_index(b, " ", 1).alias("w1"),
+            F.substring_index(b, " ", -1).alias("w2"),
         ),
-    ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
+    )
 
 
 def top_element_count(arr: Column) -> Column:
     """Occurrence count of the most frequent element of an array. Pure HOF
     (O(distinct × n) per row, map-only — no explode/groupBy shuffle), so
     repetition scoring stays a single scan-bound pass at 100 TB."""
-    return F.array_max(
-        F.transform(
-            F.array_distinct(arr),
-            lambda w: F.size(F.filter(arr, lambda t: t == w)),
-        )
+    return let(
+        arr,
+        lambda a: F.array_max(
+            F.transform(
+                F.array_distinct(a),
+                lambda w: F.size(F.filter(a, lambda t: t == w)),
+            )
+        ),
     )
 
 
@@ -147,26 +188,13 @@ def winnow_fingerprints(col: Column | str, k: int = 3, w: int = 4) -> Column:
     Pure Catalyst (transform/slice/array_min over md5 hex strings — string
     order is hash order, portable to the oracle): no Python in the path,
     so 100 TB of documents fingerprint at scan speed, map-side only."""
-    toks = tokens(col)
-    n_grams = F.size(toks) - (k - 1)
-    empty = F.expr("CAST(array() AS ARRAY<STRING>)")
-    hashes = F.when(
-        n_grams >= 1,
-        F.transform(
-            F.sequence(F.lit(1), n_grams),
-            lambda i: F.md5(F.array_join(F.slice(toks, i, k), " ")),
+    hashes = F.transform(ngrams(col, k), F.md5)
+    # fewer than w hashes make one window; none make one null, compacted away
+    wins = let(
+        hashes,
+        lambda h: F.transform(
+            F.sequence(F.lit(1), F.greatest(F.size(h) - (w - 1), F.lit(1))),
+            lambda i: F.array_min(F.slice(h, i, w)),
         ),
-    ).otherwise(empty)
-    n_wins = F.size(hashes) - (w - 1)
-    wins = (
-        F.when(F.size(hashes) == 0, empty)
-        .when(
-            n_wins >= 1,
-            F.transform(
-                F.sequence(F.lit(1), n_wins),
-                lambda i: F.array_min(F.slice(hashes, i, w)),
-            ),
-        )
-        .otherwise(F.array(F.array_min(hashes)))  # doc shorter than window
     )
-    return F.array_distinct(wins)
+    return F.array_distinct(F.array_compact(wins))

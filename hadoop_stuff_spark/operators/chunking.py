@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_stuff_spark.catalog import load_table, spread
+from hadoop_stuff_spark.functions import text as T
 
 
 def chunk_documents(
@@ -41,7 +42,7 @@ def chunk_documents(
     if not 0 <= overlap < window:
         raise ValueError(f"need 0 <= overlap < window, got {overlap}/{window}")
     stride = window - overlap
-    toks = F.split(F.col(text_col), " ")
+    toks = T.tokens(text_col)
     starts = F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(stride))
     chunk = F.slice(toks, F.col("start"), window)
     return (

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_stuff_spark.catalog import load_table, spread
+from hadoop_stuff_spark.functions import text as T
 
 # portable regexes (identical semantics in Spark's Java regex and DuckDB's
 # RE2): keep to character classes + bounded quantifiers, no lookaround
@@ -175,11 +176,9 @@ def boilerplate_ngrams(
     explode → ONE (ngram) hash aggregate carrying (df, n_sources)
     partials; candidate n-grams above a df floor are vocabulary-scale,
     not corpus-scale."""
-    from hadoop_stuff_spark.operators.dedup import shingles
-
     docs = spread(load_table(spark, sf_dir, "documents"))
     grams = docs.select(
-        "doc_id", "source", F.explode(shingles("text", n)).alias("ngram")
+        "doc_id", "source", F.explode(T.shingles("text", n)).alias("ngram")
     )
     return (
         grams.groupBy("ngram")
@@ -262,7 +261,7 @@ def n3_curation_funnel_by_source(
                 >= F.lit(float(alpha_min)) * F.length("text")
             ),
         )
-        .withColumn("n_tok", F.size(F.split(F.col("text"), " ")))
+        .withColumn("n_tok", T.token_count("text"))
     )
     final = F.col("canon") & F.col("len_ok") & F.col("alpha_ok")
     return (

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_stuff_spark.catalog import load_table, spread
-from hadoop_stuff_spark.operators.dedup import shingles
+from hadoop_stuff_spark.functions.text import shingles
 
 HOLDOUT_MOD = 20  # deterministic held-out slice: doc_id % 20 == 0
 

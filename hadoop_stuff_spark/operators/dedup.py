@@ -29,7 +29,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from hadoop_stuff_spark.catalog import load_table, spread
 from hadoop_stuff_spark.functions import text as T
-from hadoop_stuff_spark.functions.text import fingerprint_md5
+from hadoop_stuff_spark.functions.text import fingerprint_md5, shingles
 from hadoop_stuff_spark.operators.sampling import (
     _BUDGET_MAX_EPOCHS,
     _BUDGET_TAU,
@@ -69,27 +69,6 @@ def drop_exact_duplicates(df: DataFrame, content_col: str = "text") -> DataFrame
 
 # ---------------------------------------------------------------------------
 # word-shingle helpers
-
-
-def word_ngrams(col: Column | str, n: int = 3) -> Column:
-    """All word n-grams of a text column, occurrences included (NOT
-    distinct). Pure Catalyst: transform over the token index sequence."""
-    toks = T.tokens(col)
-    count = F.size(toks) - (n - 1)
-    # guard: sequence(1, 0) in Spark is the DESCENDING [1, 0], not empty
-    return F.when(
-        count >= 1,
-        F.transform(
-            F.sequence(F.lit(1), count),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        ),
-    ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
-
-
-def shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column
-    (:func:`word_ngrams` + array_distinct)."""
-    return F.array_distinct(word_ngrams(col, n))
 
 
 def _shingle_index(docs, n: int, max_doc_freq: int | None):
@@ -785,7 +764,7 @@ def n1_repeated_ngrams(
     tripwire a pretraining pipeline runs to find boilerplate/template
     spans that exact-dedup (whole-doc hashing) cannot see.
 
-    Plan shape: in-row n-gram construction (:func:`word_ngrams` — no
+    Plan shape: in-row n-gram construction (:func:`T.ngrams` — no
     array_distinct, occurrences count), one map-side-partial aggregate on
     the gram (count-distinct expands to the standard two-phase plan),
     then TakeOrderedAndProject for the top-k.
@@ -796,7 +775,7 @@ def n1_repeated_ngrams(
     (n_docs desc, n_occurrences desc, gram asc) so output is
     deterministic."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    g = docs.select("doc_id", F.explode(word_ngrams("text", n)).alias("gram"))
+    g = docs.select("doc_id", F.explode(T.ngrams("text", n)).alias("gram"))
     return (
         g.groupBy("gram")
         .agg(
@@ -1598,7 +1577,7 @@ def _fp_token_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         fingerprint_md5("text").alias("fp"),
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tok"),
+        T.token_count("text").cast("long").alias("n_tok"),
     )
     first = _canonical_first(docs).select("fp", "canonical_id")
     return docs.join(first, "fp")

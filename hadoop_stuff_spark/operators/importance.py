@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_stuff_spark.catalog import load_table, spread
+from hadoop_stuff_spark.functions import text as T
 from hadoop_stuff_spark.operators.sampling import _hex_prefix_val
 
 B = 256
@@ -64,7 +65,7 @@ def n3_importance_resampling(
     tb = docs.select(
         "doc_id",
         "lang",
-        F.explode(F.split("text", " ")).alias("tok"),
+        F.explode(T.tokens("text")).alias("tok"),
     ).select("doc_id", "lang", _bucket(F.col("tok")).alias("b"))
 
     # per-(doc, bucket) counts are the ONLY consumer of the token explode;

@@ -31,8 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_stuff_spark.catalog import load_table, spread
-
-_BIGRAMS = "transform(sequence(0, size(t)-2), i -> struct(t[i] AS w1, t[i+1] AS w2))"
+from hadoop_stuff_spark.functions import text as T
 
 
 def bigram_lm_scores(docs: DataFrame, k: float = 0.5) -> DataFrame:
@@ -43,18 +42,16 @@ def bigram_lm_scores(docs: DataFrame, k: float = 0.5) -> DataFrame:
     6 dp, ppl (= exp(avg_nll)) to 2 dp, so the value-hash survives the
     ±ulp summation-order differences of distributed aggregation.
     """
-    toks = docs.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= 2
-    )
+    toks = docs.filter(T.token_count("text") >= 2)
     doc_bg = toks.select(
-        "doc_id", F.explode(F.expr(_BIGRAMS)).alias("bg")
+        "doc_id", F.explode(T.bigram_pairs("text")).alias("bg")
     ).select("doc_id", "bg.w1", "bg.w2")
     # Per-doc distinct-bigram term frequencies: the model join then carries
     # one row per (doc, distinct bigram) instead of one per token position.
     tf = doc_bg.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("tf"))
     model = tf.groupBy("w1", "w2").agg(F.sum("tf").alias("n_xy"))
     ctx = model.groupBy("w1").agg(F.sum("n_xy").alias("n_x"))
-    vocab = toks.select(F.explode("t").alias("w")).agg(
+    vocab = toks.select(F.explode(T.tokens("text")).alias("w")).agg(
         F.countDistinct("w").alias("v")
     )
     nll = -F.log(
@@ -136,17 +133,9 @@ def n3_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one explode → (source, bigram) hash aggregate; prefix
     totals are a window over the BIGRAM count table (vocabulary², still
     tiny vs facts); output is one row per source."""
-    from hadoop_stuff_spark.operators.dedup import word_ngrams
-
     docs = spread(load_table(spark, sf_dir, "documents"))
-    bi = docs.select(
-        "source", F.explode(word_ngrams("text", 2)).alias("bigram")
-    ).select(
-        "source",
-        F.split("bigram", " ").getItem(0).alias("w1"),
-        F.col("bigram"),
-    )
-    counts = bi.groupBy("source", "w1", "bigram").agg(
+    bi = docs.select("source", F.explode(T.bigram_pairs("text")).alias("bg"))
+    counts = bi.groupBy("source", "bg.w1", "bg.w2").agg(
         F.count(F.lit(1)).alias("c12")
     )
     w_prefix = Window.partitionBy("source", "w1")

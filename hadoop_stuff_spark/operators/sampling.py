@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_stuff_spark.catalog import load_table, spread
+from hadoop_stuff_spark.functions import text as T
 
 _HEX_DIGITS = 6  # threshold resolution: 16^-6 ≈ 6e-8
 
@@ -442,7 +443,7 @@ def n3_mixture_temperature_table(
     (size(split()) — no token materialization), a |sources|-row hash
     aggregate, then window sums over that tiny relation."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    n_tok = F.size(F.split(F.col("text"), " "))
+    n_tok = T.token_count("text")
     per_src = docs.groupBy("source").agg(
         F.sum(n_tok).cast("long").alias("n_tokens")
     )
@@ -628,7 +629,7 @@ def n3_token_budget_epochs(
     windows and arithmetic run on that tiny relation. Nothing here sees
     document text after the map-side token count."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    n_tok = F.size(F.split(F.col("text"), " "))
+    n_tok = T.token_count("text")
     per_src = docs.groupBy("source").agg(
         F.sum(n_tok).cast("long").alias("n_tokens")
     )

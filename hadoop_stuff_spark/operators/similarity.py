@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from hadoop_stuff_spark.catalog import load_table, spread
+from hadoop_stuff_spark.functions.text import let
 from hadoop_stuff_spark.functions.vectors import as_double, cosine, dot, l2_norm
 from hadoop_stuff_spark.operators.textstats import _bm25_sql_score, bm25_rank_topk
 
@@ -435,18 +436,21 @@ def quantize_embeddings_int8(emb: DataFrame, vec_col: str = "embedding") -> Data
     (scale 0 for the zero vector). Adds ``codes array<int>`` and
     ``scale double``; dequantization is codes[i] * scale with relative
     error <= scale/2 per component. Map-only, no Python."""
-    v = F.col(vec_col)
-    max_abs = F.aggregate(
-        v,
-        F.lit(0.0),
-        lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
-    )
-    scale = (max_abs / F.lit(127.0)).alias("scale")
-    codes = F.when(max_abs == 0.0, F.transform(v, lambda x: F.lit(0))).otherwise(
-        F.transform(
-            v, lambda x: F.round(x.cast("double") * 127.0 / max_abs, 0).cast("int")
+
+    def max_abs(v):
+        return F.aggregate(
+            v, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x.cast("double")))
         )
-    )
+
+    def quantize(v, m):
+        return F.when(m == 0.0, F.transform(v, lambda x: F.lit(0))).otherwise(
+            F.transform(v, lambda x: F.round(x.cast("double") * 127.0 / m, 0).cast("int"))
+        )
+
+    v = F.col(vec_col)
+    # max_abs bound once per vector, not re-aggregated per component
+    codes = let(v, lambda a: let(max_abs(a), lambda m: quantize(a, m)))
+    scale = (max_abs(v) / F.lit(127.0)).alias("scale")
     return emb.select("*", codes.alias("codes"), scale)
 
 

@@ -551,7 +551,7 @@ def sketch_shingles_blob(
     that exceed 2^lg_k distinct shingles leave exact mode, and
     `theta_blob_is_exact` on the merged blob then (correctly) withholds
     proof — staleness or overflow can never produce a false skip."""
-    from hadoop_stuff_spark.operators.dedup import shingles
+    from hadoop_stuff_spark.functions.text import shingles
 
     return bytes(
         docs.select(F.explode(shingles(text_col, n)).alias("sh"))

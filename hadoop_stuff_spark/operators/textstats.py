@@ -158,11 +158,12 @@ def winnowed_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     enough to certify the whole scheme against the oracle's list-
     comprehension reimplementation."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    fps = T.winnow_fingerprints("text", k=3, w=4)
-    return docs.select(
+    # fps in its own projection: both consumers read the one array
+    fps = docs.select("doc_id", T.winnow_fingerprints("text", k=3, w=4).alias("fps"))
+    return fps.select(
         "doc_id",
-        F.size(fps).alias("n_fps"),
-        F.array_min(fps).alias("min_fp"),
+        F.size("fps").alias("n_fps"),
+        F.array_min("fps").alias("min_fp"),
     )
 
 
@@ -370,21 +371,17 @@ def n3_collocations(
 
     Exactness: lift is a ratio of exact integer counts evaluated with the
     same expression tree on both engines; PMI's log2 rides on top and is
-    rounded to 4 dp. Plan shape: bigrams are built in-row with a
-    ``transform(sequence(...))`` HOF (no posexplode self-join), so the
+    rounded to 4 dp. Plan shape: bigrams are built in-row by
+    :func:`T.bigram_pairs` (no posexplode self-join), so the
     corpus is scanned once for bigrams and once for unigrams; the joins
     are counts-to-counts (vocab-sized, far below corpus size) and the
     grand total is a 1-row broadcast."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toks = docs.select(F.split("text", " ").alias("t")).filter(F.size("t") >= 2)
-    bigrams = toks.select(
-        F.explode(
-            F.expr("transform(sequence(0, size(t)-2), i -> struct(t[i] AS w1, t[i+1] AS w2))")
-        ).alias("bg")
-    ).select("bg.w1", "bg.w2")
-    big_counts = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_xy"))
+    toks = docs.filter(T.token_count("text") >= 2)
+    bigrams = toks.select(F.explode(T.bigram_pairs("text")).alias("bg"))
+    big_counts = bigrams.groupBy("bg.w1", "bg.w2").agg(F.count(F.lit(1)).alias("n_xy"))
     uni = (
-        toks.select(F.explode("t").alias("w"))
+        toks.select(F.explode(T.tokens("text")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n_w"))
     )
@@ -457,7 +454,7 @@ def bm25_scores(
     than the final ranking consumer. The score sum is a fixed-arity
     expression (not an aggregate over rows), so it is order-independent
     by construction."""
-    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
+    toks = docs.select("doc_id", T.tokens("text").alias("t"))
     tf_cols = [
         F.expr(f"size(filter(t, x -> x = '{t}'))").alias(f"tf_{i}")
         for i, t in enumerate(terms)
@@ -573,7 +570,7 @@ def n3_oov_rate_by_source(
     0.0 everywhere; at 20 the tail 11 tokens are OOV and rates vary by
     source (a real corpus uses 30k-100k)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    toks = docs.select("source", F.explode(F.split("text", " ")).alias("tok"))
+    toks = docs.select("source", F.explode(T.tokens("text")).alias("tok"))
     vocab = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -738,7 +735,7 @@ def zipf_slope_by_source(docs: DataFrame) -> DataFrame:
     regr_slope/regr_r2 aggregate. Ranking orders by (count DESC, term) so
     ties are deterministic and both engines rank identically.
     """
-    tok = docs.select("source", F.explode(F.split("text", " ")).alias("w"))
+    tok = docs.select("source", F.explode(T.tokens("text")).alias("w"))
     counts = tok.groupBy("source", "w").agg(F.count(F.lit(1)).alias("n_w"))
     w = Window.partitionBy("source").orderBy(F.desc("n_w"), F.asc("w"))
     ranked = counts.withColumn("rank", F.row_number().over(w))
@@ -793,7 +790,7 @@ def bpe_merge_candidates(docs: DataFrame, k: int = 50) -> DataFrame:
     expression on both engines.
     """
     words = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
+        docs.select(F.explode(T.tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.length("word") >= 2)
@@ -851,12 +848,11 @@ def skipgram_cooccurrence(
     pairs per partition, so the exchange carries distinct-pair rows,
     not token positions.
     """
-    toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    i_seq = F.sequence(F.lit(1), n - 1)
-    pair_list = F.flatten(
-        F.transform(
-            i_seq,
+
+    def pair_list(toks):
+        n = F.size(toks)
+        pairs = F.transform(
+            F.sequence(F.lit(1), n - 1),
             lambda i: F.transform(
                 F.sequence(i + 1, F.least(i + F.lit(window), n)),
                 lambda j: F.struct(
@@ -865,14 +861,10 @@ def skipgram_cooccurrence(
                 ),
             ),
         )
-    )
-    pairs = docs.select(
-        F.explode(
-            F.when(n >= 2, pair_list).otherwise(
-                F.expr("CAST(array() AS ARRAY<STRUCT<w: STRING, c: STRING>>)")
-            )
-        ).alias("p")
-    )
+        # null under 2 tokens: explode emits no rows for it
+        return F.when(n >= 2, F.flatten(pairs))
+
+    pairs = docs.select(F.explode(T.let(T.tokens("text"), pair_list)).alias("p"))
     return (
         pairs.select("p.w", "p.c")
         .groupBy("w", "c")

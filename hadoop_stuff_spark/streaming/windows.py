@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_stuff_spark.functions import text as T
 from hadoop_stuff_spark.functions.money import sum_2dp_exact
 
 
@@ -97,7 +98,7 @@ def trending_terms(
     if docs.isStreaming:
         docs = docs.withWatermark(ts_col, watermark)
     return (
-        docs.select(F.col(ts_col), F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        docs.select(F.col(ts_col), F.explode(T.tokens(text_col)).alias("word"))
         .groupBy(F.window(ts_col, window).alias("w"), F.col("word"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(

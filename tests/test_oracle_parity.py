@@ -6,16 +6,37 @@ import pytest
 from hadoop_stuff_spark.plans.registry import EXTRA_QUERIES, QUERIES
 from tests.oracle_harness import compare_query
 
-# full-sweep suite (see pytest.ini): deselected from the default
-# driver-facing run, executed via `pytest tests/ -m "" -q`
-pytestmark = pytest.mark.slow
-
 ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
 ORACLE_QUERIES = sorted(name for name, spec in ALL_QUERIES.items() if spec.oracle)
 ROWS_ONLY_QUERIES = sorted(name for name, spec in ALL_QUERIES.items() if not spec.oracle)
 
+# The default run (`pytest tests/ -q`) certifies this smoke set: the queries
+# built on the shared text primitives (functions/text.py: n-grams,
+# winnowing, repetition, struct bigrams, skip-grams) and on the let-bound
+# int8 quantizer. Every other case is `slow` (see pytest.ini): deselected
+# from the default run, executed via `pytest tests/ -m "" -q`.
+SMOKE = {
+    "n3_winnowed_fingerprints",
+    "n3_repetition_signals",
+    "n1_repeated_ngrams",
+    "n3_collocations",
+    "n3_bigram_lm_scores",
+    "n3_bigram_entropy_rate",
+    "n3_skipgram_cooccurrence",
+    "n1_contamination_report",
+    "n1_ngram_jaccard_pairs",
+    "n2_embedding_quantization",
+}
+assert SMOKE <= set(ORACLE_QUERIES), SMOKE - set(ORACLE_QUERIES)
 
-@pytest.mark.parametrize("name", ORACLE_QUERIES)
+
+def _cases(names):
+    return [
+        pytest.param(n, marks=() if n in SMOKE else pytest.mark.slow) for n in names
+    ]
+
+
+@pytest.mark.parametrize("name", _cases(ORACLE_QUERIES))
 def test_oracle_parity(spark, sf_dir, name):
     spec = ALL_QUERIES[name]
     ok, msg = compare_query(spark, sf_dir, spec.fn, spec.oracle)
@@ -23,6 +44,7 @@ def test_oracle_parity(spark, sf_dir, name):
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
+@pytest.mark.slow
 def test_rows_only_queries_run(spark, sf_dir, name):
     df = ALL_QUERIES[name].fn(spark, sf_dir)
     assert df.count() >= 0

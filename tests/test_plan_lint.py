@@ -71,6 +71,37 @@ def test_flags_global_sort_but_not_topk(spark, sf_dir):
     assert "global-sort" not in _rules(lint_plan(sorted_df, allow_global_sort=True))
 
 
+def test_flags_hof_invariant(spark, sf_dir):
+    """The pre-`let` bigrams shape: the lambda body re-reads
+    split(text, ' '), an outer call, so every bigram re-splits the text.
+    The let-bound T.bigrams, and lambdas that read a bare outer attribute,
+    a literal or a cast of one, are clean."""
+    from hadoop_stuff_spark.functions import text as T
+
+    docs = load_table(spark, sf_dir, "documents")
+    toks = F.split("text", " ")
+    count = F.size(toks) - 1
+    inline = F.when(
+        count >= 1,
+        F.transform(
+            F.sequence(F.lit(1), count),
+            lambda i: F.array_join(F.slice(toks, i, 2), " "),
+        ),
+    ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
+    findings = lint_plan(docs.select(inline.alias("b")))
+    assert "hof-invariant" in _rules(findings)
+    assert any("split(text, " in e for r, e in findings if r == "hof-invariant"), findings
+    assert "hof-invariant" not in _rules(lint_plan(docs.select(T.bigrams("text"))))
+
+    allowed = docs.select(
+        F.transform(
+            T.tokens("text"),
+            lambda t: F.concat(t, F.col("source"), F.lit("."), F.col("doc_id").cast("string")),
+        )
+    )
+    assert "hof-invariant" not in _rules(lint_plan(allowed))
+
+
 def test_real_scale_paths_are_clean(spark, sf_dir):
     from hadoop_stuff_spark.operators.dedup import minhash_near_dups
     from hadoop_stuff_spark.operators.pq import topk_cosine_pq
@@ -87,7 +118,8 @@ def test_real_scale_paths_are_clean(spark, sf_dir):
 
 def test_every_registry_query_free_of_hard_antipatterns(spark):
     """Blanket invariant over the WHOLE registry: no query may contain a
-    row-at-a-time Python UDF or a duplicated Arrow-UDF chain, and only
+    row-at-a-time Python UDF, a duplicated Arrow-UDF chain or a
+    loop-invariant call inside a HOF lambda, and only
     the documented exact baselines / single-row-broadcast scalar shapes
     may contain a nested-loop join. This is the sweep that caught (and
     now pins fixed) the simhash and IVF double-evaluations."""
@@ -142,7 +174,7 @@ def test_every_registry_query_free_of_hard_antipatterns(spark):
         hard = [
             (r, e)
             for r, e in findings
-            if r in ("python-udf-row", "python-chain-dup", "cartesian")
+            if r in ("python-udf-row", "python-chain-dup", "cartesian", "hof-invariant")
         ]
         if hard:
             bad.append((name, hard))

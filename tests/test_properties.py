@@ -1,10 +1,12 @@
 """Property-based tests (hypothesis — SURVEY.md §5.2 #4): parser fuzz for
-the flow/CDR record grammars and codec round-trips. Each example set runs
-as ONE Spark job (lists of rows per example) to keep wall time sane."""
+the flow/CDR record grammars, codec round-trips and the text primitives
+against pure Python. Each example set runs as ONE Spark job (lists of rows
+per example) to keep wall time sane."""
 
+import collections
 import datetime
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from hadoop_stuff_spark.functions.codecs import (
@@ -140,6 +142,76 @@ def _winnow_py(text: str, k: int = 3, w: int = 4) -> set[str]:
     if len(hashes) < w:
         return {min(hashes)}
     return {min(hashes[i : i + w]) for i in range(len(hashes) - w + 1)}
+
+
+def _ngrams_py(text: str | None, n: int) -> list[str]:
+    """Pure-Python word n-grams (single-space tokens); no grams for null."""
+    if text is None:
+        return []
+    toks = text.split(" ")
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+def _top_count_py(arr: list | None) -> int | None:
+    """Count of the most frequent element; null for a null/empty array."""
+    return max(collections.Counter(arr).values()) if arr else None
+
+
+# few distinct words, so tokens and n-grams repeat; "" makes double spaces
+doc_st = st.one_of(
+    st.none(),
+    st.lists(st.sampled_from(["a", "b", "c", ""]), min_size=1, max_size=9).map(" ".join),
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(doc_st, min_size=1, max_size=8), st.integers(1, 5))
+@example(texts=[None, "", "a", "a b", "a a a a", "a b a b a"], n=3)
+def test_text_primitives_match_python_reference(spark, texts, n):
+    """ngrams/shingles/bigrams/top_element_count against pure Python, on
+    empty text, one token, n above the token count, repeated tokens and
+    null text (null gives what the inline pre-`let` expressions gave: no
+    n-grams, a null top count)."""
+    from hadoop_stuff_spark.functions import text as T
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    rows = df.select(
+        "i",
+        T.ngrams("text", n).alias("grams"),
+        T.shingles("text", n).alias("shingles"),
+        T.bigrams("text").alias("bigrams"),
+        T.bigram_pairs("text").alias("pairs"),
+        T.top_element_count(T.tokens("text")).alias("top_tok"),
+        T.top_element_count(T.bigrams("text")).alias("top_big"),
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        t = texts[r["i"]]
+        grams, bigs = _ngrams_py(t, n), _ngrams_py(t, 2)
+        assert r["grams"] == grams, (t, n)
+        assert r["shingles"] == list(dict.fromkeys(grams)), (t, n)
+        assert r["bigrams"] == bigs, t
+        assert [" ".join(p) for p in r["pairs"]] == bigs, t
+        assert r["top_tok"] == _top_count_py(None if t is None else t.split(" ")), t
+        assert r["top_big"] == _top_count_py(bigs), t
+
+
+def test_let_keeps_inline_null_semantics(spark):
+    """let(value, fn) == fn(value) per row, null value included."""
+    from hadoop_stuff_spark.functions.text import let, tokens
+
+    def fn(t):
+        return F.transform(t, lambda w: F.concat(w, F.lit("!")))
+
+    df = spark.createDataFrame([(None,), ("",), ("x y",)], "text string")
+    got = df.select(
+        let(tokens("text"), fn).alias("bound"), fn(tokens("text")).alias("inline")
+    ).collect()
+    assert [r["bound"] for r in got] == [r["inline"] for r in got] == [
+        None,
+        ["!"],
+        ["x!", "y!"],
+    ]
 
 
 def test_winnow_matches_python_reference(spark):
