@@ -8,9 +8,11 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
 Query set = the reference-parity pipeline (grep, chunked count, wiretap
 fan-out) + the relational headliners (Q1/Q3/Q5 shapes) + the north-star ops
-(dedup, similarity, text stats). Each timing covers plan + execution +
-collect of the (small) result — the same thing the reference's elapsed-ms
-printouts measured for its jobs (TailFTest.java steps 1-4).
+(dedup, similarity, text stats). Each timing covers plan + execution of the
+whole result into Spark's noop sink, which computes every column of every
+row — the elapsed time per job that the reference's printouts measured
+(TailFTest.java steps 1-4), without the pruning Catalyst applies under
+count(). Timings are medians over interleaved passes (see `main`).
 """
 
 from __future__ import annotations
@@ -59,81 +61,52 @@ HEADLINE = [
     "n1_curate_pipeline",
     "funnel_conversion",
     "pagerank_copurchase_parts",
-    # round-6 late wave: clustering / semantic dedup / data selection /
-    # hybrid retrieval (all EXTRA_QUERIES, oracle-backed)
     "n2_kmeans_lloyd",
     "n1_semantic_dedup_pairs",
     "n3_importance_resampling",
     "n2_hybrid_rrf_fusion",
-    # round-6 fourth-session wave: containment dedup / tokenizer training /
-    # concentration profiling (all EXTRA_QUERIES, oracle-backed)
     "n1_containment_pairs",
     "n3_skipgram_cooccurrence",
     "gini_doc_length_by_source",
-    # round-7 wave: schema-wide integrity (7 FK joins), lexical drift
-    # (explode + 3 window totals), revenue concentration (global ntile)
     "referential_integrity_report",
     "n3_unigram_kl_by_source",
     "order_value_decile_lift",
-    # round-9 widening (VERDICT r8 #2): the round-8 operator waves get
-    # wall-time accountability. Added at ROUND START so the committed
-    # BENCH_DETAIL and the driver's BENCH_r09 describe the same set; the
-    # detail JSON carries a shared-41 subtotal (total minus these) so
-    # round-over-round comparison against r8's 41-query headline holds.
-    *(_R9_WIDENING := [
-        "source_js_divergence_matrix",
-        "rfm_customer_segments",
-        "ks_interarrival_expfit",
-        "basket_affinity_lift",
-    ]),
-    # round-10 widening (VERDICT r9 #2): the round-9 second wave gets
-    # wall-time accountability, added at ROUND START so the committed
-    # detail and the driver's BENCH_r10 describe the same set. The detail
-    # JSON carries a shared_45_total subtotal (total minus these) that
-    # compares against BENCH_r09/BENCH_DETAIL_r09's 45-query value —
-    # quoting r9 queries_min as the base per the r9 environment-shift
-    # adjudication.
-    *(_R10_WIDENING := [
-        "changepoint_daily_orders",
-        "forecast_backtest_daily_orders",
-        "acf_daily_orders",
-        "n3_curation_funnel_by_source",
-        "part_neighbor_jaccard",
-        "n2_label_silhouette",
-    ]),
-    # round-11 widening (VERDICT r10 #2): the round-10 operator waves get
-    # wall-time accountability, added at ROUND START so the committed
-    # detail and the driver's BENCH_r11 describe the same set. The detail
-    # JSON carries a shared_51_total subtotal (total minus these) that
-    # compares against BENCH_r10's 51-query value — quoting r10
-    # queries_min as the base per the sustained environment-shift verdict.
-    *(_R11_WIDENING := [
-        "ab_value_bootstrap_ci",
-        "seasonal_residual_changepoint",
-        "per_source_near_dup_rate",
-        "n3_effective_token_yield",
-        "seasonality_strength_by_priority",
-        "weekly_retention_matrix",
-    ]),
-    # round-12 widening (VERDICT r11 #2): the round-11 operator wave gets
-    # wall-time accountability, added at ROUND START so the committed
-    # detail and the driver's BENCH_r12 describe the same set. The detail
-    # JSON carries a shared_57_total subtotal (total minus these) that
-    # compares against BENCH_r11's 57-query value.
-    *(_R12_WIDENING := [
-        "n3_dedup_aware_token_budget",
-        "ab_bootstrap_ci_by_nation",
-        "user_lifecycle_weekly",
-        "priority_share_control_chart",
-        "n2_source_centroid_similarity",
-        "n2_jl_projection_distortion",
-    ]),
+    "source_js_divergence_matrix",
+    "rfm_customer_segments",
+    "ks_interarrival_expfit",
+    "basket_affinity_lift",
+    "changepoint_daily_orders",
+    "forecast_backtest_daily_orders",
+    "acf_daily_orders",
+    "n3_curation_funnel_by_source",
+    "part_neighbor_jaccard",
+    "n2_label_silhouette",
+    "ab_value_bootstrap_ci",
+    "seasonal_residual_changepoint",
+    "per_source_near_dup_rate",
+    "n3_effective_token_yield",
+    "seasonality_strength_by_priority",
+    "weekly_retention_matrix",
+    "n3_dedup_aware_token_budget",
+    "ab_bootstrap_ci_by_nation",
+    "user_lifecycle_weekly",
+    "priority_share_control_chart",
+    "n2_source_centroid_similarity",
+    "n2_jl_projection_distortion",
 ]
+
+
+# queries whose median over the passes reaches SLOW_S seconds dominate the
+# total, and at three runs one co-tenant spike can move their median: they
+# get EXTRA_RUNS more interleaved runs, so their median is over five
+SLOW_S = 2.0
+EXTRA_RUNS = 2
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
+    fns = {name: ALL_QUERIES[name].fn for name in HEADLINE}
     spark = get_spark(app_name="hadoop-stuff-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -179,57 +152,24 @@ def main() -> None:
         ).alias("sig")
     ).count()
 
-    # median-of-N timings (r3 VERDICT #6): single-run numbers on this
-    # co-tenant VM swing 2-3x between identical runs; the median is the
-    # signal, and all runs are kept so round-over-round deltas are
-    # attributable. Interleaving would randomize cache effects further but
-    # keeping per-query runs adjacent keeps the log readable.
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # r13 (VERDICT r12 #4, guide §1.4): the historical count()/collect()
-    # action provably under-measures — count() lets Catalyst prune final
-    # projections and even cardinality-preserving joins (the r12
-    # contamination case timed a bare doc count). The noop sink computes
-    # every column of every row and cannot be pruned. ADDITIONS ONLY:
-    # `queries` keeps the count/collect methodology and _EXTRA_RUNS
-    # byte-for-byte so the round-over-round series stays comparable;
-    # `queries_noop` starts the un-prunable series alongside it
-    # (median-of-N, same per-run fresh-plan discipline).
-    n_noop_runs = int(os.environ.get("SPARK_GRAFT_NOOP_RUNS", "3"))
+    # Interleaved passes: each pass runs every headline query once, so a
+    # co-tenant spike or session drift lands on one run of many queries, not
+    # on every run of one. Single runs on a shared host swing 2-3x;
+    # the median is the signal and every raw run goes to the detail file.
+    n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     noise_floor = {"before": _noise_probe(spark)}
-    timings: dict[str, float] = {}
-    timings_noop: dict[str, float] = {}
-    t_min: dict[str, float] = {}
-    t_max: dict[str, float] = {}
-    all_runs: dict[str, list[float]] = {}
-    all_noop_runs: dict[str, list[float]] = {}
-    row_counts: dict[str, int] = {}
-    for name in HEADLINE:
-        fn = ALL_QUERIES[name].fn
-        runs = []
-        for _ in range(n_runs + _EXTRA_RUNS.get(name, 0)):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = df.count() if name not in _COLLECT else len(df.collect())
-            runs.append(round(time.perf_counter() - t0, 3))
-        runs_sorted = sorted(runs)
-        timings[name] = runs_sorted[len(runs_sorted) // 2]
-        t_min[name] = runs_sorted[0]
-        t_max[name] = runs_sorted[-1]
-        all_runs[name] = runs
-        row_counts[name] = n
-        nruns = []
-        for _ in range(n_noop_runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            nruns.append(round(time.perf_counter() - t0, 3))
-        timings_noop[name] = sorted(nruns)[len(nruns) // 2]
-        all_noop_runs[name] = nruns
-        print(
-            f"# {name}: median {timings[name]:.3f}s "
-            f"(min {t_min[name]:.3f} max {t_max[name]:.3f}, {n} rows) "
-            f"noop {timings_noop[name]:.3f}s",
-            file=sys.stderr,
-        )
+    runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    for i in range(n_passes):
+        for name in HEADLINE:
+            runs[name].append(_noop_s(spark, fns[name], sf_dir))
+        print(f"# pass {i + 1}/{n_passes} done", file=sys.stderr)
+    slow = _slow_queries({name: _median(r) for name, r in runs.items()})
+    for _ in range(EXTRA_RUNS):
+        for name in slow:
+            runs[name].append(_noop_s(spark, fns[name], sf_dir))
+    timings = {name: _median(r) for name, r in runs.items()}
+    for name, r in runs.items():
+        print(f"# {name}: median {timings[name]:.3f}s runs {r}", file=sys.stderr)
 
     noise_floor["after"] = _noise_probe(spark)
     print(f"# noise floor: {noise_floor}", file=sys.stderr)
@@ -249,111 +189,65 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001
         ingest, matrix = {"error": f"{type(exc).__name__}: {exc}"[:300]}, []
 
-    total = round(sum(timings.values()), 3)
-    # round-over-round comparability across headline widenings: the
-    # subtotal over exactly the PREVIOUS round's query set (headline
-    # minus this round's additions) is what compares against the prior
-    # BENCH_r{N}; the r8-era 41-query subtotal is kept for the longer
-    # series.
-    shared_57 = round(
-        sum(t for n, t in timings.items() if n not in _R12_WIDENING), 3
-    )
-    shared_51 = round(
-        sum(
-            t
-            for n, t in timings.items()
-            if n not in _R11_WIDENING and n not in _R12_WIDENING
-        ),
-        3,
-    )
-    shared_45 = round(
-        sum(
-            t
-            for n, t in timings.items()
-            if n not in _R10_WIDENING
-            and n not in _R11_WIDENING
-            and n not in _R12_WIDENING
-        ),
-        3,
-    )
-    shared_prev = round(
-        sum(
-            t
-            for n, t in timings.items()
-            if n not in _R9_WIDENING
-            and n not in _R10_WIDENING
-            and n not in _R11_WIDENING
-            and n not in _R12_WIDENING
-        ),
-        3,
-    )
-    # Stdout carries ONLY the minimal driver contract line — round 4's
-    # line grew past the driver's stdout capture (runs arrays + ingest
-    # matrix) and BENCH_r04.json recorded "parsed": null, losing the
-    # round's timings (VERDICT r4 #1). Full detail goes to a committed,
-    # ROUND-STAMPED side file (VERDICT r5 #3: the unstamped path was
-    # overwritten every round, losing raw-run history one level up) —
-    # round inferred as max(BENCH_r*.json)+1, the round whose
-    # BENCH_r{N}.json the driver is about to write.
+    line = _contract_line(timings, sf)
+    # Stdout carries ONLY the minimal contract line: a line that also held
+    # the runs arrays and the ingest matrix once outgrew the stdout capture
+    # and lost a round's timings. Full detail goes to a ROUND-STAMPED side
+    # file so no round's raw runs overwrite another's; the round is
+    # inferred as max(BENCH_r*.json)+1, the round whose BENCH_r{N}.json is
+    # about to be written.
     repo = os.path.dirname(os.path.abspath(__file__))
     detail_path = os.environ.get(
         "SPARK_GRAFT_DETAIL_PATH",
         os.path.join(repo, f"BENCH_DETAIL_r{_current_round(repo):02d}.json"),
     )
     detail = {
-        "metric": "headline_query_wall_time",
-        "value": total,
-        "unit": "sec",
-        "shared_41_total": shared_prev,
-        "shared_45_total": shared_45,
-        "shared_51_total": shared_51,
-        "shared_57_total": shared_57,
-        "r9_widening": _R9_WIDENING,
-        "r10_widening": _R10_WIDENING,
-        "r11_widening": _R11_WIDENING,
-        "r12_widening": _R12_WIDENING,
-        "queries": timings,
-        "queries_noop": timings_noop,
-        "queries_min": t_min,
-        "queries_max": t_max,
-        "runs": all_runs,
-        "noop_runs": all_noop_runs,
-        "n_runs": n_runs,
-        "n_noop_runs": n_noop_runs,
-        "extra_runs": _EXTRA_RUNS,
-        "rows": row_counts,
+        **line,
+        "method": (
+            f"noop sink, interleaved: median of {n_passes} passes, median of "
+            f"{n_passes + EXTRA_RUNS} runs for queries >= {SLOW_S:g} s"
+        ),
+        "queries_min": {name: min(r) for name, r in runs.items()},
+        "queries_max": {name: max(r) for name, r in runs.items()},
+        "runs": runs,
         "noise_floor": noise_floor,
         "scaling": scaling,
         "curate_stages": curate_stages,
         "ingest": ingest,
         "ingest_matrix": matrix,
-        "sf": sf,
     }
     with open(detail_path, "w") as fh:
         json.dump(detail, fh, indent=1)
-    # keep the legacy unstamped path in sync for tooling that reads it —
-    # but only when the caller hasn't redirected detail output away from
-    # the repo (a redirect means "don't touch the working tree")
-    if "SPARK_GRAFT_DETAIL_PATH" not in os.environ:
-        with open(os.path.join(repo, "BENCH_DETAIL.json"), "w") as fh:
-            json.dump(detail, fh, indent=1)
     print(f"# full detail -> {detail_path}", file=sys.stderr)
-    # `queries_noop` joins the contract line (VERDICT r12 #4) so the
-    # driver artifact carries both actions; the map is medians-only
-    # (compact — the r4 stdout-capture overflow came from runs arrays
-    # and the ingest matrix, which stay in the detail file).
-    print(
-        json.dumps(
-            {
-                "metric": "headline_query_wall_time",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "queries_noop": timings_noop,
-                "sf": sf,
-            }
-        )
-    )
+    print(json.dumps(line))
+
+
+def _noop_s(spark, fn, sf_dir: str) -> float:
+    """Wall seconds to plan query ``fn`` over ``sf_dir`` and write its whole
+    result to the noop sink — the bench's only timed action."""
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return round(time.perf_counter() - t0, 3)
+
+
+def _median(runs: list[float]) -> float:
+    return sorted(runs)[len(runs) // 2]
+
+
+def _slow_queries(medians: dict[str, float]) -> list[str]:
+    """The queries that earn EXTRA_RUNS: median at or above SLOW_S."""
+    return [name for name, t in medians.items() if t >= SLOW_S]
+
+
+def _contract_line(timings: dict[str, float], sf: float) -> dict:
+    """The stdout contract line: headline total plus per-query medians."""
+    return {
+        "metric": "headline_query_wall_time",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+    }
 
 
 def _noise_probe(spark) -> dict:
@@ -393,9 +287,10 @@ def _current_round(repo: str) -> int:
 
 def _scaling_audit(spark, sf_dir: str, sf01_medians: dict[str, float]):
     """Scaling-slope audit (VERDICT r5 #4): the 100x question, measured.
-    Runs every headline query ONCE at the sibling sf0.001 and sf0.01
-    dirs (the sf0.1 number is the headline median already in hand) and
-    records the wall-time growth ratio across each decade of data.
+    Times every headline query ONCE on the noop sink at the sibling
+    sf0.001 and sf0.01 dirs (the sf0.1 number is the headline median
+    already in hand) and records the wall-time growth ratio across each
+    decade of data.
 
     Reading the ratios: fact tables grow 10x per decade, so a query that
     is linear in data with some fixed overhead shows ratio <= ~10 (the
@@ -422,17 +317,14 @@ def _scaling_audit(spark, sf_dir: str, sf01_medians: dict[str, float]):
     errors: dict[str, str] = {}
     for d, label in zip(small_dirs, ("0.001", "0.01")):
         for name in HEADLINE:
-            fn = ALL_QUERIES[name].fn
-            t0 = time.perf_counter()
             # a query failing at one sf must cost that one data point,
             # never the whole round's bench artifact
             try:
-                df = fn(spark, d)
-                df.count() if name not in _COLLECT else len(df.collect())
+                t = _noop_s(spark, ALL_QUERIES[name].fn, d)
             except Exception as exc:  # noqa: BLE001
                 errors[f"{name}@sf{label}"] = f"{type(exc).__name__}: {exc}"[:300]
                 continue
-            times.setdefault(name, {})[label] = round(time.perf_counter() - t0, 3)
+            times.setdefault(name, {})[label] = t
         print(f"# scaling sweep done: sf{label}", file=sys.stderr)
     head_label = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
     ratios = {}
@@ -511,15 +403,11 @@ def _extra_decade(spark, sf01_medians: dict[str, float], errors: dict[str, str])
     times: dict[str, float] = {}
     ratios: dict[str, float] = {}
     for name in STEEP:
-        fn = ALL_QUERIES[name].fn
-        t0 = time.perf_counter()
         try:
-            df = fn(spark, extra_dir)
-            df.count() if name not in _COLLECT else len(df.collect())
+            times[name] = _noop_s(spark, ALL_QUERIES[name].fn, extra_dir)
         except Exception as exc:  # noqa: BLE001
             errors[f"{name}@sf{label}"] = f"{type(exc).__name__}: {exc}"[:300]
             continue
-        times[name] = round(time.perf_counter() - t0, 3)
         if sf01_medians.get(name):
             ratios[name] = round(times[name] / sf01_medians[name], 2)
     flagged = sorted(n for n, r in ratios.items() if r > 2 * data_growth)
@@ -535,70 +423,7 @@ def _extra_decade(spark, sf01_medians: dict[str, float], errors: dict[str, str])
     print(f"# extra decade sf{label}: {ratios}", file=sys.stderr)
     if flagged:
         print(f"# extra decade FLAGGED: {flagged}", file=sys.stderr)
-    # VERDICT r7 #5: the two queries still steepening at sf0.5
-    # (copurchase 2.9x, containment 2.48x on 5x data) get ONE more
-    # factor-2 point at sf1.0 — growth vs their own sf0.5 time tells
-    # "fixed overhead amortizing" (ratio well under 2) apart from
-    # "super-linear onset" (ratio past 4 = 2x the 2x data growth).
-    # VERDICT r8 #5: plus THIS round's worst sf0.5 ratio, whichever
-    # query that is — the grid stays honest as the steepest query
-    # changes round to round.
-    worst = max(ratios, key=ratios.get) if ratios else None
-    out["sf1.0"] = _full_decade_point(spark, times, errors, extra=worst)
     return out
-
-
-STEEPENING = ["copurchase_pairs", "n1_containment_pairs"]
-
-
-def _full_decade_point(
-    spark,
-    sf05_times: dict[str, float],
-    errors: dict[str, str],
-    extra: str | None = None,
-):
-    repo = os.path.dirname(os.path.abspath(__file__))
-    d = os.path.join(repo, ".scaling", "sf1.0")
-    if not os.path.isdir(d):
-        return {"skipped": f"{d} missing (scripts/make_scaling_sf.py --factor 10)"}
-    names = list(STEEPENING)
-    if extra and extra not in names and extra in sf05_times:
-        names.append(extra)
-    times: dict[str, float] = {}
-    ratios: dict[str, float] = {}
-    for name in names:
-        fn = ALL_QUERIES[name].fn
-        t0 = time.perf_counter()
-        try:
-            fn(spark, d).count()
-        except Exception as exc:  # noqa: BLE001
-            errors[f"{name}@sf1.0"] = f"{type(exc).__name__}: {exc}"[:300]
-            continue
-        times[name] = round(time.perf_counter() - t0, 3)
-        if sf05_times.get(name):
-            ratios[name] = round(times[name] / sf05_times[name], 2)
-    flagged = sorted(n for n, r in ratios.items() if r > 4)
-    # three-way: <=2.2 scales at-or-under the data growth (0.2 noise
-    # grace), <=4 grows faster than data but within the grid's 2x grace
-    # (watch next round), >4 flags
-    verdict = {
-        n: (
-            "super_linear_onset"
-            if r > 4
-            else ("watch" if r > 2.2 else "sub_linear")
-        )
-        for n, r in ratios.items()
-    }
-    print(f"# full decade sf1.0 (vs sf0.5): {ratios} {verdict}", file=sys.stderr)
-    return {
-        "dir": d,
-        "data_growth_vs_sf0.5": 2.0,
-        "times": times,
-        "ratio_vs_sf0.5": ratios,
-        "flag_threshold": 4.0,
-        "flagged_super_linear": flagged,
-        "verdict": verdict,
-    }
 
 
 def _curate_stage_breakdown(spark, sf_dir: str) -> dict:
@@ -621,9 +446,9 @@ def _curate_stage_breakdown(spark, sf_dir: str) -> dict:
         holdout = docs.filter(F.col("doc_id") % 20 == 0)
         corpus = docs.filter(F.col("doc_id") % 20 != 0)
         qlog = QueryLog(spark, os.path.join(tmp, "qlog"))
-        t0 = time.perf_counter()
-        Engine(spark).curate(corpus, holdout, qlog=qlog).count()
-        total = round(time.perf_counter() - t0, 3)
+        total = _noop_s(
+            spark, lambda s, _d: Engine(s).curate(corpus, holdout, qlog=qlog), sf_dir
+        )
         stages = {
             r.name.removeprefix("curate:"): r.wall_s for r in qlog.table().collect()
         }
@@ -736,43 +561,6 @@ def _ingest_benchmarks(spark):
     print(f"# ingest: {ingest}", file=sys.stderr)
     return ingest, matrix
 
-
-# every headline entry that runs >= ~2 s at sf0.1 (VERDICT r7 #4): these
-# dominate the headline total, and at n_runs=3 the judge could not tell a
-# real regression from co-tenant load (unchanged-code queries drifted up
-# to +24% in r7) — the median of 5 keeps one hot and one cold outlier
-# out, and queries_min is recorded alongside for the adjudication
-# min-of-5 adjudication for every query that crossed ~2 s in the r12
-# DRIVER run (standing gate per VERDICT r10 "what's wrong" #1: recompute
-# this set at EVERY round start from the previous driver run, never carry
-# the prior round's set). Set = exactly the BENCH_r12.json (driver
-# session) queries with median >= 2.0 s — RE-DERIVED from the artifact,
-# never edited from the prior map (the never-quote-counts rule). Verify:
-#   python -c "import json; print(sorted(k for k, v in json.load(open(
-#       'BENCH_r12.json'))['parsed']['queries'].items() if v >= 2))"
-_EXTRA_RUNS = {
-    "ab_bootstrap_ci_by_nation": 2,
-    "ab_value_bootstrap_ci": 2,
-    "basket_affinity_lift": 2,
-    "copurchase_pairs": 2,
-    "n1_containment_pairs": 2,
-    "n1_curate_pipeline": 2,
-    "n2_kmeans_lloyd": 2,
-    "n2_label_silhouette": 2,
-    "pagerank_copurchase_parts": 2,
-    "part_neighbor_jaccard": 2,
-    "referential_integrity_report": 2,
-    "source_js_divergence_matrix": 2,
-}
-
-# queries whose result is the deliverable (collect it); others just count
-_COLLECT = {
-    "flagship_grep_count",
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_region_revenue",
-    "n2_topk_cosine_bruteforce",
-}
 
 if __name__ == "__main__":
     main()

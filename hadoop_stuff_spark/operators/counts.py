@@ -22,11 +22,6 @@ def record_count(df: DataFrame) -> DataFrame:
     )
 
 
-def grouped_count(df: DataFrame, *group_cols: str) -> DataFrame:
-    """Grouped variant (the general A3 shape: sum per key)."""
-    return df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("record_count"))
-
-
 def chunked_record_count(chunks: DataFrame) -> DataFrame:
     """Count records stored as gzip chunks WITHOUT exploding rows through a
     shuffle of raw text: decode each chunk, count its newline-separated

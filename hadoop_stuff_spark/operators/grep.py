@@ -32,12 +32,6 @@ def grep_count(df: DataFrame, pattern: str, col: Column | str = "value") -> Data
     return grep(df, pattern, col).agg(F.count(F.lit(1)).alias("match_count"))
 
 
-def substring_filter(df: DataFrame, needle: str, col: Column | str = "value") -> DataFrame:
-    """Substring predicate (T5) — `String.contains` of SampleMapRed.java:29,
-    TailF.java:129. `contains` stays in codegen; no regex engine involved."""
-    return df.filter(_c(col).contains(needle))
-
-
 def multi_pattern_grep(
     df: DataFrame, patterns: dict[str, str], col: Column | str = "value"
 ) -> DataFrame:

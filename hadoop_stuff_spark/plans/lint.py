@@ -214,9 +214,3 @@ def lint_plan_text(
                 break
 
     return findings
-
-
-def assert_clean(df: DataFrame, **kwargs) -> None:
-    """Raise AssertionError with the findings if the plan is not clean."""
-    findings = lint_plan(df, **kwargs)
-    assert not findings, f"plan lint findings: {findings}\n{_physical_plan(df)}"

@@ -1,0 +1,29 @@
+"""Contract checks for bench.py that need no Spark job: the headline names
+resolve before any warm-up, the >= 2 s extra-runs rule, and the shape of
+the stdout contract line."""
+
+import json
+
+import bench
+
+
+def test_headline_names_unique_and_registered():
+    assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
+    missing = [name for name in bench.HEADLINE if name not in bench.ALL_QUERIES]
+    assert not missing, missing
+
+
+def test_slow_rule_selects_queries_at_or_above_two_seconds():
+    medians = {"a": 0.4, "b": 1.999, "c": 2.0, "d": 2.001, "e": 13.7, "f": 0.0}
+    assert bench._slow_queries(medians) == ["c", "d", "e"]
+    assert bench._slow_queries({}) == []
+
+
+def test_contract_line_shape():
+    timings = {name: 0.1 + 0.37 * i for i, name in enumerate(bench.HEADLINE)}
+    line = bench._contract_line(timings, 0.1)
+    assert set(line) == {"metric", "value", "unit", "queries", "sf"}
+    assert line["queries"] == timings
+    assert line["value"] == round(sum(line["queries"].values()), 3)
+    assert line["sf"] == 0.1
+    assert json.loads(json.dumps(line)) == line

@@ -10,12 +10,29 @@ ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
 ORACLE_QUERIES = sorted(name for name, spec in ALL_QUERIES.items() if spec.oracle)
 ROWS_ONLY_QUERIES = sorted(name for name, spec in ALL_QUERIES.items() if not spec.oracle)
 
-# The default run (`pytest tests/ -q`) certifies this smoke set: the queries
-# built on the shared text primitives (functions/text.py: n-grams,
+# The default run (`pytest tests/ -q`) certifies this smoke set: one query
+# per operator family — the reference pillars (grep, chunked count, wiretap
+# routing, CDR parse), relational, temporal, profile, quality, exact dedup,
+# brute-force similarity, kmeans, clusters, sampling and cleaning — plus the
+# queries built on the shared text primitives (functions/text.py: n-grams,
 # winnowing, repetition, struct bigrams, skip-grams) and on the let-bound
 # int8 quantizer. Every other case is `slow` (see pytest.ini): deselected
 # from the default run, executed via `pytest tests/ -m "" -q`.
 SMOKE = {
+    "flagship_grep_count",
+    "t1_t3_a1_a3_chunked_count",
+    "st2_st3_wiretap_routing",
+    "t9_cdr_parse_agg",
+    "q5_region_revenue",
+    "asof_purchase_last_click",
+    "gini_doc_length_by_source",
+    "dq_orders_report",
+    "n1_dedup_exact_groups",
+    "n2_topk_cosine_bruteforce",
+    "n2_kmeans_lloyd",
+    "pagerank_copurchase_parts",
+    "n3_corpus_split",
+    "n3_curation_funnel_by_source",
     "n3_winnowed_fingerprints",
     "n3_repetition_signals",
     "n1_repeated_ngrams",
