@@ -427,27 +427,22 @@ def _extra_decade(spark, sf01_medians: dict[str, float], errors: dict[str, str])
 
 
 def _curate_stage_breakdown(spark, sf_dir: str) -> dict:
-    """Attribute the n1_curate_pipeline composite (VERDICT r5 #6): run the
-    same curation once in staged mode with a QueryLog and report wall
-    seconds per stage. The staged run adds checkpoint barriers, so its
-    sum can differ from the fused headline median — both are recorded."""
+    """Attribute the n1_curate_pipeline composite (VERDICT r5 #6): run its
+    curation (`registry.curated_corpus`) once in staged mode with a
+    QueryLog and report wall seconds per stage. The staged run adds
+    checkpoint barriers, so its sum can differ from the fused headline
+    median — both are recorded."""
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
-
-    from hadoop_stuff_spark.catalog import load_table
-    from hadoop_stuff_spark.engine import Engine
+    from hadoop_stuff_spark.plans import registry
     from hadoop_stuff_spark.plans.qlog import QueryLog
 
     tmp = tempfile.mkdtemp(prefix="bench_qlog_")
     try:
-        docs = load_table(spark, sf_dir, "documents")
-        holdout = docs.filter(F.col("doc_id") % 20 == 0)
-        corpus = docs.filter(F.col("doc_id") % 20 != 0)
         qlog = QueryLog(spark, os.path.join(tmp, "qlog"))
         total = _noop_s(
-            spark, lambda s, _d: Engine(s).curate(corpus, holdout, qlog=qlog), sf_dir
+            spark, lambda s, d: registry.curated_corpus(s, d, qlog=qlog), sf_dir
         )
         stages = {
             r.name.removeprefix("curate:"): r.wall_s for r in qlog.table().collect()

@@ -9,7 +9,11 @@ bigrams, shingles, struct bigrams and the winnowing k-gram hashes.
 Arrays are bound once per row with :func:`let`: HOF lambdas run in the
 interpreter, and a lambda body that mentions an outer expression (the
 split, a hash array) re-evaluates it for every element. Plan-lint's
-``hof-invariant`` rule (plans/lint.py) flags such a lambda.
+``hof-invariant`` rule (plans/lint.py) flags such a lambda. A pandas UDF
+takes :func:`tokens`, never a ``let``-bound array such as :func:`shingles`:
+Spark 4.1 can fail to generate code for a Python UDF whose argument holds
+a lambda (``[INTERNAL_ERROR] Cannot generate code for expression``,
+depending on what the session ran before), while a plain split never did.
 """
 
 from __future__ import annotations

@@ -365,7 +365,8 @@ def minhash_signature(col: Column | str, n: int = 3, perms: int = MINHASH_PERMS)
     O(total shingles) Python-interpreter term that would dominate at
     100 TB. Docs with fewer than n tokens get the LONG_MAX sentinel
     signature (same as an empty-fold result), never a hash of empty
-    text."""
+    text. The UDF reads :func:`T.tokens` arrays, so the tokenizer is the
+    engine's one definition; a null text tokenizes like ``""``."""
     import numpy as np
     import pandas as pd
 
@@ -374,12 +375,12 @@ def minhash_signature(col: Column | str, n: int = 3, perms: int = MINHASH_PERMS)
     a_co, b_co = _minhash_perm_coeffs(perms)
 
     @pandas_udf(ArrayType(LongType()))
-    def _sig(texts: pd.Series) -> pd.Series:
+    def _sig(token_arrays: pd.Series) -> pd.Series:
         sentinel = np.full(perms, _LONG_MAX, dtype=np.int64)
         shingle_lists: list[list[bytes]] = []
         flat: list[bytes] = []
-        for t in texts:
-            toks = (t or "").split(" ")
+        for arr in token_arrays:
+            toks = [""] if arr is None else arr.tolist()
             sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
             enc = [s.encode() for s in sh]
             shingle_lists.append(enc)
@@ -398,7 +399,7 @@ def minhash_signature(col: Column | str, n: int = 3, perms: int = MINHASH_PERMS)
             out.append(sigs.view(np.int64))
         return pd.Series(out)
 
-    return _sig(F.col(col) if isinstance(col, str) else col)
+    return _sig(T.tokens(col))
 
 
 def minhash_candidates(
@@ -485,19 +486,18 @@ def minhash_candidates(
 
 
 def minhash_near_dups(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.4, sort: bool = False
+    spark: SparkSession, sf_dir: str, threshold: float = 0.4
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs over documents (est Jaccard >=
     threshold). Driver records rows-only (approximate op — no SQL oracle);
     tests/test_dedup.py checks recall/precision against the exact
     ngram_jaccard_pairs.
 
-    ``sort=False`` by default (VERDICT r1 #7): a global orderBy on the
-    candidate-pair output is presentation-only and costs a full
-    Exchange+Sort of every pair at scale."""
+    Unordered (VERDICT r1 #7): a global orderBy on the candidate-pair
+    output is presentation-only and costs a full Exchange+Sort of every
+    pair at scale; a caller that needs an order sorts the result."""
     docs = load_table(spark, sf_dir, "documents")
-    out = minhash_candidates(docs).filter(F.col("est_jaccard") >= threshold)
-    return out.orderBy("doc_a", "doc_b") if sort else out
+    return minhash_candidates(docs).filter(F.col("est_jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -541,7 +541,6 @@ def embedding_cosine_dups_lsh(
     bands: int = 16,
     bits_per_band: int = 4,
     seed: int = 42,
-    sort: bool = False,
 ) -> DataFrame:
     """Approximate embedding-cosine near-dup: candidate pairs must share at
     least one random-hyperplane sign-sketch bucket (same deterministic
@@ -587,13 +586,12 @@ def embedding_cosine_dups_lsh(
     ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"))
     eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"))
     sim = F.round(cosine("va", "vb"), 6)
-    out = (
+    return (
         pairs.join(ea, "vec_a")
         .join(eb, "vec_b")
         .select("vec_a", "vec_b", sim.alias("sim"))
         .filter(F.col("sim") >= threshold)
     )
-    return out.orderBy("vec_a", "vec_b") if sort else out
 
 
 # ---------------------------------------------------------------------------
@@ -601,21 +599,21 @@ def embedding_cosine_dups_lsh(
 
 
 @pandas_udf(LongType())
-def _simhash64_udf(texts: pd.Series) -> pd.Series:
-    """64-bit SimHash over whitespace tokens, md5-based (engine-independent,
-    deterministic). Arrow-batched AND numpy-vectorized (VERDICT r1 #5, the
-    same treatment as the MinHash signature): per document the
-    (tokens × 64 bits) work is one ``np.unpackbits`` + column sum — the only
-    per-token Python left is the md5 call itself, amortized by a per-batch
-    token→hash cache (documents share vocabulary heavily)."""
+def _simhash64_udf(token_arrays: pd.Series) -> pd.Series:
+    """64-bit SimHash over :func:`T.tokens` arrays, md5-based
+    (engine-independent, deterministic). Arrow-batched AND numpy-vectorized
+    (VERDICT r1 #5, the same treatment as the MinHash signature): per
+    document the (tokens × 64 bits) work is one ``np.unpackbits`` + column
+    sum — the only per-token Python left is the md5 call itself, amortized
+    by a per-batch token→hash cache (documents share vocabulary heavily).
+    A null token array (null text) gives a null signature."""
     import numpy as np
 
     cache: dict[str, int] = {}
 
-    def simhash(text: str | None):
-        if text is None:
+    def simhash(toks):
+        if toks is None:
             return None
-        toks = text.split(" ")
         hs = np.empty(len(toks), dtype=np.uint64)
         for k, tok in enumerate(toks):
             v = cache.get(tok)
@@ -630,14 +628,14 @@ def _simhash64_udf(texts: pd.Series) -> pd.Series:
         positive = (2 * ones - len(toks)) > 0  # sum of ±1 per bit > 0
         return int(np.packbits(positive, bitorder="little").view(np.int64)[0])
 
-    return pd.Series([simhash(t) for t in texts], dtype="object")
+    return pd.Series([simhash(t) for t in token_arrays], dtype="object")
 
 
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 64-bit SimHash (rows-only check; properties tested in
     tests/test_dedup.py)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id", _simhash64_udf(F.col("text")).alias("simhash"))
+    return docs.select("doc_id", _simhash64_udf(T.tokens("text")).alias("simhash"))
 
 
 def banded_hamming_pairs(
@@ -733,7 +731,7 @@ def banded_hamming_pairs(
 
 
 def simhash_near_dups(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 3, sort: bool = False
+    spark: SparkSession, sf_dir: str, max_hamming: int = 3
 ) -> DataFrame:
     """SimHash near-dup pairs via banded block blocking: with the default
     max_hamming=3 (the 64-bit near-dup threshold of Manku et al.,
@@ -742,12 +740,11 @@ def simhash_near_dups(
     Bucketed self-join — no cartesian product; looser thresholds widen
     n_blocks automatically (see `banded_hamming_pairs`)."""
     sigs = simhash_signatures(spark, sf_dir)
-    out = banded_hamming_pairs(sigs, "doc_id", "simhash", max_hamming).select(
+    return banded_hamming_pairs(sigs, "doc_id", "simhash", max_hamming).select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),
         "hamming",
     )
-    return out.orderBy("doc_a", "doc_b") if sort else out
 
 
 def n1_repeated_ngrams(

@@ -105,14 +105,6 @@ def enforce(
     return clean, quarantine
 
 
-ORDER_RULES_DOC = """rules certified by the registry query:
-  positive_price    o_totalprice > 0
-  known_status      o_orderstatus IN ('O','F','P')
-  known_priority    o_orderpriority LIKE '_-%'
-  custkey_present   o_custkey IS NOT NULL
-"""
-
-
 def dq_orders_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Certification: row rules + uniqueness + referential integrity over
     orders, one summary frame (sorted by rule name)."""

@@ -26,8 +26,8 @@ Rules (name → what it catches at 100 TB):
                           broadcast hint or re-partitioning per stage.
 - ``global-sort``         A global Sort that is not part of
                           TakeOrderedAndProject: at scale a full-data
-                          range-exchange+sort; candidate-pair pipelines must
-                          gate these behind ``sort=False`` (VERDICT r1 #7).
+                          range-exchange+sort; candidate-pair pipelines
+                          return unordered pairs (VERDICT r1 #7).
 - ``hof-invariant``       A HOF lambda body holding a function call over
                           outer (non-lambda) attributes only, e.g.
                           ``split(text, ' ')`` inside ``transform``: HOFs run

@@ -273,12 +273,12 @@ FROM s GROUP BY user_id, sess_id
 # to fit the window live in EXTRA_QUERIES below (still locally certified by
 # tests/test_oracle_parity.py).
 
-def _curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end curation funnel as one benchable unit (rows-only —
-    composite of individually certified stages; Engine.curate): per-split
-    doc counts of the curated corpus. max_contamination is set to the
-    synthetic corpus's reality: the driver documents are generated from
-    a small shared phrase vocabulary, so a random doc already shares
+def curated_corpus(spark: SparkSession, sf_dir: str, qlog=None) -> DataFrame:
+    """The curation behind ``n1_curate_pipeline`` (and bench.py's staged
+    breakdown of it, which passes a ``qlog``): Engine.curate over the
+    documents, holding out every 20th doc_id. max_contamination is set to
+    the synthetic corpus's reality: the driver documents are generated
+    from a small shared phrase vocabulary, so a random doc already shares
     ~28-48% of its 3-grams with the holdout slice (median 0.375 at
     sf0.1) — the 0.5 threshold drops the genuinely-outlying overlap
     tail instead of emptying the corpus, which is what the facade's
@@ -288,15 +288,21 @@ def _curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     holdout = docs.filter(F.col("doc_id") % 20 == 0)
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
-    out = Engine(spark).curate(corpus, holdout, max_contamination=0.5)
+    return Engine(spark).curate(corpus, holdout, max_contamination=0.5, qlog=qlog)
+
+
+def _curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end curation funnel as one benchable unit (rows-only —
+    composite of individually certified stages): per-split doc counts of
+    :func:`curated_corpus`."""
+    out = curated_corpus(spark, sf_dir)
     return out.groupBy("split").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
-# Catalog half A: the r1-r6 driver window (50 oracle-backed entries, in the
-# declaration order CORRECTNESS_r01-r06 certified) + the rows-only tail.
-# The actual QUERIES/EXTRA_QUERIES split is computed by the rotation block
-# below — do NOT export this dict directly.
-_CATALOG_A: dict[str, QuerySpec] = {
+# Every registered query, in declaration order. QUERIES and EXTRA_QUERIES
+# below are computed from it and the driver window — do NOT export this
+# dict directly.
+_CATALOG: dict[str, QuerySpec] = {
     # -- M0 flagship + reference-parity ops (S/T/A/ST/U ids) -----------------
     "flagship_grep_count": QuerySpec(flagship, FLAGSHIP_SQL),
     "t4_grep_regex": QuerySpec(t4_grep_regex, T4_SQL),
@@ -392,7 +398,6 @@ _CATALOG_A: dict[str, QuerySpec] = {
     "n4_frame_sample_counts": QuerySpec(
         multimodal.frame_sample_counts, multimodal.FRAME_SAMPLE_SQL
     ),
-    # ---- entry 50 ends here: everything above is oracle-backed -------------
     # -- rows-only (genuinely non-SQL-expressible; certified by tests/) ------
     "approx_distinct_users": QuerySpec(relational.approx_distinct_users, None),
     "n1_minhash_near_dups": QuerySpec(dedup.minhash_near_dups, None),
@@ -443,14 +448,7 @@ _CATALOG_A: dict[str, QuerySpec] = {
     "n2_pca_spectrum_by_source": QuerySpec(
         similarity.n2_pca_spectrum_by_source, None
     ),
-}
-
-# Catalog half B: every oracle-backed query added after the r1 window froze
-# (r2-r6 waves), in declaration order. All are certified locally against
-# DuckDB by tests/test_oracle_parity.py at every pytest run; the rotation
-# block below cycles them through the 50-slot driver window so each earns
-# an independent driver CORRECTNESS row.
-_CATALOG_B: dict[str, QuerySpec] = {
+    # -- oracle-backed queries added after the first driver window froze -----
     "cube_order_stats": QuerySpec(relational.cube_order_stats, relational.CUBE_SQL),
     "q7_nation_volume_by_year": QuerySpec(
         relational.q7_nation_volume_by_year, relational.Q7_SQL
@@ -765,7 +763,7 @@ _CATALOG_B: dict[str, QuerySpec] = {
     "n3_split_leakage_report": QuerySpec(
         sampling.n3_split_leakage_report, sampling.SPLIT_LEAKAGE_SQL
     ),
-    # --- round-9 wave (cohort D extension; first driver rows in r10) ---
+    # --- round-9 wave ---
     "decayed_event_type_topk": QuerySpec(
         temporal.decayed_event_type_topk, temporal.DECAYED_TOPK_SQL
     ),
@@ -813,9 +811,7 @@ _CATALOG_B: dict[str, QuerySpec] = {
         relational.customer_revenue_concentration,
         relational.REVENUE_CONCENTRATION_SQL,
     ),
-    # ---- r10 wave (beyond the pinned cohort-D slice: these certify via
-    # EXTRA_QUERIES/test_oracle_parity this round and queue for the r11
-    # round-robin window) ----
+    # ---- r10 wave ----
     "ab_value_bootstrap_ci": QuerySpec(
         profile.ab_value_bootstrap_ci, profile.AB_BOOTSTRAP_SQL
     ),
@@ -842,9 +838,7 @@ _CATALOG_B: dict[str, QuerySpec] = {
     "priority_mix_drift_by_month": QuerySpec(
         profile.priority_mix_drift_by_month, profile.PRIORITY_MIX_DRIFT_SQL
     ),
-    # ---- r11 wave (beyond the pinned [140:148] slice: these certify via
-    # EXTRA_QUERIES/test_oracle_parity this round and queue for the r12
-    # round-robin window) ----
+    # ---- r11 wave ----
     "n3_dedup_aware_token_budget": QuerySpec(
         dedup.n3_dedup_aware_token_budget, dedup.DEDUP_TOKEN_BUDGET_SQL
     ),
@@ -867,9 +861,7 @@ _CATALOG_B: dict[str, QuerySpec] = {
     "ab_purchase_rate_bootstrap_ci": QuerySpec(
         profile.ab_purchase_rate_bootstrap_ci, profile.RATE_BOOTSTRAP_SQL,
     ),
-    # ---- r12 wave (beyond the pinned [148:155] slice: these certify via
-    # EXTRA_QUERIES/test_oracle_parity this round and queue for the r13
-    # round-robin window) ----
+    # ---- r12 wave ----
     "benford_order_values": QuerySpec(
         profile.benford_order_values, profile.BENFORD_ORDER_VALUES_SQL
     ),
@@ -885,40 +877,15 @@ _CATALOG_B: dict[str, QuerySpec] = {
 }
 
 # --------------------------------------------------------------------------
-# Driver-window rotation (VERDICT r6 #1)
+# Driver window
 #
 # The round driver certifies only the FIRST 50 oracle-backed QUERIES entries
-# (hard cap); everything else gets a local tests/test_oracle_parity.py pass,
-# which — however faithful — is self-certification. So the window ROTATES
-# each round: 15 never-rotated anchors (flagship + the SURVEY §2
-# reference-parity ids) + 35 slots cycled through the catalog in declaration
-# order, so every oracle-backed query eventually earns an independent driver
-# CORRECTNESS row.
-#
-# Schedule (cohorts are declaration-order slices; cohort sizes are NOT
-# quoted here — compute cohort D as len(_CATALOG_B) - 105 at rotation
-# time, since in-round waves extend the catalog after any number written
-# here (the r8 comment said 120, reality was 124; the r9 comment said
-# 124/19 and the same round grew it again — quoting numbers in comments
-# lost twice):
-#   r1-r6 : the original _CATALOG_A window        → CORRECTNESS_r01..r06
-#   r7    : anchors + cohort A = _CATALOG_B[0:35] → first driver rows for 35
-#   r8    : anchors + cohort B = _CATALOG_B[35:70]
-#   r9    : anchors + cohort C = _CATALOG_B[70:105]
-#   r10   : anchors + cohort D = _CATALOG_B[105:140] — the slice is PINNED
-#           at 140 so in-round waves extending the catalog land in
-#           EXTRA_QUERIES (locally certified) without overflowing the
-#           window; after r10 every entry declared by r9 close has an
-#           independent driver row.
-#   r11+  : steady-state round-robin RE-certification, oldest driver row
-#           first: the displaced _CATALOG_A oracle entries (driver rows
-#           date to r1-r6) go first, then cohorts A, B, C, D in order,
-#           interleaved with any never-certified entries added after the
-#           r10 pin (those jump the queue — first-certification beats
-#           re-certification). Compute the r11 slice at rotation time
-#           from the catalog as it then stands; don't quote counts here.
-# Rotating = replacing _WINDOW_ROTATION with the next cohort's names; the
-# asserts below keep the 50-slot / oracle-first contract intact.
+# (hard cap); every other oracle-backed query gets a local
+# tests/test_oracle_parity.py pass in EXTRA_QUERIES. The window is the 15
+# fixed anchors (flagship + the SURVEY §2 reference-parity ids) plus the 35
+# names in WINDOW. Rotating the window = editing WINDOW, so every
+# oracle-backed query in turn earns an independent driver CORRECTNESS row;
+# the assert below keeps the 50-slot / oracle-first contract intact.
 
 _ANCHORS = [
     "flagship_grep_count",
@@ -938,60 +905,56 @@ _ANCHORS = [
     "u3_expression_predicate",
 ]
 
-# r12 window = steady-state round-robin (schedule comment above). Queue
-# per VERDICT r11 #1 / PLAN_r12 #2: (a) the displaced _CATALOG_A oracle
-# entries NOT re-certified in r11 (declaration-order tail; their driver
-# rows date to r1-r6 — oldest first), then (b) the never-certified
-# r11-wave entries, PINNED at the r12 round-start catalog boundary (155)
-# — same reason as the r10/r11 pins: r12 in-round waves extend
-# _CATALOG_B past it and must land in EXTRA_QUERIES (locally certified),
-# never grow the window mid-round — then (c) the head of cohort A
-# (_CATALOG_B[0:...]), restarting the re-certification cycle. The cohort-A
-# entries not taken here head the r13 queue (after any r12-wave
-# never-certified entries, which jump as always).
-_A_DISPLACED = [n for n, s in _CATALOG_A.items() if s.oracle and n not in _ANCHORS]
-_R11_NEVER = list(_CATALOG_B)[140:148]  # r11's pinned first-cert slice
-_A_TAIL = _A_DISPLACED[35 - len(_R11_NEVER):]  # displaced A entries r11 did not take
-_NEVER_CERTIFIED = list(_CATALOG_B)[148:155]
-_WINDOW_ROTATION = (
-    _A_TAIL
-    + _NEVER_CERTIFIED
-    + list(_CATALOG_B)[: 35 - len(_A_TAIL) - len(_NEVER_CERTIFIED)]
-)
+WINDOW = [
+    "n3_language_id",
+    "n3_winnowed_fingerprints",
+    "n3_repetition_signals",
+    "n3_vocabulary",
+    "n1_contamination_report",
+    "n4_audio_stats",
+    "n4_media_metadata",
+    "n4_frame_sample_counts",
+    "n3_dedup_aware_token_budget",
+    "ab_bootstrap_ci_by_nation",
+    "user_lifecycle_weekly",
+    "priority_share_control_chart",
+    "n2_source_centroid_similarity",
+    "n2_jl_projection_distortion",
+    "ab_purchase_rate_bootstrap_ci",
+    "cube_order_stats",
+    "q7_nation_volume_by_year",
+    "q10_returned_item_losses",
+    "groupingsets_event_stats",
+    "q6_forecast_revenue",
+    "q14_promo_revenue",
+    "q18_large_volume_customers",
+    "q22_idle_rich_customers",
+    "orders_by_year",
+    "n3_token_counts",
+    "n3_text_quality",
+    "n3_fingerprints",
+    "n3_pii_redaction",
+    "n3_markup_stripping",
+    "n3_stratified_sample",
+    "n3_sample_per_group",
+    "analytic_order_deltas",
+    "n3_corpus_split",
+    "n3_corpus_mix",
+    "n3_model_quality_scores",
+]
 
-_ORACLE_CATALOG: dict[str, QuerySpec] = {
-    **{n: s for n, s in _CATALOG_A.items() if s.oracle},
-    **_CATALOG_B,
-}
-_ROWS_ONLY: dict[str, QuerySpec] = {n: s for n, s in _CATALOG_A.items() if not s.oracle}
+_ORACLE_CATALOG: dict[str, QuerySpec] = {n: s for n, s in _CATALOG.items() if s.oracle}
 
 QUERIES: dict[str, QuerySpec] = {
-    **{n: _ORACLE_CATALOG[n] for n in _ANCHORS + _WINDOW_ROTATION},
-    **_ROWS_ONLY,
+    **{n: _ORACLE_CATALOG[n] for n in _ANCHORS + WINDOW},
+    **{n: s for n, s in _CATALOG.items() if not s.oracle},
 }
 EXTRA_QUERIES: dict[str, QuerySpec] = {
     n: s for n, s in _ORACLE_CATALOG.items() if n not in QUERIES
 }
 
-assert len(set(_CATALOG_A) & set(_CATALOG_B)) == 0, "catalog halves must not overlap"
-# Rotation-schedule arithmetic (keeps the schedule comment honest): cohorts
-# A/B/C are full 35-slot declaration-order slices, cohort D = the remainder.
-assert len(_CATALOG_B) >= 105, (
-    f"cohort schedule assumes three full 35-slot cohorts; _CATALOG_B has "
-    f"{len(_CATALOG_B)} entries — cohort D would be {len(_CATALOG_B) - 105}"
-)
-assert len(_CATALOG_B) >= 155, (
-    f"r12 never-certified slice is pinned at [148:155]; _CATALOG_B has "
-    f"{len(_CATALOG_B)} entries — the pin no longer covers the r11 waves"
-)
-assert all(
-    s.oracle for s in EXTRA_QUERIES.values()
-), "EXTRA_QUERIES is the locally-certified oracle set: every entry needs SQL"
-
-_N_ORACLE_FIRST = 50
-assert len(_ANCHORS) + len(_WINDOW_ROTATION) == _N_ORACLE_FIRST and (
-    sum(1 for s in QUERIES.values() if s.oracle) == _N_ORACLE_FIRST
-    and all(s.oracle for s in list(QUERIES.values())[:_N_ORACLE_FIRST])
+assert [bool(s.oracle) for s in QUERIES.values()] == [True] * 50 + [False] * (
+    len(QUERIES) - 50
 ), "driver window contract broken: first 50 entries must be exactly the oracle-backed set"
 
 

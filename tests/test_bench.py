@@ -1,8 +1,10 @@
 """Contract checks for bench.py that need no Spark job: the headline names
-resolve before any warm-up, the >= 2 s extra-runs rule, and the shape of
-the stdout contract line."""
+resolve before any warm-up, the >= 2 s extra-runs rule, the shape of the
+stdout contract line, and the curate breakdown's link to the registry."""
 
 import json
+
+import pytest
 
 import bench
 
@@ -27,3 +29,28 @@ def test_contract_line_shape():
     assert line["value"] == round(sum(line["queries"].values()), 3)
     assert line["sf"] == 0.1
     assert json.loads(json.dumps(line)) == line
+
+
+def test_curate_breakdown_and_registry_query_share_one_curation(monkeypatch):
+    """The staged curate breakdown and n1_curate_pipeline both take their
+    corpus, holdout and threshold from registry.curated_corpus."""
+    from hadoop_stuff_spark.plans import registry
+    from hadoop_stuff_spark.plans.qlog import QueryLog
+
+    class Called(Exception):
+        pass
+
+    calls = []
+
+    def fake_curated_corpus(spark, sf_dir, qlog=None):
+        calls.append((spark, sf_dir, qlog))
+        raise Called
+
+    monkeypatch.setattr(registry, "curated_corpus", fake_curated_corpus)
+    with pytest.raises(Called):
+        registry.QUERIES["n1_curate_pipeline"].fn("spark", "sf")
+    with pytest.raises(Called):
+        bench._curate_stage_breakdown("spark", "sf")
+    assert [c[:2] for c in calls] == [("spark", "sf")] * 2
+    assert calls[0][2] is None
+    assert isinstance(calls[1][2], QueryLog)

@@ -146,6 +146,7 @@ def test_minhash_recall_vs_exact(spark, sf_dir):
 
 
 def test_simhash_properties(spark):
+    from hadoop_stuff_spark.functions import text as T
     from hadoop_stuff_spark.operators.dedup import _simhash64_udf
 
     def hamming(a, b):
@@ -154,7 +155,7 @@ def test_simhash_properties(spark):
     df = _docs(spark, [BASE, BASE, NEAR, FAR])
     sigs = {
         r.doc_id: r.simhash
-        for r in df.select("doc_id", _simhash64_udf(F.col("text")).alias("simhash")).collect()
+        for r in df.select("doc_id", _simhash64_udf(T.tokens("text")).alias("simhash")).collect()
     }
     # identical text → identical signature
     assert sigs[0] == sigs[1]

@@ -48,8 +48,7 @@ def test_dim_join_broadcasts(spark, sf_dir):
 def test_candidate_pair_pipelines_have_no_final_sort(spark, sf_dir):
     """VERDICT r1 #7: the near-dup candidate-pair pipelines must not end in
     a presentation-only global Exchange+Sort (at scale that's a full
-    re-shuffle of every candidate pair). sort=True re-enables it
-    explicitly."""
+    re-shuffle of every candidate pair)."""
     from hadoop_stuff_spark.operators import dedup
 
     import re
@@ -65,9 +64,6 @@ def test_candidate_pair_pipelines_have_no_final_sort(spark, sf_dir):
         # per-partition and fine)
         assert "rangepartitioning" not in plan.lower(), (fn.__name__, plan)
         assert not re.search(r"Sort \[[^\]]*\], true", plan), (fn.__name__, plan)
-    # opt-in sort still available
-    sorted_plan = _plan(dedup.minhash_near_dups(spark, sf_dir, sort=True))
-    assert "rangepartitioning" in sorted_plan.lower()
 
 
 def test_aggregate_is_partial_then_final(spark, sf_dir):

@@ -252,6 +252,65 @@ def test_winnow_shared_run_guarantee(spark):
     assert fps[1] & fps[2], fps
 
 
+def _minhash_py(text: str | None, n: int) -> list[int]:
+    """Reference MinHash: the ``str.split(" ")`` tokenizer the signature UDF
+    used before it read token arrays; the LONG_MAX sentinel below n tokens."""
+    import numpy as np
+
+    from hadoop_stuff_spark.operators.dedup import MINHASH_PERMS, _minhash_perm_coeffs
+    from hadoop_stuff_spark.operators.sketches import murmur3_64_np
+
+    toks = (text or "").split(" ")
+    sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    if not sh:
+        return [(1 << 63) - 1] * MINHASH_PERMS
+    a, b = _minhash_perm_coeffs(MINHASH_PERMS)
+    h = murmur3_64_np(np.array([s.encode() for s in sh], dtype=object))
+    return (a[None, :] * h[:, None] + b[None, :]).min(axis=0).view(np.int64).tolist()
+
+
+def _simhash_py(text: str | None) -> int | None:
+    """Reference 64-bit SimHash, one bit at a time: bit j is set when more
+    ``split(" ")`` tokens have md5 bit j set than clear; null for null text."""
+    import hashlib
+
+    if text is None:
+        return None
+    votes = [0] * 64
+    for tok in text.split(" "):
+        h = int.from_bytes(hashlib.md5(tok.encode("utf-8")).digest()[:8], "big")
+        for j in range(64):
+            votes[j] += 1 if (h >> j) & 1 else -1
+    sig = sum(1 << j for j in range(64) if votes[j] > 0)
+    return sig - (1 << 64) if sig >= 1 << 63 else sig
+
+
+def test_minhash_simhash_signatures_match_python_reference(spark, sf_dir):
+    """MinHash (n = 1 and 3) and SimHash signatures equal the pure-Python
+    references bit for bit, on edge-case texts and on every document."""
+    from hadoop_stuff_spark.catalog import load_table
+    from hadoop_stuff_spark.functions import text as T
+    from hadoop_stuff_spark.operators.dedup import _simhash64_udf, minhash_signature
+
+    edge = [None, "", " ", "a", "a b", "a b c", "a a a a", "dup dup x dup dup",
+            "x  y z", " lead a b", "trail a b ", "a\tb c d", "é ü 中文 字 🙂"]
+    edge_df = spark.createDataFrame(
+        [(-1 - i, t) for i, t in enumerate(edge)], "doc_id bigint, text string"
+    )
+    docs = edge_df.unionByName(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    rows = docs.select(
+        "text",
+        minhash_signature("text", 1).alias("mh1"),
+        minhash_signature("text", 3).alias("mh3"),
+        _simhash64_udf(T.tokens("text")).alias("sh"),
+    ).collect()
+    assert len(rows) > len(edge)
+    for r in rows:
+        assert r["mh1"] == _minhash_py(r["text"], 1), r["text"]
+        assert r["mh3"] == _minhash_py(r["text"], 3), r["text"]
+        assert r["sh"] == _simhash_py(r["text"]), r["text"]
+
+
 # ---------------------------------------------------------------------------
 # media container codecs (functions/media.py) — pure-python properties
 
