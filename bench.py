@@ -429,9 +429,10 @@ def _extra_decade(spark, sf01_medians: dict[str, float], errors: dict[str, str])
 def _curate_stage_breakdown(spark, sf_dir: str) -> dict:
     """Attribute the n1_curate_pipeline composite (VERDICT r5 #6): run its
     curation (`registry.curated_corpus`) once in staged mode with a
-    QueryLog and report wall seconds per stage. The staged run adds
-    checkpoint barriers, so its sum can differ from the fused headline
-    median — both are recorded."""
+    QueryLog and report wall seconds per stage. The staged plan is the
+    fused one (same fan-out barriers, same MinHash input width) plus one
+    checkpoint per stage, so its sum can still differ from the fused
+    headline median by those checkpoints — both are recorded."""
     import shutil
     import tempfile
 

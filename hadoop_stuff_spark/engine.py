@@ -443,30 +443,31 @@ class Engine:
         only pass blobs covering every doc in ``docs``.
 
         ``qlog`` (VERDICT r5 #6): pass a `plans.qlog.QueryLog` to make
-        the composite attributable — each stage is then eagerly
-        materialized under a timed `curate:<stage>` log row (wall
-        seconds, exchanges, lint findings), so the pipeline's cost
-        decomposes stage by stage. The barriers change scheduling, not
-        results (every stage is deterministic); leave it None for the
-        fully-fused lazy plan.
+        the composite attributable: each stage then runs under a timed
+        `curate:<stage>` log row (wall seconds including construction,
+        exchanges, lint findings) and is checkpointed. Otherwise the plan
+        is the fused one, and the extra checkpoints change scheduling,
+        not results (every stage is deterministic).
 
-        Eager side effect (ADVICE r12): in fused mode (``qlog=None``)
-        the two fan-out points (exact dedup, near-dup survivors) are
-        pinned with EAGER localCheckpoints at pipeline-CONSTRUCTION
-        time, so merely calling ``curate()`` runs the clean/dedup Spark
-        jobs even if the caller never triggers an action on the result
-        — a plan-only/explain-only caller pays them. The checkpointed
-        blocks are also executor-local and non-replicated: on a real
-        cluster a lost executor fails the query instead of recomputing
-        (the basket_affinity ``materialize="persist"`` trade-off,
-        accepted here because the barrier is what stops Catalyst
-        re-executing the scan+clean+dedup subtree per fan-out consumer
-        — 8 documents scans in the fused plan without it)."""
+        Eager side effect (ADVICE r12): in both modes the two fan-out
+        stages (exact dedup; the near-dup survivors when a ``holdout`` is
+        given) are widened and pinned with EAGER localCheckpoints at
+        construction, and near-dup removal runs MinHash's signature
+        checkpoint and the connected-components rounds there too. So
+        merely calling ``curate()`` runs Spark jobs: 30 at sf0.1 on 4
+        cores with ``registry.curated_corpus``'s inputs (10 for the two
+        fan-outs and the signatures, 20 in `connected_components`: its
+        edge list, then two label rounds), against 5 for the action. The
+        checkpoint blocks are executor-local and non-replicated, so on a
+        real cluster a lost executor fails the query instead of
+        recomputing it; without the barriers Catalyst re-executes the
+        scan+clean+dedup subtree per fan-out consumer (8 documents scans
+        in the fused plan)."""
         from pyspark.sql import functions as F
 
         from hadoop_stuff_spark.functions import text as T
         from hadoop_stuff_spark.operators.cleaning import clean_text
-        from hadoop_stuff_spark.operators.clusters import dedup_clusters
+        from hadoop_stuff_spark.operators.clusters import connected_components
         from hadoop_stuff_spark.operators.contamination import overlap_report
         from hadoop_stuff_spark.operators.dedup import (
             drop_exact_duplicates,
@@ -490,61 +491,48 @@ class Engine:
             int(self.spark.conf.get("spark.sql.shuffle.partitions")),
         )
 
-        def stage(name: str, build) -> DataFrame:
-            # Attribution must cover CONSTRUCTION too: iterative operators
-            # (dedup_clusters' pointer-jumping rounds, minhash_candidates'
-            # eager signature checkpoint) execute jobs while the frame is
-            # being built, before any action runs on it.
-            if qlog is None:
-                return build()
+        def stage(name: str, build, fan_out: bool = False) -> DataFrame:
+            # A fan-out stage feeds two consumers (the next stage and an
+            # anti-join back onto itself), so it is checkpointed in both
+            # modes. It is widened first: the checkpoint keeps its input's
+            # partitioning, which the exchange before it AQE-coalesces to
+            # ~1 partition at bench scale, and that would serialize the
+            # CPU-heavy pass reading it (MinHash signatures, the shingle
+            # explode). A qlog wall includes construction, where
+            # iterative operators already run jobs.
             t0 = _time.perf_counter()
             df = build()
-            built = _time.perf_counter() - t0
-            return qlog.run(
-                f"curate:{name}",
-                df,
-                action=lambda d: d.localCheckpoint(eager=True),
-                extra_wall_s=built,
-            )
+            if fan_out:
+                df = df.repartition(_wide)
+            if qlog is not None:
+                return qlog.run(
+                    f"curate:{name}",
+                    df,
+                    action=lambda d: d.localCheckpoint(eager=True),
+                    extra_wall_s=_time.perf_counter() - t0,
+                )
+            return df.localCheckpoint(eager=True) if fan_out else df
 
         exact = stage(
             "clean_exact_dedup",
             lambda: drop_exact_duplicates(
                 docs.withColumn(text_col, clean_text(text_col)), text_col
             ),
+            fan_out=True,
         )
-        if qlog is None:
-            # fan-out barrier (r12): `exact` feeds BOTH the minhash
-            # signature pass and the survivor anti-join; fused-lazily,
-            # Catalyst re-executes the scan + clean + exact-dedup
-            # subtree per reference (the r12 plan audit counted 8
-            # documents scans in the one fused plan). In qlog mode the
-            # stage wrapper has already checkpointed. Results unchanged
-            # — the barrier only cuts lineage. r13: the checkpoint is
-            # WIDENED first — localCheckpoint preserves partitioning,
-            # and the exact-dedup exchange AQE-coalesces to ~1
-            # partition at bench scale, which would serialize the
-            # expensive MinHash HOF signature pass reading it.
-            exact = exact.repartition(_wide).localCheckpoint(eager=True)
 
         def build_near_dedup() -> DataFrame:
             pairs = minhash_candidates(exact, id_col, text_col).filter(
                 F.col("est_jaccard") >= near_threshold
             )
             losers = (
-                dedup_clusters(pairs)
+                connected_components(pairs)
                 .filter(F.col("doc_id") != F.col("cluster_id"))
                 .select(F.col("doc_id").alias(id_col))
             )
             return exact.join(losers, id_col, "left_anti")
 
-        survivors = stage("near_dedup", build_near_dedup)
-        if qlog is None and holdout is not None:
-            # same fan-out rule: survivors feed the contamination
-            # report AND the post-filter anti-join; widened for the
-            # same reason as `exact` (the shingle explode + probe join
-            # reading this checkpoint is CPU-heavy per row)
-            survivors = survivors.repartition(_wide).localCheckpoint(eager=True)
+        survivors = stage("near_dedup", build_near_dedup, fan_out=holdout is not None)
         if holdout is not None:
             skip_contamination = False
             if prescreen:
@@ -552,10 +540,9 @@ class Engine:
                     shingle_overlap_gate,
                 )
 
-                # survivors is already materialized at this point in
-                # every mode (the fused-mode fan-out barrier above, or
-                # qlog's stage checkpoint), so the gate's sketch scan
-                # never re-executes the upstream pipeline
+                # survivors is a fan-out stage, already materialized,
+                # so the gate's sketch scan never re-executes the
+                # upstream pipeline
                 gate = shingle_overlap_gate(
                     survivors,
                     holdout,

@@ -13,11 +13,13 @@ split, a hash array) re-evaluates it for every element. Plan-lint's
 takes :func:`tokens`, never a ``let``-bound array such as :func:`shingles`:
 Spark 4.1 can fail to generate code for a Python UDF whose argument holds
 a lambda (``[INTERNAL_ERROR] Cannot generate code for expression``,
-depending on what the session ran before), while a plain split never did.
+depending on what the session ran before), while a plain split never did;
+plan-lint's ``udf-hof-arg`` rule flags that shape.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import Column
@@ -71,9 +73,11 @@ def token_count(col: Column | str) -> Column:
 
 
 def stopword_ratio(col: Column | str) -> Column:
+    # stopword hits = tokens minus what is left once every stopword is
+    # removed: no lambda, so the ratio may feed a pandas UDF (score_quality)
     toks = tokens(col)
-    hits = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))
-    return hits / F.size(toks)
+    kept = functools.reduce(F.array_remove, STOPWORDS, toks)
+    return (F.size(toks) - F.size(kept)) / F.size(toks)
 
 
 def avg_token_length(col: Column | str) -> Column:

@@ -13,15 +13,17 @@ the bound is O(log n) rounds for any graph with doubling (pointer-jumping
 through the label graph — the standard large-star/small-star argument).
 
 Scale design: each round is one self-join on the edge list + one groupBy
-min — two shuffles over O(E) rows, no driver data movement. The only
-driver-side value per round is a single convergence scalar (count of
-changed labels). Checkpointing truncates the lineage every round so plans
-stay O(1) deep.
+min — two shuffles over O(E) rows, no driver data movement. Each round's
+labels are materialized by one eager localCheckpoint, which truncates the
+lineage so plans stay O(1) deep. The only driver-side value per round is
+a single convergence scalar, the count of changed labels: a
+``DataFrame.observe`` metric on that same checkpoint, filled when the
+checkpoint job finishes, so reading it runs no job of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -38,7 +40,6 @@ def connected_components(
     Deterministic; raises if ``max_iters`` rounds don't converge (dedup
     graphs converge in ~log(diameter); 25 covers any realistic corpus).
     """
-    spark = pairs.sparkSession
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -71,24 +72,25 @@ def connected_components(
         parents = labels.select(
             F.col("doc_id").alias("_pid"), F.col("cluster_id").alias("_plabel")
         )
-        new_labels = (
-            cand.join(parents, cand.cand == parents._pid, "left")
-            .select(
-                "doc_id",
-                "old_label",
-                F.least(F.col("cand"), F.coalesce("_plabel", F.col("cand"))).alias(
-                    "cluster_id"
-                ),
-            )
-            .withColumn(
-                "_changed", (F.col("cluster_id") < F.col("old_label")).cast("long")
+        new_labels = cand.join(parents, cand.cand == parents._pid, "left").select(
+            "doc_id",
+            "old_label",
+            F.least(F.col("cand"), F.coalesce("_plabel", F.col("cand"))).alias(
+                "cluster_id"
+            ),
+        )
+        # count_if reads 0, not null, over an empty round: no null is
+        # ever taken for convergence
+        round_obs = Observation()
+        labels = (
+            new_labels.observe(
+                round_obs,
+                F.count_if(F.col("cluster_id") < F.col("old_label")).alias("changed"),
             )
             .drop("old_label")
+            .localCheckpoint(eager=True)
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.agg(F.sum("_changed")).collect()[0][0] or 0
-        labels = new_labels.drop("_changed")
-        if changed == 0:
+        if round_obs.get["changed"] == 0:
             return labels
     raise RuntimeError(f"connected_components did not converge in {max_iters} rounds")
 

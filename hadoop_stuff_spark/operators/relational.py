@@ -1465,7 +1465,6 @@ def basket_affinity_lift(
     sf_dir: str,
     min_support: int = 12,
     top: int = 25,
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """Association-rule readout over co-purchased parts: for each frequent
     pair, the LIFT (observed co-occurrence ÷ the independence expectation
@@ -1492,29 +1491,10 @@ def basket_affinity_lift(
     # the distinct basket relation feeds FIVE consumers (N, freq, both
     # pair sides, and the two frequency joins derive from freq) — without
     # materialization each consumer re-scans lineitem and re-runs the
-    # distinct shuffle (7 FileScans in the compiled plan). `materialize`
-    # picks how the single scan+shuffle is pinned (VERDICT r8 #4):
-    #   "checkpoint" (default) — eager localCheckpoint: fastest on a
-    #     single node / bench, but TRUNCATES LINEAGE into executor-local
-    #     non-replicated blocks, so on a real cluster a lost executor
-    #     fails the query instead of recomputing;
-    #   "persist" — spill-safe MEMORY_AND_DISK persist: keeps lineage, a
-    #     lost block recomputes from the parquet scan — the cluster call.
-    #     (Blocks stay cached after the query, like the checkpoint RDDs;
-    #     both are reclaimed by Spark's context cleaner on GC.)
-    #   "none" — no pinning (the 7-rescan plan); for plan-shape tests.
-    if materialize not in ("checkpoint", "persist", "none"):
-        raise ValueError(f"materialize must be checkpoint|persist|none, got {materialize!r}")
-
-    def _pin(df: DataFrame) -> DataFrame:
-        if materialize == "checkpoint":
-            return df.localCheckpoint(eager=True)
-        if materialize == "persist":
-            from pyspark import StorageLevel
-
-            return df.persist(StorageLevel.MEMORY_AND_DISK)
-        return df
-
+    # distinct shuffle (7 FileScans in the compiled plan). An eager
+    # localCheckpoint pins the single scan+shuffle; it truncates lineage
+    # into executor-local, non-replicated blocks, so on a real cluster a
+    # lost executor fails the query instead of recomputing it.
     # r13 probe, NEGATIVE: the copurchase_pairs wide orderkey-hash
     # repartition was tried here too and regressed (interleaved noop min
     # 1.87 -> 2.22 s): the eager checkpoint pays the extra exchange plus
@@ -1522,14 +1502,15 @@ def basket_affinity_lift(
     # stage (~2M pairs) is too small to repay it at bench scale. At
     # production scale the distinct's output exceeds AQE's advisory size,
     # so the narrow-coalesce problem this guards against does not arise.
-    baskets = _pin(li.select("l_orderkey", "l_partkey").distinct())
+    baskets = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(eager=True)
     n_baskets = baskets.agg(
         F.countDistinct("l_orderkey").alias("n_baskets")
     )
-    freq = _pin(
+    freq = (
         baskets.groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("n_part"))
         .filter(F.col("n_part") >= min_support)
+        .localCheckpoint(eager=True)
     )
     pruned = baskets.join(broadcast(freq.select("l_partkey")), "l_partkey")
     a = pruned.select("l_orderkey", F.col("l_partkey").alias("part_a"))

@@ -39,17 +39,11 @@ def quality_features(text_col: str) -> list[Column]:
     """The Catalyst-side feature vector (shared by engine and oracle):
     capped token-count, distinct ratio, stopword ratio, capped avg token
     length."""
-    toks = T.tokens(text_col)
-    n = F.size(toks)
     return [
-        F.least(n / F.lit(100.0), F.lit(1.0)).alias("__score_f_len"),
-        (F.size(F.array_distinct(toks)) / n).alias("__score_f_distinct"),
-        (
-            F.size(F.filter(toks, lambda t: t.isin(T.STOPWORDS))) / n
-        ).alias("__score_f_stop"),
-        F.least(
-            ((F.length(F.col(text_col)) - (n - 1)) / n) / F.lit(8.0), F.lit(1.0)
-        ).alias("__score_f_avglen"),
+        F.least(T.token_count(text_col) / F.lit(100.0), F.lit(1.0)).alias("__score_f_len"),
+        T.distinct_token_ratio(text_col).alias("__score_f_distinct"),
+        T.stopword_ratio(text_col).alias("__score_f_stop"),
+        F.least(T.avg_token_length(text_col) / F.lit(8.0), F.lit(1.0)).alias("__score_f_avglen"),
     ]
 
 

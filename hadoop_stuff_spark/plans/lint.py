@@ -37,11 +37,16 @@ Rules (name → what it catches at 100 TB):
                           array per window). A bare attribute, a literal or
                           a cast of an attribute is allowed. Fix: bind the
                           value once with ``functions.text.let``.
+- ``udf-hof-arg``         A Python/pandas UDF whose argument holds a HOF,
+                          e.g. over ``T.shingles(text, 3)``: seen to fail
+                          with ``[INTERNAL_ERROR] Cannot generate code``
+                          once other queries had run in the session.
 
 `lint_plan` returns a list of (rule, evidence) findings — empty means
 clean. It inspects the PHYSICAL plan (post-AQE initial plan), so what it
-sees is what would run; ``hof-invariant`` walks the expressions of the
-optimized logical plan the physical plan is built from.
+sees is what would run; ``hof-invariant`` and ``udf-hof-arg`` walk the
+expressions of the optimized logical plan the physical plan is built
+from.
 """
 
 from __future__ import annotations
@@ -116,30 +121,53 @@ def _invariant_calls(e, out: list) -> tuple[bool, set]:
     return outer, free
 
 
-def _hof_invariants(df: DataFrame) -> list[tuple[str, str]]:
-    """``hof-invariant`` findings: loop-invariant calls inside HOF lambdas
-    of ``df``'s optimized plan, one per distinct expression."""
-    trees = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees
-    has_lambda = trees.TreePattern.LAMBDA_FUNCTION()
-    calls: list = []
+def _bit(df: DataFrame, pattern: str):
+    return getattr(df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern, pattern)()
+
+
+def _find(df: DataFrame, pattern: str, kind: str) -> list:
+    """The outermost ``kind`` expressions of ``df``'s optimized plan; the
+    walk only enters nodes whose tree-pattern bits hold ``pattern``."""
+    bit = _bit(df, pattern)
+    found: list = []
 
     def visit(e) -> None:
-        if _kind(e) == "LambdaFunction":
-            _invariant_calls(e.function(), calls)
-        else:
-            for k in _items(e.children()):
-                if k.containsPattern(has_lambda):
-                    visit(k)
+        if _kind(e) == kind:
+            found.append(e)
+            return
+        for k in _items(e.children()):
+            if k.containsPattern(bit):
+                visit(k)
 
     nodes = [df._jdf.queryExecution().optimizedPlan()]
     while nodes:
         node = nodes.pop()
         for e in _items(node.expressions()):
-            if e.containsPattern(has_lambda):
+            if e.containsPattern(bit):
                 visit(e)
-        nodes.extend(k for k in _items(node.children()) if k.containsPattern(has_lambda))
-    exprs = dict.fromkeys(re.sub(r"#\d+", "", c.toString()) for c in calls)
-    return [("hof-invariant", f"{x[:100]} re-evaluated per element") for x in exprs]
+        nodes.extend(k for k in _items(node.children()) if k.containsPattern(bit))
+    return found
+
+
+def _distinct(exprs: list) -> list[str]:
+    return [x[:100] for x in dict.fromkeys(re.sub(r"#\d+", "", e.toString()) for e in exprs)]
+
+
+def _hof_invariants(df: DataFrame) -> list[tuple[str, str]]:
+    """``hof-invariant`` findings: loop-invariant calls inside HOF lambdas
+    of ``df``'s optimized plan, one per distinct expression."""
+    calls: list = []
+    for fn in _find(df, "LAMBDA_FUNCTION", "LambdaFunction"):
+        _invariant_calls(fn.function(), calls)
+    return [("hof-invariant", f"{x} re-evaluated per element") for x in _distinct(calls)]
+
+
+def _udf_hof_args(df: DataFrame) -> list[tuple[str, str]]:
+    """``udf-hof-arg`` findings: Python UDF calls of ``df``'s optimized
+    plan whose arguments hold a lambda, one per distinct call."""
+    has_lambda = _bit(df, "LAMBDA_FUNCTION")
+    bad = [u for u in _find(df, "PYTHON_UDF", "PythonUDF") if u.containsPattern(has_lambda)]
+    return [("udf-hof-arg", f"{x} has a HOF argument") for x in _distinct(bad)]
 
 
 def lint_plan(
@@ -155,7 +183,7 @@ def lint_plan(
         max_exchanges=max_exchanges,
         allow_cartesian=allow_cartesian,
         allow_global_sort=allow_global_sort,
-    ) + _hof_invariants(df)
+    ) + _hof_invariants(df) + _udf_hof_args(df)
 
 
 def lint_plan_text(

@@ -60,6 +60,15 @@ def test_connected_components_long_chain_round_count(spark):
     assert {r.cluster_id for r in out.collect()} == {0}
 
 
+def test_connected_components_fails_loudly_without_convergence(spark):
+    """One round cannot collapse a 64-edge chain: the operator must raise,
+    never return the unconverged labels."""
+    edges = [(i, i + 1) for i in range(0, 64)]
+    df = spark.createDataFrame(edges, "doc_a: long, doc_b: long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iters=1)
+
+
 def test_dedup_clusters_sizes(spark):
     edges = [(1, 2), (2, 3), (10, 11)]
     out = dedup_clusters(spark.createDataFrame(edges, "doc_a: long, doc_b: long"))

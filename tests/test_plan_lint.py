@@ -102,6 +102,23 @@ def test_flags_hof_invariant(spark, sf_dir):
     assert "hof-invariant" not in _rules(lint_plan(allowed))
 
 
+def test_flags_udf_over_hof_argument(spark, sf_dir):
+    """A pandas UDF over T.shingles (a let-bound HOF array) fails codegen
+    once other queries have run in the session, so it is flagged; the same
+    UDF over T.tokens is clean."""
+    from hadoop_stuff_spark.functions import text as T
+
+    @pandas_udf("long")
+    def n_items(arrays: pd.Series) -> pd.Series:
+        return arrays.map(len)
+
+    docs = load_table(spark, sf_dir, "documents")
+    findings = lint_plan(docs.select(n_items(T.shingles("text", 3))))
+    assert "udf-hof-arg" in _rules(findings)
+    assert any("n_items(" in e for r, e in findings if r == "udf-hof-arg"), findings
+    assert "udf-hof-arg" not in _rules(lint_plan(docs.select(n_items(T.tokens("text")))))
+
+
 def test_real_scale_paths_are_clean(spark, sf_dir):
     from hadoop_stuff_spark.operators.dedup import minhash_near_dups
     from hadoop_stuff_spark.operators.pq import topk_cosine_pq
@@ -118,8 +135,9 @@ def test_real_scale_paths_are_clean(spark, sf_dir):
 
 def test_every_registry_query_free_of_hard_antipatterns(spark):
     """Blanket invariant over the WHOLE registry: no query may contain a
-    row-at-a-time Python UDF, a duplicated Arrow-UDF chain or a
-    loop-invariant call inside a HOF lambda, and only
+    row-at-a-time Python UDF, a duplicated Arrow-UDF chain, a
+    loop-invariant call inside a HOF lambda or a Python UDF over a HOF
+    argument, and only
     the documented exact baselines / single-row-broadcast scalar shapes
     may contain a nested-loop join. This is the sweep that caught (and
     now pins fixed) the simhash and IVF double-evaluations."""
@@ -174,7 +192,8 @@ def test_every_registry_query_free_of_hard_antipatterns(spark):
         hard = [
             (r, e)
             for r, e in findings
-            if r in ("python-udf-row", "python-chain-dup", "cartesian", "hof-invariant")
+            if r
+            in ("python-udf-row", "python-chain-dup", "cartesian", "hof-invariant", "udf-hof-arg")
         ]
         if hard:
             bad.append((name, hard))
