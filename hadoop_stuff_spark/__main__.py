@@ -110,7 +110,9 @@ def main(argv: list[str] | None = None) -> int:
 
         dq_orders_report(eng.spark, args.sf_dir).show(truncate=False)
     elif args.cmd == "advise":
-        findings = eng.advise(eng.sql(args.query, args.sf_dir))
+        from hadoop_stuff_spark.plans.advisor import advise
+
+        findings = advise(eng.sql(args.query, args.sf_dir))
         if findings:
             for rule, ev in findings:
                 print(f"{rule}: {ev}")
@@ -118,20 +120,30 @@ def main(argv: list[str] | None = None) -> int:
             print("no advisories")
     elif args.cmd == "overlap":
         from hadoop_stuff_spark.catalog import load_table
+        from hadoop_stuff_spark.operators.sketches import (
+            build_user_theta_sketches,
+            theta_audience_overlap,
+        )
 
         events = load_table(eng.spark, args.sf_dir, "events")
-        eng.audience_overlap(
-            eng.theta_sketches(events), args.type_a, args.type_b
+        theta_audience_overlap(
+            build_user_theta_sketches(events), args.type_a, args.type_b
         ).show(truncate=False)
     elif args.cmd == "drift":
         from hadoop_stuff_spark.catalog import load_table
+        from hadoop_stuff_spark.operators.sketches import (
+            build_value_kll_sketches,
+            kll_drift_by_type,
+        )
 
         events = load_table(eng.spark, args.sf_dir, "events")
-        eng.drift_report(
-            eng.quantile_sketches(events), args.split_date
+        kll_drift_by_type(
+            build_value_kll_sketches(events), args.split_date
         ).show(truncate=False)
     elif args.cmd == "lint":
-        findings = eng.lint(eng.sql(args.query, args.sf_dir))
+        from hadoop_stuff_spark.plans.lint import lint_plan
+
+        findings = lint_plan(eng.sql(args.query, args.sf_dir))
         if findings:
             for rule, ev in findings:
                 print(f"{rule}: {ev}")

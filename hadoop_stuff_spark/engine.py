@@ -15,6 +15,14 @@ replacing each task invocation with the corresponding method here (or the
     (no SQL existed)   → Engine().sql("SELECT ...")  — the surface the
                          reference lacked (SURVEY.md §2.6), free from Spark
 
+Besides those entry points (plus `grep_count` and `grep_to_wiretap`) the
+class holds only composites that hide a decision: `curate` (the stage
+order and its checkpoint barriers), `audit` (six reports and which error
+it tolerates), `sketch_corpus_for_prescreen` (the normalization the
+curate gate's proof needs) and `score_by_frequency` (the estimator picked
+by key type). Every other operator is called directly from its module
+(`operators/`, `plans/`, `sources/`), with that module's defaults.
+
 No remote-user impersonation / namenode / jobtracker / jar-path plumbing
 survives the translation: session conf replaces all of it (SURVEY.md §3.1
 steps 1-4 collapse into `get_spark()`).
@@ -34,6 +42,7 @@ from hadoop_stuff_spark.sources.chunks import read_chunked, write_chunked
 from hadoop_stuff_spark.streaming.tail import tail_stream
 from hadoop_stuff_spark.streaming.wiretap import (
     parse_subscription,
+    route_and_deliver_batch,
     start_wiretap,
     subscriptions_df,
 )
@@ -87,10 +96,11 @@ class Engine:
         return grep_count(self._load(path, fmt), pattern, "value")
 
     def record_count(self, path: str, fmt: str = "chunked") -> DataFrame:
-        """Record count (A1-A4, RecordCount.java): for chunked stores the
-        count comes from per-chunk line counts WITHOUT decompressing
-        payloads (the reference's manual map-side pre-aggregation,
-        RecordCount.java:43, as a metadata aggregate)."""
+        """Record count (A1-A4, RecordCount.java): for chunked stores every
+        chunk is gunzipped and its lines counted map-side (the reference's
+        manual map-side pre-aggregation, RecordCount.java:43), so only one
+        partial sum per task reaches the shuffle — no record rows and no
+        text."""
         if fmt == "chunked":
             return chunked_record_count(self.spark.read.parquet(path))
         return _record_count(self._load(path, fmt))
@@ -144,32 +154,16 @@ class Engine:
         also satisfy the subscriber's own regex (the wiretap contract), so
         the batch result is multicast, not broadcast. Matched payload
         bytes flow executor→subscriber, never through the driver."""
-        from hadoop_stuff_spark.operators.grep import grep
-        from hadoop_stuff_spark.streaming.wiretap import route_and_deliver_batch
-
         subs = [parse_subscription(s, i + 1) for i, s in enumerate(subscriptions)]
         route_and_deliver_batch(
-            grep(df, pattern, record_col),
+            _grep(df, pattern, record_col),
             subs,
             record_col=record_col,
             deliver=deliver,
             drop_stats=drop_stats,
         )
 
-    # ------------------------------------------------------------------
-    # round-3 surface: quality gate, sketches, resample, plan lint
-
-    def check_quality(self, df: DataFrame, rules: dict) -> DataFrame:
-        """One-scan data-quality summary (operators/quality.check_rows)."""
-        from hadoop_stuff_spark.operators.quality import check_rows
-
-        return check_rows(df, rules)
-
-    def enforce_quality(self, df: DataFrame, rules: dict):
-        """(clean, quarantine) split with per-row failed_rules."""
-        from hadoop_stuff_spark.operators.quality import enforce
-
-        return enforce(df, rules)
+    # -- composites: each hides a decision its callers need not know -------
 
     def audit(self, sf_dir: str) -> dict[str, DataFrame]:
         """One-call schema-wide integrity audit over a catalog directory:
@@ -186,17 +180,14 @@ class Engine:
         plan exists); past its max_sources cap that entry is omitted
         with a warning rather than failing the whole audit."""
         from hadoop_stuff_spark.catalog import load_table
-        from hadoop_stuff_spark.operators.profile import profile_table
+        from hadoop_stuff_spark.operators.profile import (
+            benford_first_digit_audit,
+            n3_length_psi_by_source,
+            profile_table,
+        )
         from hadoop_stuff_spark.operators.quality import (
             duplicate_key_report,
             referential_integrity_report,
-        )
-
-        from hadoop_stuff_spark.operators.profile import (
-            benford_first_digit_audit,
-        )
-        from hadoop_stuff_spark.operators.profile import (
-            n3_length_psi_by_source,
         )
         from hadoop_stuff_spark.operators.textstats import (
             source_js_divergence_matrix,
@@ -206,11 +197,9 @@ class Engine:
             "referential": referential_integrity_report(self.spark, sf_dir),
             "duplicate_keys": duplicate_key_report(self.spark, sf_dir),
             "orders_profile": profile_table(load_table(self.spark, sf_dir, "orders")),
-            # round-8 addition: fabricated-money tripwire (certified
-            # EXTRA oracle; unmaterialized like the three above)
+            # fabricated-money tripwire (certified EXTRA oracle)
             "benford": benford_first_digit_audit(self.spark, sf_dir),
-            # round-9 addition: per-source length-distribution drift
-            # (certified EXTRA oracle; unmaterialized)
+            # per-source length-distribution drift (certified EXTRA oracle)
             "length_drift": n3_length_psi_by_source(self.spark, sf_dir),
         }
         try:
@@ -229,118 +218,6 @@ class Engine:
                 f"audit: source_similarity skipped — {exc}", stacklevel=2
             )
         return out
-
-    def distinct_sketches(self, df: DataFrame, lg_k: int = 12) -> DataFrame:
-        """Mergeable per-(day,type) HLL sketch table over an events-shaped
-        frame (operators/sketches.build_user_sketches)."""
-        from hadoop_stuff_spark.operators.sketches import build_user_sketches
-
-        return build_user_sketches(df, lg_k=lg_k)
-
-    def resample(self, df: DataFrame, ts_col: str, key_cols: list[str],
-                 agg_cols: dict, step: str = "1 hour", fill: str = "zero") -> DataFrame:
-        """Regular-grid resampling with zero/ffill gap fill."""
-        from hadoop_stuff_spark.operators.temporal import resample
-
-        return resample(df, ts_col, key_cols, agg_cols, step=step, fill=fill)
-
-    def lint(self, df: DataFrame, **kwargs) -> list:
-        """Physical-plan anti-pattern findings (plans/lint.lint_plan)."""
-        from hadoop_stuff_spark.plans.lint import lint_plan
-
-        return lint_plan(df, **kwargs)
-
-    def chunk(self, df: DataFrame, window: int = 64, overlap: int = 16) -> DataFrame:
-        """Split documents into overlapping token windows (RAG prep)."""
-        from hadoop_stuff_spark.operators.chunking import chunk_documents
-
-        return chunk_documents(df, window=window, overlap=overlap)
-
-    def embed(self, df: DataFrame, text_col: str = "chunk_text") -> DataFrame:
-        """Add an L2-normalized embedding column (stub encoder; swap point
-        documented in operators/embedding.py)."""
-        from hadoop_stuff_spark.operators.embedding import embed_text
-
-        return embed_text(df, text_col=text_col)
-
-    def scd2_merge(self, history: DataFrame, snapshot: DataFrame,
-                   key_cols: list[str], tracked_cols: list[str], batch_ts: str) -> DataFrame:
-        """Fold a dimension snapshot into an SCD2 history table."""
-        from hadoop_stuff_spark.operators.scd import scd2_merge
-
-        return scd2_merge(history, snapshot, key_cols, tracked_cols, batch_ts)
-
-    # ------------------------------------------------------------------
-    # round-4 surface: set-algebra/quantile/frequency sketches, upsert,
-    # typed file skipping
-
-    def theta_sketches(self, df: DataFrame, lg_k: int = 14) -> DataFrame:
-        """Per-(day,type) theta sketch table — distinct counts PLUS set
-        algebra (overlap/retention) from the persisted blobs."""
-        from hadoop_stuff_spark.operators.sketches import build_user_theta_sketches
-
-        return build_user_theta_sketches(df, lg_k=lg_k)
-
-    def audience_overlap(self, sketches: DataFrame, type_a: str, type_b: str) -> DataFrame:
-        """|A|, |B|, A∩B, A∪B, A\\B, B\\A, Jaccard between two event
-        types' audiences — one scan of the sketch table, no fact rescan."""
-        from hadoop_stuff_spark.operators.sketches import theta_audience_overlap
-
-        return theta_audience_overlap(sketches, type_a, type_b)
-
-    def retention(self, sketches: DataFrame, date_a: str, date_b: str) -> DataFrame:
-        """Users active on date_a who returned (or churned) by date_b."""
-        from hadoop_stuff_spark.operators.sketches import theta_retention
-
-        return theta_retention(sketches, date_a, date_b)
-
-    def quantile_sketches(self, df: DataFrame, k: int = 200) -> DataFrame:
-        """Per-(day,type) mergeable KLL sketch table of `value`."""
-        from hadoop_stuff_spark.operators.sketches import build_value_kll_sketches
-
-        return build_value_kll_sketches(df, k=k)
-
-    def quantiles(self, sketches: DataFrame, probs=(0.5, 0.95, 0.99)) -> DataFrame:
-        """Per-type quantiles from the KLL sketch table (rank-error
-        bounded), never rescanning facts."""
-        from hadoop_stuff_spark.operators.sketches import kll_quantiles_by_type
-
-        return kll_quantiles_by_type(sketches, probs=list(probs))
-
-    def frequency_sketches(self, df: DataFrame, eps: float = 1e-3) -> DataFrame:
-        """Per-day mergeable count-min sketch table of user_id occurrences."""
-        from hadoop_stuff_spark.operators.sketches import build_user_cms
-
-        return build_user_cms(df, eps=eps)
-
-    def frequency_estimates(
-        self, sketches: DataFrame, items: list[int],
-        start: str | None = None, end: str | None = None,
-    ) -> dict[int, int]:
-        """Point occurrence estimates (>= true, <= true + eps*N) for
-        ``items`` over a date range of the CMS table."""
-        from hadoop_stuff_spark.operators.sketches import cms_point_estimates
-
-        return cms_point_estimates(self.spark, sketches, items, start=start, end=end)
-
-    def upsert(
-        self, target_path: str, delta: DataFrame,
-        keys: list[str], partition_cols: list[str],
-    ) -> dict:
-        """MERGE a delta into a partitioned parquet table at O(affected
-        partitions) (sources/upsert.upsert_by_key)."""
-        from hadoop_stuff_spark.sources.upsert import upsert_by_key
-
-        return upsert_by_key(self.spark, target_path, delta, keys, partition_cols)
-
-    def corpus_overlap(self, corpus_a: DataFrame, corpus_b: DataFrame,
-                       text_col: str = "text") -> DataFrame:
-        """No-join content-overlap report between two corpora (theta
-        sketches over normalized fingerprints): shared/unique doc counts
-        and Jaccard — the cross-dedup planning query."""
-        from hadoop_stuff_spark.operators.sketches import corpus_overlap
-
-        return corpus_overlap(corpus_a, corpus_b, text_col=text_col)
 
     def sketch_corpus_for_prescreen(
         self, docs: DataFrame, text_col: str = "text", n: int = 3, lg_k: int = 20
@@ -379,21 +256,6 @@ class Engine:
         fn = with_string_frequency_estimates if is_str else with_frequency_estimates
         return fn(self.spark, sketches, probes, key_col,
                   out_col=out_col, start=start, end=end)
-
-    def drift_report(self, sketches: DataFrame, split_date: str,
-                     n_probes: int = 99) -> DataFrame:
-        """Per-type KS drift statistic between before/after ``split_date``
-        from a KLL sketch table — no fact rescan."""
-        from hadoop_stuff_spark.operators.sketches import kll_drift_by_type
-
-        return kll_drift_by_type(sketches, split_date, n_probes=n_probes)
-
-    def advise(self, df: DataFrame, **kwargs) -> list:
-        """Size-aware plan advisory (plans/advisor.advise): missed
-        broadcasts and large shuffles from Catalyst's own estimates."""
-        from hadoop_stuff_spark.plans.advisor import advise
-
-        return advise(df, **kwargs)
 
     def curate(
         self,

@@ -29,11 +29,14 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType, StringType
 
 
+def gzip_bytes(data: bytes) -> bytes:
+    """The one chunk compression: level 6, mtime=0 (see Determinism)."""
+    return gzip.compress(data, compresslevel=6, mtime=0)
+
+
 @pandas_udf(BinaryType())
 def _gzip_compress_udf(data: pd.Series) -> pd.Series:
-    return data.map(
-        lambda v: None if v is None else gzip.compress(bytes(v), compresslevel=6, mtime=0)
-    )
+    return data.map(lambda v: None if v is None else gzip_bytes(bytes(v)))
 
 
 @pandas_udf(BinaryType())

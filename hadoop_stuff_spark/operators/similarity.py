@@ -1568,13 +1568,32 @@ ORDER BY source_a, source_b
 _JL_DIM = 16
 
 # block-pair fan-out of the JL pair scorer: B blocks -> B(B+1)/2 Arrow
-# tasks, each holding <= ~2·sample/B rows; per-task rows loudly guarded
+# tasks, each holding <= ~2·sample/B rows; per-task bytes loudly guarded
 # (the max_cell_rows pattern). 8 blocks = 36 tasks — enough to saturate
 # the local core count and a cluster's task granularity alike; raise for
 # bigger samples (parallelism grows quadratically, shuffle volume
 # linearly in B).
 _JL_BLOCKS = 8
-_JL_MAX_BLOCK_ROWS = 2_000_000
+# rows per cosine step: each step holds a _JL_STEP × rows float64 cosine
+# block in each space
+_JL_STEP = 1024
+# 1 GiB per Python worker: ~63k rows per block-pair task
+_JL_MAX_BLOCK_BYTES = 1 << 30
+
+
+def _jl_block_guard(gi: int, gj: int, rows: int, max_bytes: int) -> None:
+    """Fail a JL block-pair task before numpy allocates past
+    ``max_bytes``. Its memory grows with bytes, not rows: the stacked
+    original and projected matrices (rows × (DIM + _JL_DIM) float64)
+    plus the two _JL_STEP × rows float64 cosine blocks of each step."""
+    need = 8 * rows * (DIM + _JL_DIM + 2 * _JL_STEP)
+    if need > max_bytes:
+        raise ValueError(
+            f"jl block pair ({gi},{gj}) holds {rows} rows = {need} bytes "
+            f"> _JL_MAX_BLOCK_BYTES={max_bytes}: tighten the sample "
+            "fraction or raise _JL_BLOCKS so each block-pair task fits "
+            "in one Python worker"
+        )
 
 
 def n2_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1615,7 +1634,7 @@ def n2_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     block-pair group, so the summed integers are identical to the
     single-pass histogram. The ±1 grid is driver-built from the same
     1024 md5 strings. Per-task memory is bounded by the two blocks
-    (~2·n/B rows), loudly guarded at ``_JL_MAX_BLOCK_ROWS`` (the
+    (~2·n/B rows), loudly guarded at ``_JL_MAX_BLOCK_BYTES`` (the
     max_cell_rows pattern); parallelism scales as B(B+1)/2 tasks.
     The declarative explode + broadcast-grid join + pair self-join
     replaced in r12 evaluated ~6.4M interpreted HOF fold lambdas —
@@ -1679,15 +1698,11 @@ def n2_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def hist(key, pdf: pd.DataFrame) -> pd.DataFrame:
         gi, gj = int(key[0]), int(key[1])
-        if len(pdf) > _JL_MAX_BLOCK_ROWS:
-            raise ValueError(
-                f"jl block pair ({gi},{gj}) holds {len(pdf)} rows "
-                f"> _JL_MAX_BLOCK_ROWS={_JL_MAX_BLOCK_ROWS}: tighten the "
-                "sample fraction or raise _JL_BLOCKS so each block-pair "
-                "task fits in one Python worker"
-            )
+        # the cap travels with this pickled closure; the guard itself is
+        # imported on the executor and sees only the module default
+        _jl_block_guard(gi, gj, len(pdf), _JL_MAX_BLOCK_BYTES)
         counts = np.zeros(20, dtype=np.int64)
-        block = 1024
+        block = _JL_STEP
         if gi == gj:
             # in-block pairs: strict upper triangle; |Δcos| is
             # symmetric, so index order ≡ the vec_id < vec_id join

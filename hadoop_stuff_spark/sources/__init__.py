@@ -1,5 +1,4 @@
 from hadoop_stuff_spark.sources.chunks import (
-    chunk_lines,
     chunk_lines_partitionwise,
     explode_chunks,
     read_chunked,
@@ -7,7 +6,6 @@ from hadoop_stuff_spark.sources.chunks import (
 )
 
 __all__ = [
-    "chunk_lines",
     "chunk_lines_partitionwise",
     "explode_chunks",
     "read_chunked",

@@ -9,15 +9,11 @@ TailFTest.java:179-183). Parquet row-groups + codec supersede this layout
 legacy-shaped data*, stored as parquet[key: long, value: binary] — the
 DataFrame image of SequenceFile[LongWritable, BytesWritable].
 
-Two chunkers:
-
-- :func:`chunk_lines` — deterministic global order (row_number over a sort).
-  Costs a global sort; use for tests/small parity data only.
-- :func:`chunk_lines_partitionwise` — the 100 TB path: chunks are formed
-  within each input partition (mapInPandas, zero shuffle), chunk ids are
-  (partition, local) pairs. Exactly the reference's "virtual writer" model
-  (CompressedSequenceFile.java:64-81): one writer per partition, no
-  cross-partition coordination.
+The chunker, :func:`chunk_lines_partitionwise`, is the 100 TB path:
+chunks are formed within each input partition (mapInPandas, zero
+shuffle), chunk ids are (partition, local) pairs. Exactly the reference's
+"virtual writer" model (CompressedSequenceFile.java:64-81): one writer per
+partition, no cross-partition coordination.
 
 Skew note (SURVEY.md §7 "legacy chunk granularity"): one chunk is
 indivisible until decoded, so after :func:`explode_chunks` callers should
@@ -29,38 +25,15 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-from hadoop_stuff_spark.functions.codecs import gzip_compress, gzip_decompress_str
+from hadoop_stuff_spark.functions.codecs import gzip_bytes, gzip_decompress_str
 
 CHUNK_SCHEMA = StructType(
     [StructField("key", LongType()), StructField("value", BinaryType())]
 )
-
-
-def chunk_lines(df: DataFrame, line_col: str, order_col: str, chunk_size: int) -> DataFrame:
-    """Deterministically pack lines into gzip chunks of ``chunk_size``.
-
-    Returns DataFrame[key: long, value: binary] — key is the chunk ordinal
-    (the reference never meaningfully set the key, IngestTest.java:76,89; we
-    at least make it the chunk id). Global row_number ⇒ single-partition
-    window: fine for parity fixtures, use the partitionwise variant at scale.
-    """
-    w = Window.orderBy("_ord")
-    packed = (
-        df.select(F.col(line_col).alias("line"), F.col(order_col).alias("_ord"))
-        .withColumn("_rn", F.row_number().over(w) - F.lit(1))
-        .withColumn("key", (F.col("_rn") / F.lit(chunk_size)).cast(LongType()))
-        .groupBy("key")
-        .agg(F.array_sort(F.collect_list(F.struct("_rn", "line"))).alias("_rows"))
-        .select(
-            "key",
-            F.array_join(F.transform("_rows", lambda r: r["line"]), "\n").alias("text"),
-        )
-    )
-    return packed.select("key", gzip_compress("text").alias("value"))
 
 
 def chunk_lines_partitionwise(
@@ -80,8 +53,6 @@ def chunk_lines_partitionwise(
     downstream ``writer.partitionBy(*partition_cols)`` works — the
     reference's date/host layout, IngestTest.java:58,68. Chunks never mix
     rows from different partition values."""
-    import gzip as _gzip
-
     col = line_col
     pcols = list(partition_cols or [])
 
@@ -96,7 +67,7 @@ def chunk_lines_partitionwise(
         def flush(pkey: tuple):
             nonlocal chunk_idx
             buf = bufs[pkey]
-            data = _gzip.compress("\n".join(buf).encode("utf-8"), 6, mtime=0)
+            data = gzip_bytes("\n".join(buf).encode("utf-8"))
             row = {"key": [((pid + 1) << 32) | chunk_idx], "value": [data]}
             for name, val in zip(pcols, pkey):
                 row[name] = [val]

@@ -34,6 +34,5 @@ def write_sequencefile_chunks(chunks: DataFrame, path: str) -> None:
     # NOTE: pyspark's Java converter picks IntWritable vs LongWritable per
     # key by magnitude, so keys must be uniform-magnitude across the whole
     # DataFrame (chunk_lines_partitionwise guarantees keys >= 2^32 →
-    # LongWritable throughout; chunk_lines yields small ordinals →
-    # IntWritable throughout; both are self-consistent).
+    # LongWritable throughout).
     chunks.rdd.map(lambda row: (row["key"], bytes(row["value"]))).saveAsSequenceFile(path)

@@ -33,3 +33,17 @@ def test_cli_overlap_and_drift(capsys):
                  "--sf-dir", "/root/testdata/sf0.001"]) == 0
     out = capsys.readouterr().out
     assert "ks_distance" in out
+
+
+
+def test_cli_advise_prints_findings_or_none(spark, sf_dir, capsys):
+    join = "FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey"
+    assert main(["advise", f"SELECT c.c_name, n.n_name {join}", "--sf-dir", sf_dir]) == 0
+    assert capsys.readouterr().out.strip() == "no advisories"
+
+    # a MERGE hint plans a shuffle join although nation fits the
+    # broadcast threshold: the advisor names the missed broadcast
+    q = f"SELECT /*+ MERGE(n) */ c.c_name, n.n_name {join}"
+    assert main(["advise", q, "--sf-dir", sf_dir]) == 0
+    out = capsys.readouterr().out
+    assert out.startswith("missed-broadcast: ") and "broadcast() hint" in out

@@ -19,7 +19,6 @@ from hadoop_stuff_spark.functions.codecs import (
 from hadoop_stuff_spark.operators.counts import chunked_record_count
 from hadoop_stuff_spark.operators.grep import grep
 from hadoop_stuff_spark.sources.chunks import (
-    chunk_lines,
     chunk_lines_partitionwise,
     explode_chunks,
 )
@@ -78,15 +77,6 @@ def test_count_invariance_across_chunk_sizes(spark, sf_dir):
         chunks = chunk_lines_partitionwise(docs, "text", chunk_size)
         [row] = chunked_record_count(chunks).collect()
         assert row.record_count == expected, f"chunk_size={chunk_size}"
-
-
-def test_ordered_chunker_preserves_content(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    chunks = chunk_lines(docs, "text", "doc_id", 64)
-    back = explode_chunks(chunks, "text").select("text")
-    orig = docs.select("text")
-    assert back.exceptAll(orig).count() == 0
-    assert orig.exceptAll(back).count() == 0
 
 
 def test_needle_grep_recall(spark):

@@ -22,7 +22,7 @@ def test_ingest_count_grep_roundtrip(spark, tmp_path):
     eng = Engine(spark)
     eng.ingest(str(src), store, chunk_size=200)
 
-    # count comes from chunk metadata (no decompress) and must be exact
+    # per-chunk line counts, summed: no record rows reach the shuffle
     assert eng.record_count(store).collect()[0]["record_count"] == 1000
 
     hits = eng.grep(store, "GHOST").collect()
@@ -51,63 +51,72 @@ def test_cli_parser_grammar():
     assert a.chunk_size == 200
 
 
-def test_engine_round3_facade(spark, sf_dir, tmp_path):
-    """chunk -> embed -> lint + quality gate through the facade."""
+def test_chunk_embed_lint_and_quality_gate(spark, sf_dir):
+    """chunk -> embed -> lint + quality gate, each through its operator."""
     import pyspark.sql.functions as F
 
     from hadoop_stuff_spark.catalog import load_table
-    from hadoop_stuff_spark.engine import Engine
+    from hadoop_stuff_spark.operators.chunking import chunk_documents
+    from hadoop_stuff_spark.operators.embedding import embed_text
+    from hadoop_stuff_spark.operators.quality import check_rows, enforce
+    from hadoop_stuff_spark.plans.lint import lint_plan
 
-    eng = Engine(spark)
     docs = load_table(spark, sf_dir, "documents").limit(20)
-    chunks = eng.chunk(docs, window=16, overlap=4)
-    embedded = eng.embed(chunks)
+    chunks = chunk_documents(docs, window=16, overlap=4)
+    embedded = embed_text(chunks)
     assert "embedding" in embedded.columns and embedded.count() >= 20
-    assert eng.lint(chunks) == []
+    assert lint_plan(chunks) == []
 
-    clean, quarantine = eng.enforce_quality(
-        docs, {"has_text": F.length("text") > 0}
-    )
+    clean, quarantine = enforce(docs, {"has_text": F.length("text") > 0})
     assert clean.count() + quarantine.count() == 20
 
-    rep = eng.check_quality(docs, {"has_text": F.length("text") > 0}).collect()
+    rep = check_rows(docs, {"has_text": F.length("text") > 0}).collect()
     assert rep[0].rule == "has_text" and rep[0].n_rows == 20
 
 
-def test_facade_round4_sketch_and_upsert_paths(spark, sf_dir, tmp_path):
-    """Smoke the round-4 facade surface end to end: theta overlap +
-    retention, KLL quantiles, CMS estimates, partition-scoped upsert."""
+def test_sketch_and_upsert_paths(spark, sf_dir, tmp_path):
+    """Theta overlap + retention, KLL quantiles, CMS estimates and the
+    partition-scoped upsert end to end, each through its operator."""
     import pyspark.sql.functions as F
 
     from hadoop_stuff_spark.catalog import load_table
-    from hadoop_stuff_spark.engine import Engine
+    from hadoop_stuff_spark.operators.sketches import (
+        build_user_cms,
+        build_user_theta_sketches,
+        build_value_kll_sketches,
+        cms_point_estimates,
+        kll_quantiles_by_type,
+        theta_audience_overlap,
+        theta_retention,
+    )
+    from hadoop_stuff_spark.sources.upsert import upsert_by_key
 
-    eng = Engine(spark)
     events = load_table(spark, sf_dir, "events")
 
-    th = eng.theta_sketches(events)
-    row = eng.audience_overlap(th, "purchase", "click").collect()[0]
+    th = build_user_theta_sketches(events)
+    row = theta_audience_overlap(th, "purchase", "click").collect()[0]
     assert row.n_both <= row.n_either
     d0, d1 = [
         str(r.d)
         for r in events.select(F.to_date("ts").alias("d")).distinct().orderBy("d").limit(2).collect()
     ]
-    ret = eng.retention(th, d0, d1).collect()[0]
+    ret = theta_retention(th, d0, d1).collect()[0]
     assert ret.n_retained + ret.n_churned == ret.n_day_a
 
-    q = eng.quantiles(eng.quantile_sketches(events)).collect()
+    q = kll_quantiles_by_type(build_value_kll_sketches(events)).collect()
     assert all(r.p50 <= r.p95 <= r.p99 for r in q)
 
-    cms = eng.frequency_sketches(events)
+    cms = build_user_cms(events)
     some_user = events.select("user_id").first().user_id
-    est = eng.frequency_estimates(cms, [some_user])
+    est = cms_point_estimates(spark, cms, [some_user])
     true = events.filter(F.col("user_id") == some_user).count()
     assert est[some_user] >= true
 
     path = str(tmp_path / "tbl")
     spark.createDataFrame([(1, 0, "a"), (2, 1, "b")], "k long, day int, v string") \
         .write.partitionBy("day").parquet(path)
-    stats = eng.upsert(
+    stats = upsert_by_key(
+        spark,
         path,
         spark.createDataFrame([(1, 0, "A"), (3, 0, "c")], "k long, day int, v string"),
         ["k"], ["day"],
@@ -115,22 +124,23 @@ def test_facade_round4_sketch_and_upsert_paths(spark, sf_dir, tmp_path):
     assert stats["rows_replaced"] == 1 and stats["rows_inserted"] == 1
 
 
-def test_facade_frequency_scoring_and_corpus_overlap(spark, sf_dir):
+def test_frequency_scoring_and_corpus_overlap(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from hadoop_stuff_spark.catalog import load_table
     from hadoop_stuff_spark.engine import Engine
+    from hadoop_stuff_spark.operators.sketches import build_user_cms, corpus_overlap
 
     eng = Engine(spark)
     events = load_table(spark, sf_dir, "events")
-    cms = eng.frequency_sketches(events)
+    cms = build_user_cms(events)
     probes = events.select("user_id").distinct().limit(20)
     scored = eng.score_by_frequency(cms, probes, "user_id")
     rows = scored.collect()
     assert all(r.est_count >= 1 for r in rows)  # every probed user occurred
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    rep = eng.corpus_overlap(
+    rep = corpus_overlap(
         docs.filter(F.col("doc_id") < 250), docs.filter(F.col("doc_id") >= 200)
     ).collect()[0]
     assert rep.n_shared >= 0 and rep.jaccard <= 1.0

@@ -66,8 +66,8 @@ def test_jl_block_fanout_covers_every_pair_once(spark, tmp_path):
     assert len(got) == 1 and got[0]["bin"] == 0
 
 
-def test_jl_block_row_guard_raises_loudly(spark, tmp_path, monkeypatch):
-    """The per-task row guard is the documented failure mode for an
+def test_jl_block_byte_guard_raises_loudly(spark, tmp_path, monkeypatch):
+    """The per-task byte guard is the documented failure mode for an
     oversized sample (ADVICE r12) — it must raise a ValueError naming
     the knobs, not an opaque executor OOM."""
     from hadoop_stuff_spark.operators import similarity
@@ -75,9 +75,22 @@ def test_jl_block_row_guard_raises_loudly(spark, tmp_path, monkeypatch):
     ids = _sampled_ids(30)
     sf = tmp_path / "sf_jl_guard"
     _write_embeddings(sf, ids)
-    monkeypatch.setattr(similarity, "_JL_MAX_BLOCK_ROWS", 2)
-    with pytest.raises(Exception, match="_JL_MAX_BLOCK_ROWS"):
+    monkeypatch.setattr(similarity, "_JL_MAX_BLOCK_BYTES", 1000)
+    with pytest.raises(Exception, match="_JL_MAX_BLOCK_BYTES"):
         similarity.n2_jl_projection_distortion(spark, str(sf)).collect()
+
+
+def test_jl_block_guard_bounds_bytes_not_rows():
+    """500k rows passed the former 2M-row cap, yet each cosine step
+    over them holds two 1024 × 500k float64 blocks (8 GB): the byte
+    guard refuses that task at its default cap."""
+    from hadoop_stuff_spark.operators import similarity
+
+    rows = 500_000
+    with pytest.raises(ValueError, match="_JL_MAX_BLOCK_BYTES"):
+        similarity._jl_block_guard(0, 1, rows, similarity._JL_MAX_BLOCK_BYTES)
+    # a block pair of the sf0.1 sample (~400 vectors) is far inside it
+    similarity._jl_block_guard(0, 1, 400, similarity._JL_MAX_BLOCK_BYTES)
 
 
 def test_bootstrap_session_is_ansi(spark):

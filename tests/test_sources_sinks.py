@@ -90,6 +90,10 @@ def test_write_read_chunked_roundtrip(spark, tmp_path):
     write_chunked(df, "line", path, chunk_size=64)
     back = read_chunked(spark, path, "line")
     assert back.count() == 500
+    # content, not just cardinality: the multisets agree both ways
+    lines = back.select("line")
+    assert lines.exceptAll(df).count() == 0
+    assert df.exceptAll(lines).count() == 0
 
 
 def test_write_chunked_partition_cols_end_to_end(spark, tmp_path):
