@@ -79,6 +79,17 @@ def test_count_invariance_across_chunk_sizes(spark, sf_dir):
         assert row.record_count == expected, f"chunk_size={chunk_size}"
 
 
+def test_ordered_chunker_preserves_content(spark, sf_dir):
+    """Chunking a doc_id-ordered input and decoding it back yields the
+    same multiset of lines, both ways."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").orderBy("doc_id")
+    chunks = chunk_lines_partitionwise(docs, "text", 64)
+    back = explode_chunks(chunks, "text").select("text")
+    orig = docs.select("text")
+    assert back.exceptAll(orig).count() == 0
+    assert orig.exceptAll(back).count() == 0
+
+
 def test_needle_grep_recall(spark):
     """Ghost-record needles (T8): plant k marker records among noise;
     grep through the full chunk→decode→explode pipeline must find exactly
