@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from hadoop_stuff_spark.operators.pairs import pair_counts
+
 
 def connected_components(
     pairs: DataFrame,
@@ -156,6 +158,20 @@ CLUSTERS_SQL = _clusters_sql()
 # PageRank over the co-purchase graph — fixed-iteration, fully declarative
 
 
+def _copurchase_edges(spark, sf_dir: str, min_support: int) -> DataFrame:
+    """(pa, pb), pa < pb: the part pairs co-ordered in at least
+    ``min_support`` orders — the co-purchase graph's undirected edges."""
+    from hadoop_stuff_spark.catalog import load_table, spread
+
+    li = spread(load_table(spark, sf_dir, "lineitem"))
+    op = li.select("l_orderkey", "l_partkey").distinct()
+    return (
+        pair_counts(op, "l_orderkey", "l_partkey", ("pa", "pb"), "n_orders")
+        .filter(F.col("n_orders") >= min_support)
+        .select("pa", "pb")
+    )
+
+
 def pagerank_copurchase_parts(
     spark, sf_dir: str, damping: float = 0.85, iters: int = 6, min_support: int = 2
 ) -> DataFrame:
@@ -186,24 +202,7 @@ def pagerank_copurchase_parts(
     Restricted to nodes with at least one qualifying edge (isolated
     parts have no co-purchase signal); with symmetric edges every node
     has out-degree >= 1, so there is no dangling-mass term."""
-    from hadoop_stuff_spark.catalog import load_table, spread
-
-    li = spread(load_table(spark, sf_dir, "lineitem"))
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = op.alias("a"), op.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .filter(F.col("n_orders") >= min_support)
-        .select("pa", "pb")
-    )
+    pairs = _copurchase_edges(spark, sf_dir, min_support)
     edges = pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
         pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
     )
@@ -326,22 +325,7 @@ def triangle_copurchase_parts(
     graphs: a hub of degree 10⁶ contributes 10¹² candidate wedges
     unoriented, but keeps almost no out-edges oriented. Three equi-join
     shuffles over O(E) rows total; no driver data movement."""
-    from hadoop_stuff_spark.catalog import load_table, spread
-
-    li = spread(load_table(spark, sf_dir, "lineitem"))
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = op.alias("a"), op.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .filter(F.col("n_orders") >= min_support)
-        .select("pa", "pb")
-    )
+    pairs = _copurchase_edges(spark, sf_dir, min_support)
     deg = (
         pairs.select(F.col("pa").alias("v"))
         .unionByName(pairs.select(F.col("pb").alias("v")))

@@ -30,6 +30,7 @@ from pyspark.sql.types import ArrayType, LongType
 from hadoop_stuff_spark.catalog import load_table, spread
 from hadoop_stuff_spark.functions import text as T
 from hadoop_stuff_spark.functions.text import fingerprint_md5, shingles
+from hadoop_stuff_spark.operators.pairs import drop_hot_keys, pair_counts, with_set_sizes
 from hadoop_stuff_spark.operators.sampling import (
     _BUDGET_MAX_EPOCHS,
     _BUDGET_TAU,
@@ -74,18 +75,12 @@ def drop_exact_duplicates(df: DataFrame, content_col: str = "text") -> DataFrame
 def _shingle_index(docs, n: int, max_doc_freq: int | None):
     """(doc_id, shingle) inverted-index relation with the hot-shingle
     guard applied: shingles whose document frequency exceeds
-    ``max_doc_freq`` are broadcast-anti-joined out BEFORE any self-join
-    (the df-cut that keeps docs-per-shingle — and so candidate pairs —
-    bounded; see ngram_jaccard_pairs for the semantics)."""
+    ``max_doc_freq`` are cut (:func:`pairs.drop_hot_keys`) BEFORE any
+    self-join, which keeps docs-per-shingle — and so candidate pairs —
+    bounded; see ngram_jaccard_pairs for the semantics."""
     sh = docs.select("doc_id", F.explode(shingles("text", n)).alias("shingle"))
     if max_doc_freq is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
+        sh = drop_hot_keys(sh, "shingle", max_doc_freq)
     return sh
 
 
@@ -109,9 +104,7 @@ def ngram_jaccard_pairs(
     reported value is the true Jaccard of the *filtered* shingle sets.
     Semantics change vs unguarded: a pair whose ONLY shared shingles are
     stop-shingles is not reported (by construction such pairs share only
-    corpus-ubiquitous text, so they are near-dup noise, not signal). The
-    hot set itself is tiny (only shingles above the cap), so the cut is a
-    broadcast anti-join — no extra shuffle of the shingle relation.
+    corpus-ubiquitous text, so they are near-dup noise, not signal).
     ``max_doc_freq=None`` disables the guard (exact verifier on
     pre-filtered candidate sets)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
@@ -132,26 +125,11 @@ def ngram_jaccard_pairs(
 
 def _pair_counts(sh) -> DataFrame:
     """Shared candidate-pair machinery of the exact shingle-set dedup
-    metrics (Jaccard, containment): per-doc filtered-set sizes + the
-    inverted-index self-join counting shared shingles per (doc_a <
-    doc_b) pair. Returns (doc_a, doc_b, n_common, size_a, size_b);
-    the caller applies its score. One place owns the join, so the
-    shingle width / df-cut / pair semantics cannot drift between
-    metrics."""
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("size_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("size_b"))
-    return common.join(sa, "doc_a").join(sb, "doc_b")
+    metrics (Jaccard, containment): the shingle-index pairs with their
+    shared-shingle count and both filtered-set sizes. Returns (doc_a,
+    doc_b, n_common, size_a, size_b); the caller applies its score."""
+    pair = ("doc_a", "doc_b")
+    return with_set_sizes(pair_counts(sh, "shingle", "doc_id", pair), sh, "doc_id", pair)
 
 
 # shared CTE block of the exact shingle-set metrics — the SQL mirror of
@@ -452,19 +430,11 @@ def minhash_candidates(
             )
         ).alias("bb"),
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    # distinct over two longs = plain HashAggregate (an array-carrying
-    # dropDuplicates would force SortAggregate)
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .distinct()
+    # the candidate set is the pair ids alone: an aggregate over two
+    # longs is a plain HashAggregate (an array-carrying dropDuplicates
+    # would force SortAggregate)
+    pairs = pair_counts(banded, ["band", "bucket"], "id", ("doc_a", "doc_b")).select(
+        "doc_a", "doc_b"
     )
     sa = sigs.select(F.col("id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("id").alias("doc_b"), F.col("sig").alias("sig_b"))
@@ -546,42 +516,21 @@ def embedding_cosine_dups_lsh(
     least one random-hyperplane sign-sketch bucket (same deterministic
     seeded hyperplanes as similarity.topk_cosine_lsh), then exact cosine
     re-rank + threshold. The self-join key is (band, bucket) — an equi-join
-    Catalyst hashes, never a cartesian product; at scale the shuffle carries
-    (bucket, id, vec) rows where vec is the only wide payload. Rows-only
-    check; recall vs :func:`embedding_cosine_dups` asserted in
-    tests/test_dedup.py."""
+    Catalyst hashes, never a cartesian product. Rows-only check; recall
+    vs :func:`embedding_cosine_dups` asserted in tests/test_dedup.py."""
     from hadoop_stuff_spark.functions.vectors import cosine
-    from hadoop_stuff_spark.operators.similarity import _hyperplanes, _sign_bucket
+    from hadoop_stuff_spark.operators.similarity import sign_bands
 
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    planes = _hyperplanes(bands * bits_per_band, seed=seed)
-    bucket_structs = [
-        F.struct(
-            F.lit(bnd).alias("band"),
-            _sign_bucket(
-                "embedding", planes[bnd * bits_per_band : (bnd + 1) * bits_per_band]
-            ).alias("bucket"),
-        )
-        for bnd in range(bands)
-    ]
     # band on ids only — the wide embedding must not be replicated
     # bands-way through the candidate shuffle; surviving pairs re-join it
     # once per side for the exact re-rank
     banded = emb.select(
         "vec_id",
-        F.explode(F.array(*bucket_structs)).alias("bb"),
+        F.explode(sign_bands("embedding", bands, bits_per_band, seed)).alias("bb"),
     ).select("vec_id", "bb.band", "bb.bucket")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
+    pairs = pair_counts(banded, ["band", "bucket"], "vec_id", ("vec_a", "vec_b")).select(
+        "vec_a", "vec_b"
     )
     ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"))
     eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"))
@@ -668,15 +617,10 @@ def banded_hamming_pairs(
     hashes (`multimodal.media_near_dups`) — one scale-proof blocking
     implementation, many signature sources.
 
-    The self-join references ``sigs`` from two branches; without
-    materialization each branch would recompute the signature UDF over
-    the whole corpus (caught by the plan linter on simhash), so the
-    frame is materialized here via an eager localCheckpoint — unlike
-    `persist()`, whose InMemoryRelation the session's cache manager
-    holds until explicitly unpersisted (the r3 ADVICE leak), checkpoint
-    blocks are released by the ContextCleaner as soon as the returned
-    frame is garbage-collected. At cluster scale, land signatures as a
-    table instead (the minhash store pattern, incremental.py)."""
+    ``sigs`` feeds the block join and both signature re-joins, so it is
+    materialized once by an eager localCheckpoint, as in
+    :func:`minhash_candidates` (without it each branch re-runs the
+    signature UDF over the corpus)."""
     if n_blocks is None:
         n_blocks = next(b for b in (2, 4, 8, 16) if b > max_hamming)
     if not (0 <= max_hamming < n_blocks <= 16):
@@ -685,18 +629,21 @@ def banded_hamming_pairs(
             f"for complete recall on 64-bit signatures; got "
             f"max_hamming={max_hamming}, n_blocks={n_blocks}"
         )
-    sigs = sigs.localCheckpoint(eager=True)
+    sigs = sigs.localCheckpoint(eager=True).select(
+        F.col(id_col).alias("id"), F.col(sig_col).alias("sig")
+    )
     width = 64 // n_blocks
     mask = (1 << width) - 1
+    # block on (block, key, id) only; surviving pairs re-join the
+    # signature once per side
     blocks = sigs.select(
-        F.col(id_col).alias("id"),
-        F.col(sig_col).alias("sig"),
+        "id",
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(i).alias("block"),
-                        F.shiftrightunsigned(F.col(sig_col), i * width)
+                        F.shiftrightunsigned(F.col("sig"), i * width)
                         .bitwiseAND(F.lit(mask))
                         .alias("key"),
                     )
@@ -704,27 +651,15 @@ def banded_hamming_pairs(
                 ]
             )
         ).alias("bk"),
-    ).select("id", "sig", "bk.block", "bk.key")
-    a = blocks.alias("a")
-    b = blocks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    ).select("id", "bk.block", "bk.key")
+    pairs = pair_counts(blocks, ["block", "key"], "id", ("id_a", "id_b")).select("id_a", "id_b")
+    sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
-        pairs.withColumn("hamming", hamming)
+        pairs.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
@@ -1487,8 +1422,7 @@ def per_source_near_dup_rate(
     with no near-dups carry an explicit 0, never a missing row (the
     length-PSI lesson).
 
-    Scale shape: the pair join is the guarded inverted-index self-join
-    (hot shingles df-cut BEFORE the join); the flagged-id set collapses
+    Scale shape: after the guarded pair join, the flagged-id set collapses
     to distinct doc_ids (ids only — text never reenters), one semi-join
     back to documents, and a |sources|-row aggregate joined to the
     |sources|-row totals."""

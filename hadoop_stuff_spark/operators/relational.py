@@ -23,6 +23,7 @@ from pyspark.sql.functions import broadcast
 
 from hadoop_stuff_spark.catalog import load_table
 from hadoop_stuff_spark.functions.money import sum_2dp_exact, sum_2dp_exact_sql
+from hadoop_stuff_spark.operators.pairs import drop_hot_keys, pair_counts, with_set_sizes
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1119,7 +1120,7 @@ def copurchase_pairs(
     popularity skew; filtering to frequent parts FIRST (one cheap
     pre-agg, broadcast back as a semi-join) cuts the join input before
     any pair is formed — the same monotonicity argument as A-priori's
-    candidate pruning. Pairs themselves aggregate map-side partial."""
+    candidate pruning."""
     li = _t(spark, sf_dir, "lineitem")
     # r13: pin the basket relation to an explicit orderkey-hash
     # partitioning wide enough for every core (same rationale as
@@ -1145,13 +1146,8 @@ def copurchase_pairs(
         .select("l_partkey")
     )
     pruned = baskets.join(broadcast(freq), "l_partkey")
-    a = pruned.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_a"))
-    b = pruned.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_b"))
     pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
+        pair_counts(pruned, "l_orderkey", "l_partkey", ("part_a", "part_b"), "n_orders")
         .orderBy(F.desc("n_orders"), "part_a", "part_b")
         .limit(top)
     )
@@ -1513,13 +1509,8 @@ def basket_affinity_lift(
         .localCheckpoint(eager=True)
     )
     pruned = baskets.join(broadcast(freq.select("l_partkey")), "l_partkey")
-    a = pruned.select("l_orderkey", F.col("l_partkey").alias("part_a"))
-    b = pruned.select("l_orderkey", F.col("l_partkey").alias("part_b"))
     pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
+        pair_counts(pruned, "l_orderkey", "l_partkey", ("part_a", "part_b"), "n_ab")
         .filter(F.col("n_ab") >= 2)
     )
     fa = freq.select(F.col("l_partkey").alias("part_a"), F.col("n_part").alias("n_a"))
@@ -1788,14 +1779,12 @@ def part_neighbor_jaccard(
     related NICHE parts that co-count ranking buries under universally
     popular ones.
 
-    Plan shape — the inverted-index discipline (the ngram-Jaccard
-    pattern): pairs form ONLY through the (customer → parts) index, so
-    two parts meet iff a customer bought both. The quadratic risk is the
-    whale customer (buys everything → |parts|² pairs); customers with
-    more than ``max_parts_per_customer`` distinct parts are cut from the
-    index FIRST via a tiny broadcast anti-join (the hot-shingle df-cut),
-    consistently removed from intersections AND union sizes, so the
-    reported value is the true Jaccard over the filtered index.
+    Plan shape — the ngram-Jaccard pattern, through the shared-key pair
+    builder (:mod:`operators.pairs`): two parts meet iff a customer
+    bought both. Whale customers (more than ``max_parts_per_customer``
+    parts, |parts|² pairs each) are cut from the index first, from
+    intersections and union sizes alike, so the value is the true
+    Jaccard over the filtered index.
 
     Exactness: counts are exact integers; Jaccard is one double
     division of int64 operands, rounded 6 dp; the top-k orders by
@@ -1825,40 +1814,20 @@ def part_neighbor_jaccard(
         .repartition(n_idx, "cust")
         .distinct()
     )
-    whales = (
-        idx.groupBy("cust")
-        .agg(F.count(F.lit(1)).alias("n_parts"))
-        .filter(F.col("n_parts") > max_parts_per_customer)
-        .select("cust")
-    )
-    idx = idx.join(broadcast(whales), "cust", "left_anti")
-    sizes = idx.groupBy("part").agg(F.count(F.lit(1)).alias("n_cust"))
-    a = idx.select("cust", F.col("part").alias("part_a"))
-    b = idx.select("cust", F.col("part").alias("part_b"))
-    common = (
-        a.join(b, "cust")
-        .filter(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .filter(F.col("n_common") >= min_common)
-    )
-    sa = sizes.select(F.col("part").alias("part_a"), F.col("n_cust").alias("n_a"))
-    sb = sizes.select(F.col("part").alias("part_b"), F.col("n_cust").alias("n_b"))
-    out = (
-        common.join(sa, "part_a")
-        .join(sb, "part_b")
-        .select(
-            "part_a",
-            "part_b",
-            "n_common",
-            "n_a",
-            "n_b",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-                6,
-            ).alias("jaccard"),
-        )
+    idx = drop_hot_keys(idx, "cust", max_parts_per_customer)
+    pair = ("part_a", "part_b")
+    common = pair_counts(idx, "cust", "part", pair).filter(F.col("n_common") >= min_common)
+    out = with_set_sizes(common, idx, "part", pair, ("n_a", "n_b")).select(
+        "part_a",
+        "part_b",
+        "n_common",
+        "n_a",
+        "n_b",
+        F.round(
+            F.col("n_common").cast("double")
+            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
+            6,
+        ).alias("jaccard"),
     )
     return out.orderBy(F.desc("jaccard"), "part_a", "part_b").limit(top)
 

@@ -17,6 +17,8 @@ Two paths:
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -93,16 +95,15 @@ WHERE rk <= 10
 """
 
 
-def _hyperplanes(n_planes: int, dim: int = DIM, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim))
+def sign_bands(vec_col, bands: int, bits_per_band: int, seed: int) -> "F.Column":
+    """The ``bands`` (band, bucket) structs of one vector, to explode into
+    a band-bucket index. A band's bucket packs the signs of <vec, plane>
+    over its ``bits_per_band`` seeded gaussian hyperplanes (bit i set iff
+    the dot with plane i is positive): a pure expression over literal
+    plane coefficients."""
+    planes = np.random.default_rng(seed).standard_normal((bands * bits_per_band, DIM))
 
-
-def _sign_bucket(vec_col, planes: np.ndarray) -> "F.Column":
-    """LSH bucket id = bit-packed signs of <vec, plane_i> for each plane of
-    one band. Pure expression over literal plane coefficients."""
-    bits = []
-    for i, plane in enumerate(planes):
+    def bit(i: int, plane: np.ndarray) -> "F.Column":
         d = F.aggregate(
             F.zip_with(
                 as_double(vec_col),
@@ -112,11 +113,15 @@ def _sign_bucket(vec_col, planes: np.ndarray) -> "F.Column":
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
-        bits.append(F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+        return F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
+
+    def bucket(b: int) -> "F.Column":
+        band_planes = planes[b * bits_per_band : (b + 1) * bits_per_band]
+        return reduce(lambda x, y: x + y, [bit(i, pl) for i, pl in enumerate(band_planes)])
+
+    return F.array(
+        *[F.struct(F.lit(b).alias("band"), bucket(b).alias("bucket")) for b in range(bands)]
+    )
 
 
 def topk_cosine_lsh(
@@ -139,22 +144,12 @@ def topk_cosine_lsh(
     On real clustered embeddings (neighbor cosine ≥ 0.7), fewer/wider bands
     (e.g. 8 × 8) prune far harder at the same recall — expose both knobs."""
     emb = load_table(spark, sf_dir, "embeddings")
-    planes = _hyperplanes(bands * bits_per_band, seed=seed)
 
     def with_buckets(df: DataFrame, vec: str, id_alias: str) -> DataFrame:
-        bucket_structs = [
-            F.struct(
-                F.lit(b).alias("band"),
-                _sign_bucket(vec, planes[b * bits_per_band : (b + 1) * bits_per_band]).alias(
-                    "bucket"
-                ),
-            )
-            for b in range(bands)
-        ]
         return df.select(
             F.col("vec_id").alias(id_alias),
             F.col(vec).alias(f"{id_alias}_vec"),
-            F.explode(F.array(*bucket_structs)).alias("bb"),
+            F.explode(sign_bands(vec, bands, bits_per_band, seed)).alias("bb"),
         ).select(id_alias, f"{id_alias}_vec", "bb.band", "bb.bucket")
 
     queries = broadcast(

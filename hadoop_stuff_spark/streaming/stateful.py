@@ -288,7 +288,16 @@ def dedup_first_seen_ttl(
     Reference provenance: the reference's tail pointer state
     (TailF.java:110-149) dies with the JVM — its "TTL" was process
     lifetime, involuntarily. Here eviction is explicit, checkpointed, and
-    per-key."""
+    per-key.
+
+    Under ``trigger(availableNow=True)`` the query never ends by itself:
+    a processing-time timeout can fire with no new input, so Spark's
+    stateful operator (``FlatMapGroupsWithStateExecBase.
+    shouldRunAnotherBatch``, Spark 4.1) always asks for another batch and
+    the stream keeps running empty batches; ``processAllAvailable()``
+    never returns for it either. Stop it once a batch without input has
+    run after the batches with input: availableNow fixes its input at
+    start, so the input is done."""
     renamed = stream.selectExpr(f"{key_col} AS key", f"{value_col} AS value")
     return renamed.groupBy("key").applyInPandasWithState(
         _dedup_ttl_fn_factory(ttl_ms),

@@ -19,3 +19,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def no_streaming_query_left():
+    """A test must end every streaming query it starts: one left running
+    keeps firing batches beside the tests that follow. Such queries are
+    stopped here and the test fails, naming them."""
+    yield
+    from pyspark.sql import SparkSession
+
+    session = SparkSession.getActiveSession()
+    left = session.streams.active if session is not None else []
+    for q in left:
+        q.stop()
+    if left:
+        pytest.fail(
+            "test left streaming queries running: "
+            + ", ".join(q.name or str(q.id) for q in left)
+        )
+

@@ -3,6 +3,7 @@ survives across micro-batch runs via the checkpoint, duplicates are dropped
 stream-lifetime-wide, running counters accumulate."""
 
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -212,6 +213,31 @@ def test_mg_merge_guarantee_property():
             assert item in sketch, (item, cnt)
 
 
+def _stop_when_drained(q, timeout_s: float = 300) -> None:
+    """Stop an availableNow query with a processing-time timeout once its
+    input is processed. Such a query never terminates by itself, and
+    ``processAllAvailable()`` never returns for it either (see
+    dedup_first_seen_ttl): it runs empty batches forever. availableNow
+    fixes its input at start, so the first batch without input AFTER a
+    batch with input means the input is done. (A restart may first replay
+    the empty batch the previous run was stopped in; that one does not
+    count. Every run here has new input.)"""
+
+    def drained() -> bool:
+        rows = [p["numInputRows"] for p in q.recentProgress]
+        first = next((i for i, n in enumerate(rows) if n > 0), None)
+        return first is not None and 0 in rows[first + 1 :]
+
+    deadline = time.monotonic() + timeout_s
+    try:
+        while q.isActive and not drained():
+            assert time.monotonic() < deadline, "query did not drain its input"
+            time.sleep(0.1)
+    finally:
+        q.stop()
+    assert q.exception() is None, q.exception()
+
+
 def test_dedup_ttl_suppresses_within_window(spark, tmp_path):
     """Within the TTL, duplicate keys are dropped exactly like
     dedup_first_seen (long TTL → no eviction during the test; the TTL is
@@ -239,7 +265,7 @@ def test_dedup_ttl_suppresses_within_window(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _stop_when_drained(q)
 
     run()
     got = sorted(r.key for r in spark.read.parquet(outdir).collect())
@@ -255,8 +281,6 @@ def test_dedup_ttl_evicts_idle_keys(spark, tmp_path):
     """After the TTL passes with no arrivals, the key's state is evicted
     and its content is first-seen again — bounded state on an infinite
     stream."""
-    import time as _time
-
     from hadoop_stuff_spark.streaming.stateful import (
         dedup_first_seen_ttl,
         exactly_once_parquet_sink,
@@ -278,11 +302,11 @@ def test_dedup_ttl_evicts_idle_keys(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _stop_when_drained(q)
 
     run()
     assert [r.key for r in spark.read.parquet(outdir).collect()] == ["k1"]
-    _time.sleep(3)  # > ttl while idle
+    time.sleep(3)  # > ttl while idle
     # two more batches: the first fires the timeout (evicts), after which
     # k1 re-arrives as new
     _write_log(logdir, "b1.txt", ["other x"])
