@@ -11,25 +11,16 @@ import os
 import sys
 from collections.abc import Callable
 
-from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
 
+from hadoop_stuff_spark.session import put_root_on_worker_path  # noqa: E402
 
-def _with_root(path: str | None) -> str:
-    return os.pathsep.join(p for p in (ROOT, path) if p)
-
-
-# Python workers unpickle UDFs that import the package, so they need the
-# root on their PYTHONPATH whatever the working directory: a session
-# started after this import inherits it through the JVM's environment, a
-# running one through its context's worker environment.
-os.environ["PYTHONPATH"] = _with_root(os.environ.get("PYTHONPATH"))
-if SparkContext._active_spark_context is not None:
-    _env = SparkContext._active_spark_context.environment
-    _env["PYTHONPATH"] = _with_root(_env.get("PYTHONPATH"))
+# Python workers unpickle UDFs that import the package, whatever the
+# working directory
+put_root_on_worker_path()
 
 from hadoop_stuff_spark.plans import registry  # noqa: E402
 from hadoop_stuff_spark.plans.flagship import flagship  # noqa: E402

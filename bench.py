@@ -157,7 +157,7 @@ def main() -> None:
     # on every run of one. Single runs on a shared host swing 2-3x;
     # the median is the signal and every raw run goes to the detail file.
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    noise_floor = {"before": _noise_probe(spark)}
+    noise_floor = {"before": _noise_probe(spark), "python_before": _python_floor(spark)}
     runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
     for i in range(n_passes):
         for name in HEADLINE:
@@ -172,6 +172,7 @@ def main() -> None:
         print(f"# {name}: median {timings[name]:.3f}s runs {r}", file=sys.stderr)
 
     noise_floor["after"] = _noise_probe(spark)
+    noise_floor["python_after"] = _python_floor(spark)
     print(f"# noise floor: {noise_floor}", file=sys.stderr)
 
     # detail-only blocks: a failure here must never cost the round's
@@ -250,6 +251,16 @@ def _contract_line(timings: dict[str, float], sf: float) -> dict:
     }
 
 
+def _probe(action) -> dict:
+    """Wall seconds of ``action`` timed 3x, with their median."""
+    runs = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        action()
+        runs.append(round(time.perf_counter() - t0, 4))
+    return {"runs": runs, "median": sorted(runs)[1]}
+
+
 def _noise_probe(spark) -> dict:
     """Machine-contention calibration: a fixed reference workload (pure
     JVM aggregate over a generated range — no I/O, no Python workers,
@@ -258,13 +269,34 @@ def _noise_probe(spark) -> dict:
     relative to this floor: on this co-tenant box identical code swings
     2-3x between runs, and the probe tells a reader which rounds were
     measured hot."""
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        # bit_xor over xxhash64 — real per-row work, no ANSI sum overflow
-        spark.range(50_000_000).selectExpr("bit_xor(xxhash64(id)) AS s").collect()
-        runs.append(round(time.perf_counter() - t0, 4))
-    return {"runs": runs, "median": sorted(runs)[1]}
+    # bit_xor over xxhash64 — real per-row work, no ANSI sum overflow.
+    # A fresh DataFrame per run: a second collect of one DataFrame reuses
+    # its AQE plan's materialized shuffle and skips the scan.
+    return _probe(
+        lambda: spark.range(50_000_000).selectExpr("bit_xor(xxhash64(id)) AS s").collect()
+    )
+
+
+def _python_floor_frame(spark):
+    """One row in one partition through an Arrow pandas UDF that returns
+    its input: one Python task whose UDF does no work."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def _same(s):
+        return s
+
+    return spark.range(0, 1, numPartitions=1).select(_same("id").alias("id"))
+
+
+def _python_floor(spark) -> dict:
+    """The Arrow/Python boundary's fixed cost: a noop write of
+    `_python_floor_frame`, timed 3x before and after the headline loop
+    next to the JVM noise probe. It is one job of one Python task, so it
+    reads what every Python task pays before its UDF runs (worker setup,
+    Arrow stream open and close) plus one job's scheduling."""
+    df = _python_floor_frame(spark)
+    return _probe(lambda: df.write.format("noop").mode("overwrite").save())
 
 
 def _current_round(repo: str) -> int:

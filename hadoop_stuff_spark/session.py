@@ -12,6 +12,13 @@ once, declaratively, and AQE re-plans at runtime:
   StringEvaluationTest.java:53-73; pandas_udf is our version of the win).
 - maxPartitionBytes 128 MiB — the reference's dfs.block.size sweet spot
   (IngestTest.java:66).
+- Python workers fork from the engine's own daemon (``pydaemon``). Stock
+  PySpark re-reads the directory of ``pyspark.zip`` and of the spark-core
+  jar at the start of every Python task, ~0.2-0.3 s on Python 3.11 before
+  any Arrow UDF runs; the daemon re-reads an archive only when it changed.
+  The daemon module must import on the workers from any working
+  directory, so the repo root goes on their PYTHONPATH
+  (``put_root_on_worker_path``, the same rule the driver contract uses).
 
 At 100 TB on a real cluster the same session conf holds; only
 executor counts/memory (cluster-manager side) change.
@@ -21,7 +28,30 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _with_root(path: str | None) -> str:
+    if path and ROOT in path.split(os.pathsep):
+        return path
+    return os.pathsep.join(p for p in (ROOT, path) if p)
+
+
+def put_root_on_worker_path() -> None:
+    """Put the repo root on the Python workers' PYTHONPATH.
+
+    Workers import the package (UDFs unpickle against it, and engine
+    sessions fork them from ``hadoop_stuff_spark.pydaemon``) whatever the
+    working directory: a session started after this call inherits the root
+    through the JVM's environment, a running one through its context's
+    worker environment."""
+    os.environ["PYTHONPATH"] = _with_root(os.environ.get("PYTHONPATH"))
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        sc.environment["PYTHONPATH"] = _with_root(sc.environment.get("PYTHONPATH"))
 
 
 def _cpus() -> int:
@@ -42,6 +72,7 @@ def get_spark(
     Safe to call repeatedly — Spark returns the existing session; conf that
     can only be set at JVM start (driver memory) is ignored on reuse.
     """
+    put_root_on_worker_path()
     cpus = _cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(8, cpus)
@@ -66,6 +97,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "hadoop_stuff_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,6 +1,8 @@
-"""Contract checks for bench.py that need no Spark job: the headline names
-resolve before any warm-up, the >= 2 s extra-runs rule, the shape of the
-stdout contract line, and the curate breakdown's link to the registry."""
+"""Contract checks for bench.py: the headline names resolve before any
+warm-up, the >= 2 s extra-runs rule, the shape of the stdout contract
+line, the curate breakdown's link to the registry, and the two floors
+timed beside the headline (the JVM noise probe and the Python-boundary
+floor, which is the only check here that runs Spark jobs)."""
 
 import json
 
@@ -54,3 +56,21 @@ def test_curate_breakdown_and_registry_query_share_one_curation(monkeypatch):
     assert [c[:2] for c in calls] == [("spark", "sf")] * 2
     assert calls[0][2] is None
     assert isinstance(calls[1][2], QueryLog)
+
+
+def test_probe_times_three_runs_and_reports_their_median(monkeypatch):
+    calls = []
+    ticks = iter([0.0, 0.5, 1.0, 1.1, 2.0, 2.3])
+    monkeypatch.setattr(bench.time, "perf_counter", lambda: next(ticks))
+    assert bench._probe(lambda: calls.append(1)) == {"runs": [0.5, 0.1, 0.3], "median": 0.3}
+    assert len(calls) == 3
+
+
+def test_python_floor_is_one_arrow_udf_task(spark):
+    df = bench._python_floor_frame(spark)
+    assert df.rdd.getNumPartitions() == 1
+    assert "ArrowEvalPython" in df._jdf.queryExecution().executedPlan().toString()
+    assert [r.id for r in df.collect()] == [0]
+    floor = bench._python_floor(spark)
+    assert len(floor["runs"]) == 3 and all(r > 0 for r in floor["runs"])
+    assert floor["median"] == sorted(floor["runs"])[1]
