@@ -18,9 +18,8 @@ replacing each task invocation with the corresponding method here (or the
 Besides those entry points (plus `grep_count` and `grep_to_wiretap`) the
 class holds only composites that hide a decision: `curate` (the stage
 order and its checkpoint barriers), `audit` (six reports and which error
-it tolerates), `sketch_corpus_for_prescreen` (the normalization the
-curate gate's proof needs) and `score_by_frequency` (the estimator picked
-by key type). Every other operator is called directly from its module
+it tolerates) and `score_by_frequency` (the estimator picked by key
+type). Every other operator is called directly from its module
 (`operators/`, `plans/`, `sources/`), with that module's defaults.
 
 No remote-user impersonation / namenode / jobtracker / jar-path plumbing
@@ -44,7 +43,6 @@ from hadoop_stuff_spark.streaming.wiretap import (
     parse_subscription,
     route_and_deliver_batch,
     start_wiretap,
-    subscriptions_df,
 )
 
 
@@ -130,7 +128,7 @@ class Engine:
         subs = [parse_subscription(s, i + 1) for i, s in enumerate(subscriptions)]
         return start_wiretap(
             tail_stream(self.spark, log_dir),
-            get_subscriptions=lambda s: subscriptions_df(s, subs),
+            get_subscriptions=lambda: subs,
             deliver=deliver,
             checkpoint_dir=checkpoint_dir,
             trigger_available_now=available_now,
@@ -219,25 +217,6 @@ class Engine:
             )
         return out
 
-    def sketch_corpus_for_prescreen(
-        self, docs: DataFrame, text_col: str = "text", n: int = 3, lg_k: int = 20
-    ) -> bytes:
-        """Build (one slice of) the corpus shingle sketch the curate
-        pre-screen can consume with ZERO corpus scans at curate time:
-        applies the SAME `clean_text` normalization `curate` applies
-        before shingling — the gate's superset proof requires the
-        maintained sketch to cover the CLEANED text's shingles — then
-        sketches the word n-gram shingles. Blobs from corpus slices
-        (per ingest batch) union losslessly via
-        `operators.sketches.merge_theta_blobs`; pass the folded blob as
-        ``curate(prescreen=True, prescreen_corpus_blob=blob)``."""
-        from hadoop_stuff_spark.operators.cleaning import clean_text
-        from hadoop_stuff_spark.operators.sketches import sketch_shingles_blob
-
-        return sketch_shingles_blob(
-            docs.withColumn(text_col, clean_text(text_col)), text_col, n, lg_k
-        )
-
     def score_by_frequency(
         self, sketches: DataFrame, probes: DataFrame, key_col: str,
         out_col: str = "est_count",
@@ -267,8 +246,6 @@ class Engine:
         max_contamination: float = 0.05,
         max_dup_word_frac: float = 0.9,
         weights: dict[str, float] | None = None,
-        prescreen: bool = False,
-        prescreen_corpus_blob: bytes | None = None,
         qlog=None,
     ) -> DataFrame:
         """One-call LLM training-data curation — the certified pipeline
@@ -287,22 +264,6 @@ class Engine:
         is the scale-path operator (no all-pairs anywhere); determinism
         is hash-based throughout, so re-running on the same input yields
         the same corpus.
-
-        ``prescreen=True`` (VERDICT r5 #7) runs the theta shingle
-        disjointness gate (`operators.sketches.shingle_overlap_gate`)
-        before the contamination stage and SKIPS the shingle join when
-        corpus×holdout shingle overlap is provably zero (both sketches
-        exact-mode) — output is byte-identical either way, because the
-        skipped join is a certified no-op. Off by default: the gate
-        costs one extra corpus scan — UNLESS ``prescreen_corpus_blob``
-        carries an incrementally maintained sketch (built per corpus
-        slice with `sketch_corpus_for_prescreen`, folded with
-        `operators.sketches.merge_theta_blobs`), which makes the gate
-        zero-scan. Soundness of the blob path: the blob sketches the
-        CLEANED full corpus's shingles, a superset of the post-dedup
-        survivors' shingles, so proven disjointness transfers; a stale
-        blob missing newly-added docs breaks that superset premise, so
-        only pass blobs covering every doc in ``docs``.
 
         ``qlog`` (VERDICT r5 #6): pass a `plans.qlog.QueryLog` to make
         the composite attributable: each stage then runs under a timed
@@ -396,35 +357,17 @@ class Engine:
 
         survivors = stage("near_dedup", build_near_dedup, fan_out=holdout is not None)
         if holdout is not None:
-            skip_contamination = False
-            if prescreen:
-                from hadoop_stuff_spark.operators.sketches import (
-                    shingle_overlap_gate,
+            base = survivors
+
+            def build_contamination() -> DataFrame:
+                contaminated = (
+                    overlap_report(base, holdout, text_col, id_col, n=3)
+                    .filter(F.col("contam_frac") > max_contamination)
+                    .select(id_col)
                 )
+                return base.join(contaminated, id_col, "left_anti")
 
-                # survivors is a fan-out stage, already materialized,
-                # so the gate's sketch scan never re-executes the
-                # upstream pipeline
-                gate = shingle_overlap_gate(
-                    survivors,
-                    holdout,
-                    text_col,
-                    n=3,
-                    corpus_blob=prescreen_corpus_blob,
-                )
-                skip_contamination = gate["provably_disjoint"]
-            if not skip_contamination:
-                base = survivors
-
-                def build_contamination() -> DataFrame:
-                    contaminated = (
-                        overlap_report(base, holdout, text_col, id_col, n=3)
-                        .filter(F.col("contam_frac") > max_contamination)
-                        .select(id_col)
-                    )
-                    return base.join(contaminated, id_col, "left_anti")
-
-                survivors = stage("contamination", build_contamination)
+            survivors = stage("contamination", build_contamination)
         toks = T.tokens(text_col)
         gated = stage(
             "repetition_gate",

@@ -519,125 +519,6 @@ def corpus_overlap(
     )
 
 
-def theta_blob_is_exact(blob) -> bool:
-    """True iff a serialized DataSketches compact theta sketch is in EXACT
-    mode — theta == 1.0, every distinct hash retained, estimate == exact
-    distinct count. Read from the preamble (format probed empirically on
-    this Spark's `theta_sketch_agg` output; test pins it): serVer 4 emits
-    preLongs 1 below capacity and preLongs 2 (theta long present) when
-    estimating; serVer 3 appears for the empty/single-item forms
-    (preLongs 1) and legacy exact compacts (preLongs 2), with preLongs 3
-    = estimating. Unknown future formats return False — the caller may
-    only use True as PROOF, so never claim it for bytes we can't read."""
-    b = bytes(blob)
-    if len(b) < 2:
-        return False
-    pre, ver = b[0] & 0x3F, b[1]
-    if ver == 4:
-        return pre == 1
-    if ver == 3:
-        return pre <= 2
-    return False
-
-
-def sketch_shingles_blob(
-    docs: DataFrame, text_col: str = "text", n: int = 3, lg_k: int = 20
-) -> bytes:
-    """One theta sketch blob over the word n-gram shingles of ``docs`` —
-    the mergeable unit of the decontamination pre-screen. Sketch blobs
-    from corpus slices (e.g. one per ingest batch) union losslessly via
-    :func:`merge_theta_blobs`, so a 100 TB corpus can maintain its
-    shingle sketch incrementally and never rescan for the gate. Unions
-    that exceed 2^lg_k distinct shingles leave exact mode, and
-    `theta_blob_is_exact` on the merged blob then (correctly) withholds
-    proof — staleness or overflow can never produce a false skip."""
-    from hadoop_stuff_spark.functions.text import shingles
-
-    return bytes(
-        docs.select(F.explode(shingles(text_col, n)).alias("sh"))
-        .agg(F.theta_sketch_agg("sh", F.lit(lg_k)).alias("s"))
-        .collect()[0]
-        .s
-    )
-
-
-def merge_theta_blobs(spark: SparkSession, blobs: list[bytes], lg_k: int = 20) -> bytes:
-    """Union serialized theta sketches driver-side (one 1-row JVM job;
-    nested `theta_union` over literals). Exactness composes: a union of
-    exact sketches below capacity is itself exact — PROVIDED the union
-    operator's own capacity matches: ``lg_k`` must be >= the blobs'
-    build lg_k (default matches `sketch_shingles_blob`). Left to its
-    default, `theta_union` caps at 2^12 entries and would silently
-    downsample a >4096-entry union out of exact mode, permanently
-    disabling the provable fast path (caught by code review; pinned by
-    a capacity-scale test)."""
-    import functools
-
-    if not blobs:
-        raise ValueError("merge_theta_blobs needs at least one blob")
-    if len(blobs) == 1:
-        return bytes(blobs[0])
-    merged = functools.reduce(
-        lambda a, b: F.theta_union(a, b, F.lit(lg_k)),
-        [F.lit(bytearray(bytes(b))) for b in blobs],
-    )
-    return bytes(spark.range(1).select(merged.alias("s")).collect()[0].s)
-
-
-def shingle_overlap_gate(
-    corpus: DataFrame,
-    holdout: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    lg_k: int = 20,
-    corpus_blob: bytes | None = None,
-    holdout_blob: bytes | None = None,
-) -> dict:
-    """Decontamination pre-screen (VERDICT r5 #7): theta sketches over the
-    word n-gram SHINGLES of each side. When BOTH sketches are in exact
-    mode (provable from the blob — `theta_blob_is_exact`) and their
-    intersection estimate is 0, there is provably no shared shingle:
-    exact-mode sketches retain every distinct hash, a shared shingle
-    always hashes identically on both sides, and a 64-bit collision can
-    only INFLATE the intersection (fail toward running the filter). The
-    caller may then skip the contamination join as a certified no-op.
-    In estimation mode (corpus shingles > 2^lg_k) the gate never claims
-    proof — `provably_disjoint` is False and the join must run; for
-    100 TB corpora pass ``corpus_blob`` from an incrementally-maintained
-    sketch table (streaming/matview.py) so the gate costs zero corpus
-    scans, or accept one scan-and-sketch pass here. All driver traffic
-    is two sketch blobs (≤ ~8 MB at lg_k=20) and one scalar row."""
-    spark = corpus.sparkSession
-    ca = (
-        bytes(corpus_blob)
-        if corpus_blob is not None
-        else sketch_shingles_blob(corpus, text_col, n, lg_k)
-    )
-    hb = (
-        bytes(holdout_blob)
-        if holdout_blob is not None
-        else sketch_shingles_blob(holdout, text_col, n, lg_k)
-    )
-    est = (
-        spark.range(1)
-        .select(
-            F.theta_sketch_estimate(
-                F.theta_intersection(F.lit(bytearray(ca)), F.lit(bytearray(hb)))
-            ).alias("i")
-        )
-        .collect()[0]
-        .i
-    )
-    corpus_exact = theta_blob_is_exact(ca)
-    holdout_exact = theta_blob_is_exact(hb)
-    return {
-        "est_shared": float(est),
-        "corpus_exact": corpus_exact,
-        "holdout_exact": holdout_exact,
-        "provably_disjoint": bool(corpus_exact and holdout_exact and est == 0),
-    }
-
-
 # -- string keys ------------------------------------------------------------
 #
 # Spark's CMS hashes string items with double hashing over Murmur3_x86_32

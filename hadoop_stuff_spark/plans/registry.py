@@ -51,7 +51,7 @@ from hadoop_stuff_spark.operators import (
 from hadoop_stuff_spark.operators.counts import chunked_record_count
 from hadoop_stuff_spark.plans.flagship import FLAGSHIP_PATTERN, flagship
 from hadoop_stuff_spark.sources.chunks import chunk_lines_partitionwise, explode_chunks
-from hadoop_stuff_spark.streaming.wiretap import subscriptions_df, wiretap_batch_shape
+from hadoop_stuff_spark.streaming.wiretap import wiretap_batch_shape
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -161,22 +161,19 @@ FROM events GROUP BY event_type
 
 def st2_st3_wiretap_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST2/ST3 as a batch query: the exact per-micro-batch fan-out the
-    streaming wiretap runs (broadcast subscriptions × rlike multicast;
-    RealTimeCdrWiretap.java:42-72). A record matching several subscriptions
-    is delivered to each."""
+    streaming wiretap runs (literal rlike multicast over the subscription
+    rows; RealTimeCdrWiretap.java:42-72). A record matching several
+    subscriptions is delivered to each."""
     ev = spread(load_table(spark, sf_dir, "events"))
     records = ev.select(
         "event_id",
         F.concat_ws(" ", F.col("event_type"), F.col("props")).alias("value"),
     )
-    subs = subscriptions_df(
-        spark,
-        [
-            {"sub_id": 1, "regex": "error", "host": "127.0.0.1", "port": 9101},
-            {"sub_id": 2, "regex": '"k": 9[0-9]', "host": "127.0.0.1", "port": 9102},
-            {"sub_id": 3, "regex": 'purchase.*"k": [0-4]$', "host": "127.0.0.1", "port": 9103},
-        ],
-    )
+    subs = [
+        {"sub_id": 1, "regex": "error", "host": "127.0.0.1", "port": 9101},
+        {"sub_id": 2, "regex": '"k": 9[0-9]', "host": "127.0.0.1", "port": 9102},
+        {"sub_id": 3, "regex": 'purchase.*"k": [0-4]$', "host": "127.0.0.1", "port": 9103},
+    ]
     return wiretap_batch_shape(records, subs, "value", keep=["event_id"])
 
 

@@ -170,84 +170,6 @@ def _merge_only_sink(sketch_path: str, work_dir: str, build, merge_agg):
     return sink
 
 
-def streaming_shingle_sketch_sink(
-    blob_path: str,
-    work_dir: str,
-    text_col: str = "text",
-    n: int = 3,
-    lg_k: int = 20,
-):
-    """Incremental maintenance of the curate pre-screen's CORPUS SHINGLE
-    sketch (the zero-scan gate `engine.Engine.curate(prescreen=True,
-    prescreen_corpus_blob=...)` consumes): as document slices stream in,
-    each micro-batch is sketched with the SAME normalization curate
-    applies (`Engine.sketch_corpus_for_prescreen` — the gate's superset
-    proof requires the maintained sketch to cover the CLEANED text's
-    shingles) and theta-unioned into one persisted blob. At curate time
-    the gate then costs ZERO corpus scans: `read_corpus_blob` hands back
-    the folded blob and the contamination join is skipped whenever the
-    corpus×holdout shingle intersection is provably empty.
-
-    Same replay protocol as the other merge-only sinks: deltas land
-    idempotently by batch_id; the folded blob and its manifest commit in
-    one atomic pointer replace. Theta union is NOT idempotent-safe in
-    estimation mode (re-folding a batch can re-randomize the retained
-    sample), and in exact mode a re-fold is harmless but the manifest
-    skip keeps both modes exactly-once. Unions past 2^lg_k distinct
-    shingles leave exact mode — the gate then (correctly) withholds
-    proof and curate falls back to running the join, so staleness of
-    MODE can cost speed but never correctness. Staleness of CONTENT can:
-    the blob must cover every doc later passed to curate (engine.py
-    docstring), which this sink guarantees as long as curate's corpus is
-    the union of the folded batches."""
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        from hadoop_stuff_spark.engine import Engine
-        from hadoop_stuff_spark.operators.sketches import merge_theta_blobs
-
-        spark = batch.sparkSession
-        delta_path = os.path.join(work_dir, "deltas", f"batch_id={batch_id}")
-        batch.write.mode("overwrite").parquet(delta_path)
-        bid = str(batch_id)
-        if bid in folded_batches(blob_path):
-            return
-        delta_blob = Engine(spark).sketch_corpus_for_prescreen(
-            spark.read.parquet(delta_path), text_col=text_col, n=n, lg_k=lg_k
-        )
-        if rollup_exists(blob_path):
-            merged = merge_theta_blobs(
-                spark, [read_corpus_blob(blob_path), delta_blob], lg_k=lg_k
-            )
-            folded = folded_batches(blob_path) | {bid}
-        else:
-            merged, folded = delta_blob, {bid}
-
-        def write_blob(vdir: str) -> None:
-            # driver-side file write: the blob is control-plane-sized
-            # (≤ ~8 MB at lg_k=20) and a one-row Spark parquet write
-            # costs ~5 s of job overhead (measured for qlog, PLAN_r7)
-            os.makedirs(vdir, exist_ok=True)
-            with open(os.path.join(vdir, "corpus_theta.bin"), "wb") as f:
-                f.write(merged)
-
-        _swap_in(blob_path, write_blob, sorted(folded))
-
-    return sink
-
-
-def read_corpus_blob(blob_path: str) -> bytes:
-    """Resolve the maintained corpus shingle sketch's current version and
-    return the blob — the value to pass as curate's
-    ``prescreen_corpus_blob``. Driver-side file read (no Spark job)."""
-    from hadoop_stuff_spark.operators.incremental import _read_pointer
-
-    ptr = _read_pointer(blob_path)
-    if ptr is None:
-        raise ValueError(f"no maintained sketch at {blob_path} (missing _CURRENT)")
-    with open(os.path.join(blob_path, ptr["version"], "corpus_theta.bin"), "rb") as f:
-        return f.read()
-
-
 def streaming_upsert_sink(
     target_path: str,
     keys: list[str],

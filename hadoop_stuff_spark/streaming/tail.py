@@ -8,8 +8,9 @@ native, and the "file pointer" is the checkpoint — restart-safe where the
 reference's pointer died with the JVM.
 
 Backpressure (ST4): the reference drops records after a 1 s send timeout
-(TailF.java:132-134). Here `maxFilesPerTrigger` bounds per-batch intake
-without dropping anything; an `observe` metric counts throughput (A5).
+(TailF.java:132-134). Intake here is not bounded: each micro-batch takes
+every file that arrived since the previous trigger, and the wiretap's
+delivery drops a failing subscriber's records (streaming/wiretap.py).
 """
 
 from __future__ import annotations
@@ -18,19 +19,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def tail_stream(
-    spark: SparkSession,
-    directory: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def tail_stream(spark: SparkSession, directory: str) -> DataFrame:
     """Unbounded stream of lines from files appearing in ``directory``.
     One row per line, plus the source file and arrival timestamp (the
     reference has arrival-order semantics only — no event time; we add the
     processing timestamp so watermarks are possible downstream)."""
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.load(directory)
+    df = spark.readStream.format("text").load(directory)
     return df.select(
         F.col("value"),
         F.input_file_name().alias("source_file"),

@@ -3,13 +3,14 @@ S7; reference RealTimeCdrWiretap.java:30-86).
 
 The reference registers a query "<regex> <host>:<port>" by reflecting into
 a live Spring router's private fields — runtime plan mutation with no
-defined epoch. Here the control plane is a *table*: each micro-batch
-re-reads the subscriptions table and fans the batch out with a
-broadcast-join + rlike. Registration = append a row; takes effect at the
-next micro-batch boundary (defined, testable semantics — SURVEY.md §7
-"genuinely hard" #1). No reflection, no restart, and the subscription set
-scales to thousands because it rides a broadcast join instead of N
-sequential selectors.
+defined epoch. Here the control plane is a list of subscription rows held
+by the driver (the reference's in-memory registry): each micro-batch asks
+for the current rows and fans the batch out with every regex baked in as
+a compile-once literal rlike. Registration = append a row; takes effect
+at the next micro-batch boundary (defined, testable semantics — SURVEY.md
+§7 "genuinely hard" #1). No reflection, no restart, and the subscription
+set scales to thousands because each group of ``ROUTE_CHUNK`` patterns is
+one projection over the batch instead of N sequential selectors.
 
 Delivery (S7): EXECUTOR-side (VERDICT r1 #4). Matching already runs on
 executors; delivery must too — a driver-side collect() of matched payloads
@@ -22,8 +23,9 @@ template; the producer LoggerTest.java:10-19 is UDP via log4j.xml:11-23) —
 both sinks exist here, selected per subscription via its ``proto`` field.
 
 Backpressure (ST4, TailF.java:132-134): a failing subscriber's records are
-dropped with a warning, never stall the stream; drops are tallied through a
-Spark accumulator so the driver can expose per-endpoint counts.
+dropped with a warning, never stall the stream; when the caller passes a
+``drop_stats`` dict, drops are tallied into it per endpoint through a Spark
+accumulator.
 """
 
 from __future__ import annotations
@@ -37,25 +39,8 @@ from typing import Callable
 _LOG = logging.getLogger(__name__)
 
 from pyspark.accumulators import AccumulatorParam
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-SUBSCRIPTION_SCHEMA = StructType(
-    [
-        StructField("sub_id", LongType()),
-        StructField("regex", StringType()),
-        StructField("host", StringType()),
-        StructField("port", IntegerType()),
-        StructField("proto", StringType()),  # 'tcp' (default) or 'udp'
-    ]
-)
 
 # the reference's query grammar: "<regex> <host>:<port>" with an optional
 # udp:// scheme on the endpoint (RealTimeCdrWiretap.java:32-38 — regex
@@ -79,88 +64,39 @@ def parse_subscription(query: str, sub_id: int) -> dict:
     }
 
 
-def subscriptions_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    rows = [{"proto": "tcp", **r} for r in rows]
-    return spark.createDataFrame(rows, SUBSCRIPTION_SCHEMA)
-
-
-def route_batch(
-    batch: DataFrame,
-    subs: DataFrame,
-    record_col: str = "value",
-    strategy: str = "literal",
-    max_collect_subs: int = 100_000,
-) -> DataFrame:
-    """One micro-batch of the wiretap fan-out: every record tested against
-    every subscription's regex (content-based multicast, ST3 — a record can
-    match several subscribers). Unified entry point (PLAN_r7 #3) — both
-    strategies return (sub_id, host, port, proto, *batch columns):
-
-    - ``"literal"`` (default): collect the subscriptions table (control
-      plane — tiny by design; ``start_wiretap`` collects it per micro-batch
-      anyway) and delegate to :func:`route_batch_literal`, whose patterns
-      compile ONCE per codegen chunk. ~10x faster than the join: no
-      per-row Pattern.compile. The collect is capped at
-      ``max_collect_subs`` rows (via ``limit``, so the driver never
-      materializes more than the cap + 1 regardless of the frame's true
-      size): a caller that hands a non-control-plane-sized subscriptions
-      frame silently degrades to the join strategy instead of pulling it
-      onto the driver every micro-batch (ADVICE r6).
-    - ``"join"``: broadcast nested-loop join with a column-valued regex
-      predicate, recompiled per row by the JVM. The escape hatch for a
-      subscriptions side that genuinely cannot be collected (regexes
-      computed per-row from other columns, or a non-control-plane-sized
-      frame)."""
-    if strategy == "literal":
-        rows = subs.limit(max_collect_subs + 1).collect()
-        if len(rows) <= max_collect_subs:
-            return route_batch_literal(batch, [r.asDict() for r in rows], record_col)
-        strategy = "join"  # beyond control-plane size: never bake as literals
-    if strategy != "join":
-        raise ValueError(f"strategy must be 'literal' or 'join', got {strategy!r}")
-    joined = batch.join(
-        F.broadcast(subs), F.regexp_like(F.col(record_col), F.col("regex")), "inner"
-    )
-    return joined.select(
-        "sub_id",
-        "host",
-        "port",
-        F.coalesce(F.col("proto"), F.lit("tcp")).alias("proto"),
-        *batch.columns,
-    )
+# subscriptions per match-vector projection (see route_batch_literal)
+ROUTE_CHUNK = 256
 
 
 def route_batch_literal(
     batch: DataFrame,
     subs_rows: list[dict],
     record_col: str = "value",
-    codegen_chunk: int = 256,
 ) -> DataFrame:
     """Fan-out with the subscription set baked in as literals: pass(es)
     over the batch evaluating every pattern as a compile-once literal
-    rlike, then explode the per-record match vector. ~10x faster than the
+    rlike, then explode the per-record match vector. ~10x faster than a
     column-regex join (no per-row Pattern.compile), same semantics.
 
-    subs_rows: [{"sub_id", "regex", "host", "port"}, ...] — the collected
-    (tiny) subscriptions table; at 100 TB the stream side still never
-    shuffles.
+    subs_rows: [{"sub_id", "regex", "host", "port", "proto"?}, ...] — the
+    driver-held subscription rows (control plane, tiny); at 100 TB the
+    stream side still never shuffles.
 
-    ``codegen_chunk`` (VERDICT r5 #4, measured 2026-08-14 on a 20k-record
+    ``ROUTE_CHUNK`` (VERDICT r5 #4, measured 2026-08-14 on a 20k-record
     batch): a SINGLE match-vector projection does NOT stay one codegen
     stage at high subscription counts — whole-stage codegen aborts with
     "Code grows beyond 64 KB" from ~500 literal rlikes (expressions can't
     be method-split inside the WSCG consume path), and at 2000 rlikes
     Janino compiling the one giant generated class OOM'd a default-heap
     driver outright and cost ~26 s of compile when given 6 GB. Chunking
-    the subscription set into fixed groups of ``codegen_chunk`` — one
+    the subscription set into fixed groups of ``ROUTE_CHUNK`` — one
     match-vector projection per group, unioned — bounds every generated
     class to a size Janino compiles fast and in bounded memory, at the
-    price of one pass over the micro-batch per group (micro-batches are
-    bounded by maxFilesPerTrigger; `foreachBatch` batches are already
-    materialized, so the re-scan is memory-speed). Matching throughput is
-    inherently O(n_subs × n_records) regex evals either way (~0.25 µs
-    per record-pattern here); chunking changes robustness, not
-    asymptotics. The ≥2k-subscription soak test pins correctness and the
+    price of one pass over the micro-batch per group (a micro-batch holds
+    every file that arrived since the previous trigger). Matching
+    throughput is inherently O(n_subs × n_records) regex evals either
+    way (~0.25 µs per record-pattern here); chunking changes robustness,
+    not asymptotics. The ≥2k-subscription soak test pins correctness and the
     per-group plan shape (tests/test_streaming.py)."""
     import functools
 
@@ -203,8 +139,8 @@ def route_batch_literal(
             )
         )
     parts = [
-        route_chunk(subs_rows[i : i + codegen_chunk])
-        for i in range(0, len(subs_rows), codegen_chunk)
+        route_chunk(subs_rows[i : i + ROUTE_CHUNK])
+        for i in range(0, len(subs_rows), ROUTE_CHUNK)
     ]
     return functools.reduce(lambda a, b: a.unionByName(b), parts)
 
@@ -292,34 +228,8 @@ def _deliver_partition(rows, record_col, deliver, drop_acc):
             flush(key)
     for key in list(buffers):
         flush(key)
-    if dropped:
+    if dropped and drop_acc is not None:
         drop_acc.add(dropped)
-
-
-def deliver_routed(
-    routed: DataFrame,
-    record_col: str = "value",
-    deliver: Callable[[str, int, list[str]], None] | None = None,
-    drop_stats: dict | None = None,
-    _drop_acc=None,
-) -> None:
-    """Executor-side delivery of an already-routed frame (rows carrying
-    sub_id/host/port/proto + the record): repartition on sub_id so each
-    subscriber's records land in one task, then each task opens the
-    subscriber's socket itself. Shared by the streaming wiretap's
-    per-micro-batch path AND the batch→stream bridge
-    (`Engine.grep_to_wiretap`) — payload bytes never pass through the
-    driver in either. ST4 drop+warn semantics apply (dead subscribers'
-    records are tallied into ``drop_stats``)."""
-    spark = routed.sparkSession
-    drop_acc = _drop_acc or spark.sparkContext.accumulator({}, _DropTallyParam())
-    rc, dl = record_col, deliver
-    routed.repartition("sub_id").foreachPartition(
-        lambda rows: _deliver_partition(rows, rc, dl, drop_acc)
-    )
-    if drop_stats is not None:
-        drop_stats.clear()
-        drop_stats.update(drop_acc.value)
 
 
 def route_and_deliver_batch(
@@ -329,37 +239,54 @@ def route_and_deliver_batch(
     deliver: Callable[[str, int, list[str]], None] | None = None,
     drop_stats: dict | None = None,
 ) -> None:
-    """The reference's commented-out intent, composed for real
+    """Route one batch to the subscribers and deliver it, executor-side:
+    the step every streaming wiretap micro-batch runs, and the
+    reference's commented-out batch→stream bridge composed for real
     (DistributedGrep.java:33,38-47,57 — batch grep results pushed into
-    the live wiretap channel): fan a BATCH query's result out to the
-    current subscriber set with the same literal-pattern matcher and the
-    same executor-side socket delivery the streaming path uses."""
-    deliver_routed(
-        route_batch_literal(batch, subs_rows, record_col),
-        record_col=record_col,
-        deliver=deliver,
-        drop_stats=drop_stats,
+    the live wiretap channel, `Engine.grep_to_wiretap`).
+
+    Matches (`route_batch_literal`) are repartitioned on sub_id so each
+    subscriber's records land in one task, then each task opens the
+    subscriber's socket itself — payload bytes never pass through the
+    driver. ST4 drop+warn semantics apply: this call's dropped records
+    are ADDED per (host, port) into ``drop_stats``, so one dict passed
+    to several calls holds their running total. With no subscribers it
+    returns at once: no Spark job runs."""
+    if not subs_rows:
+        return
+    routed = route_batch_literal(batch, subs_rows, record_col)
+    sc = batch.sparkSession.sparkContext
+    # PySpark's driver keeps every accumulator it ever made, so a stream
+    # makes one per micro-batch only when a caller reads the tallies
+    drop_acc = None if drop_stats is None else sc.accumulator({}, _DropTallyParam())
+    rc, dl = record_col, deliver
+    routed.repartition("sub_id").foreachPartition(
+        lambda rows: _deliver_partition(rows, rc, dl, drop_acc)
     )
+    if drop_stats is not None:
+        _DropTallyParam().addInPlace(drop_stats, drop_acc.value)
 
 
 def start_wiretap(
     stream: DataFrame,
-    get_subscriptions: Callable[[SparkSession], DataFrame],
+    get_subscriptions: Callable[[], list[dict]],
     deliver: Callable[[str, int, list[str]], None] | None = None,
     record_col: str = "value",
     checkpoint_dir: str | None = None,
     trigger_available_now: bool = False,
     drop_stats: dict | None = None,
 ):
-    """Run the wiretap: per micro-batch, re-read subscriptions (dynamic
-    registration — rows added between batches take effect next batch),
-    match executor-side, deliver executor-side.
+    """Run the wiretap: per micro-batch, ask ``get_subscriptions()`` for
+    the current subscription rows (dynamic registration — rows added
+    between batches take effect next batch), match executor-side, deliver
+    executor-side: each micro-batch is one `route_and_deliver_batch`.
 
     Delivery is ``foreachPartition`` after a repartition on sub_id: each
     task opens its subscribers' sockets directly, so matched payload bytes
     never pass through the driver (the r1 design collected every matched
-    record to the driver — a 100×-scale bottleneck). The only driver-side
-    collect left is the subscriptions table itself (control plane, tiny).
+    record to the driver — a 100×-scale bottleneck). The subscription
+    rows live on the driver (control plane, tiny) and are baked into the
+    plan as literals, so reading them runs no Spark job.
 
     ``deliver(host, port, records)`` overrides the socket sinks for every
     subscriber (it is pickled to executors); by default each subscription's
@@ -369,28 +296,13 @@ def start_wiretap(
     TailF.java:132-134): warn and DROP that subscriber's records for the
     batch rather than stalling or failing the stream. Drops are tallied
     per (host, port) into ``drop_stats`` (via a Spark accumulator) when
-    given. Returns the StreamingQuery.
+    given; each batch adds to them, so they are the stream's lifetime
+    tallies. Returns the StreamingQuery.
     """
-    drop_acc = None
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        nonlocal drop_acc
-        spark = batch.sparkSession
-        if drop_acc is None:
-            drop_acc = spark.sparkContext.accumulator({}, _DropTallyParam())
-        subs_rows = [r.asDict() for r in get_subscriptions(spark).collect()]
-        if not subs_rows:
-            return
-        matched = route_batch_literal(batch, subs_rows, record_col)
-        # co-locate each subscriber's records into one task; delivery runs
-        # where the data is (accumulator persists across batches so
-        # drop_stats reflects the stream's lifetime tallies)
-        deliver_routed(
-            matched,
-            record_col=record_col,
-            deliver=deliver,
-            drop_stats=drop_stats,
-            _drop_acc=drop_acc,
+        route_and_deliver_batch(
+            batch, get_subscriptions(), record_col, deliver, drop_stats
         )
 
     writer = stream.writeStream.foreachBatch(process).outputMode("append")
@@ -402,11 +314,14 @@ def start_wiretap(
 
 
 def wiretap_batch_shape(
-    records: DataFrame, subs: DataFrame, record_col: str = "value", *, keep: list[str] | None = None
+    records: DataFrame,
+    subs_rows: list[dict],
+    record_col: str = "value",
+    *,
+    keep: list[str] | None = None,
 ) -> DataFrame:
-    """The wiretap's per-micro-batch computation as a pure batch query
-    (what `process` above runs each trigger): (sub_id, record) matches.
-    Oracle-checkable — see plans/registry."""
-    subs_rows = [r.asDict() for r in subs.collect()]
+    """The wiretap's per-micro-batch routing as a pure batch query (what
+    `process` above runs each trigger before delivery): (sub_id, record)
+    matches. Oracle-checkable — see plans/registry."""
     matched = route_batch_literal(records, subs_rows, record_col)
     return matched.select("sub_id", *(keep or [record_col]))

@@ -112,39 +112,6 @@ def test_outlier_zscore_single_row_class(spark, tmp_path):
     assert (r["n_orders"], r["n_outliers"], r["max_abs_z"]) == (1, 0, None)
 
 
-def test_route_batch_collect_cap_falls_back_to_join(spark):
-    """ADVICE r6: route_batch's literal default collects the subscriptions
-    frame on the driver; above max_collect_subs it must degrade to the
-    broadcast-join strategy (same results, no oversized driver collect)."""
-    from hadoop_stuff_spark.streaming.wiretap import route_batch, subscriptions_df
-
-    batch = spark.createDataFrame(
-        [("CALL alpha",), ("FLOW beta",), ("quiet",)], "value string"
-    )
-    subs = subscriptions_df(
-        spark,
-        [
-            {"sub_id": 1, "regex": "^CALL", "host": "h1", "port": 10},
-            {"sub_id": 2, "regex": "FLOW", "host": "h2", "port": 20},
-            {"sub_id": 3, "regex": "nothing-matches-me", "host": "h3", "port": 30},
-        ],
-    )
-
-    def rows(df):
-        return {(r.sub_id, r.host, r.port, r.proto, r.value) for r in df.collect()}
-
-    expected = rows(route_batch(batch, subs, strategy="join"))
-    capped = route_batch(batch, subs, max_collect_subs=2)  # 3 subs > cap
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan, plan  # literal path not taken
-    assert rows(capped) == expected
-
-    uncapped = route_batch(batch, subs)  # default cap: literal path
-    plan = uncapped._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert rows(uncapped) == expected
-
-
 def test_ab_ztest_fixed_point_matches_plain_double_closely(spark, sf_dir):
     """The micro-unit fixed-point accumulators change results only at the
     ~1e-6 resolution of the values themselves: the headline statistics at

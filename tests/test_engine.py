@@ -231,98 +231,6 @@ def test_curate_stage_attribution_via_qlog(spark, sf_dir, tmp_path):
     assert attributed >= 0.4 * composite_wall, (attributed, composite_wall)
 
 
-def test_curate_prescreen_fast_path_and_byte_identical_output(spark, tmp_path):
-    """VERDICT r5 #7: prescreen on DISJOINT corpora takes the fast path
-    (no contamination stage executes) and on OVERLAPPING corpora the
-    output is identical with and without the prescreen."""
-    from hadoop_stuff_spark.engine import Engine
-    from hadoop_stuff_spark.plans.qlog import QueryLog
-
-    eng = Engine(spark)
-    corpus = spark.createDataFrame(
-        [(i, f"alpha bravo charlie delta echo{i} foxtrot golf") for i in range(40)],
-        "doc_id long, text string",
-    )
-    disjoint_holdout = spark.createDataFrame(
-        [(1000, "hotel india juliet kilo lima mike")], "doc_id long, text string"
-    )
-    overlapping_holdout = spark.createDataFrame(
-        [(1000, "alpha bravo charlie delta november")], "doc_id long, text string"
-    )
-
-    def splits(df):
-        return {(r.doc_id, r.split) for r in df.select("doc_id", "split").collect()}
-
-    # disjoint: gate fires — the qlog proves no contamination stage ran
-    qlog = QueryLog(spark, str(tmp_path / "qlog_fast"))
-    fast = eng.curate(corpus, disjoint_holdout, prescreen=True, qlog=qlog)
-    names = {r.name for r in qlog.table().collect()}
-    assert "curate:contamination" not in names
-    assert splits(fast) == splits(eng.curate(corpus, disjoint_holdout))
-
-    # overlapping: gate must NOT fire; output byte-identical either way
-    with_pre = eng.curate(corpus, overlapping_holdout, prescreen=True)
-    without = eng.curate(corpus, overlapping_holdout)
-    assert splits(with_pre) == splits(without)
-    # and the overlap really did drop the contaminated docs (every doc
-    # shares "alpha bravo charlie"+"bravo charlie delta" with holdout,
-    # but at the default fractional threshold only high-overlap docs go)
-    assert with_pre.count() == without.count()
-
-
-def test_curate_prescreen_zero_scan_blob_path(spark, tmp_path):
-    """The maintained-sketch gate variant: a blob built per corpus slice
-    with sketch_corpus_for_prescreen and folded with merge_theta_blobs
-    drives the fast path with no contamination stage — and the same
-    blob against an overlapping holdout correctly refuses the skip."""
-    from hadoop_stuff_spark.engine import Engine
-    from hadoop_stuff_spark.operators.sketches import merge_theta_blobs
-    from hadoop_stuff_spark.plans.qlog import QueryLog
-
-    eng = Engine(spark)
-    slice_a = spark.createDataFrame(
-        [(i, f"alpha bravo charlie delta echo{i} foxtrot golf") for i in range(20)],
-        "doc_id long, text string",
-    )
-    slice_b = spark.createDataFrame(
-        [(i, f"alpha bravo charlie delta echo{i} foxtrot golf") for i in range(20, 40)],
-        "doc_id long, text string",
-    )
-    corpus = slice_a.unionByName(slice_b)
-    blob = merge_theta_blobs(
-        spark,
-        [
-            eng.sketch_corpus_for_prescreen(slice_a),
-            eng.sketch_corpus_for_prescreen(slice_b),
-        ],
-    )
-    disjoint_holdout = spark.createDataFrame(
-        [(1000, "hotel india juliet kilo lima mike")], "doc_id long, text string"
-    )
-    overlapping_holdout = spark.createDataFrame(
-        [(1000, "alpha bravo charlie delta november")], "doc_id long, text string"
-    )
-
-    def splits(df):
-        return {(r.doc_id, r.split) for r in df.select("doc_id", "split").collect()}
-
-    qlog = QueryLog(spark, str(tmp_path / "qlog_blob"))
-    fast = eng.curate(
-        corpus,
-        disjoint_holdout,
-        prescreen=True,
-        prescreen_corpus_blob=blob,
-        qlog=qlog,
-    )
-    assert "curate:contamination" not in {r.name for r in qlog.table().collect()}
-    assert splits(fast) == splits(eng.curate(corpus, disjoint_holdout))
-
-    with_blob = eng.curate(
-        corpus, overlapping_holdout, prescreen=True, prescreen_corpus_blob=blob
-    )
-    assert splits(with_blob) == splits(eng.curate(corpus, overlapping_holdout))
-
-
 def test_registry_curate_entry_keeps_a_healthy_funnel(spark):
     """Regression pin for the round-4 defect where the any-overlap
     contamination rule emptied the corpus: the benchable registry entry

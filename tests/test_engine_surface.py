@@ -25,6 +25,5 @@ def test_engine_public_methods_are_entry_points_and_composites():
         # composites
         "curate",
         "audit",
-        "sketch_corpus_for_prescreen",
         "score_by_frequency",
     }

@@ -306,66 +306,3 @@ def test_streaming_upsert_sink_maintains_current_state(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="duplicate key"):
         bare(dup, 0)
-
-
-def test_streaming_shingle_sketch_feeds_curate_zero_scan_gate(spark, tmp_path):
-    """End-to-end wiring of the maintained corpus shingle sketch into the
-    curate pre-screen (PLAN_r7 #4): document slices folded through
-    streaming_shingle_sketch_sink yield a blob that (a) drives the
-    zero-scan fast path against a disjoint holdout — no contamination
-    stage in the qlog, splits identical to plain curate — (b) correctly
-    refuses the skip against an overlapping holdout, and (c) is
-    byte-stable under batch replay."""
-    from hadoop_stuff_spark.engine import Engine
-    from hadoop_stuff_spark.plans.qlog import QueryLog
-    from hadoop_stuff_spark.streaming.matview import (
-        read_corpus_blob,
-        streaming_shingle_sketch_sink,
-    )
-
-    eng = Engine(spark)
-    slice_a = spark.createDataFrame(
-        [(i, f"alpha bravo charlie delta echo{i} foxtrot golf") for i in range(20)],
-        "doc_id long, text string",
-    )
-    slice_b = spark.createDataFrame(
-        [(i, f"alpha bravo charlie delta echo{i} foxtrot golf") for i in range(20, 40)],
-        "doc_id long, text string",
-    )
-    corpus = slice_a.unionByName(slice_b)
-
-    blob_path = str(tmp_path / "shingle_sketch")
-    sink = streaming_shingle_sketch_sink(blob_path, str(tmp_path / "work"))
-    sink(slice_a, 0)
-    sink(slice_b, 1)
-    blob = read_corpus_blob(blob_path)
-
-    # replay of batch 0: manifest skip keeps the blob byte-identical
-    sink(slice_a, 0)
-    assert read_corpus_blob(blob_path) == blob
-
-    disjoint_holdout = spark.createDataFrame(
-        [(1000, "hotel india juliet kilo lima mike")], "doc_id long, text string"
-    )
-    overlapping_holdout = spark.createDataFrame(
-        [(1000, "alpha bravo charlie delta november")], "doc_id long, text string"
-    )
-
-    def splits(df):
-        return {(r.doc_id, r.split) for r in df.select("doc_id", "split").collect()}
-
-    qlog = QueryLog(spark, str(tmp_path / "qlog_stream_blob"))
-    fast = eng.curate(
-        corpus,
-        disjoint_holdout,
-        prescreen=True,
-        prescreen_corpus_blob=blob,
-        qlog=qlog,
-    )
-    assert "curate:contamination" not in {r.name for r in qlog.table().collect()}
-    assert splits(fast) == splits(eng.curate(corpus, disjoint_holdout))
-
-    with_blob = eng.curate(
-        corpus, overlapping_holdout, prescreen=True, prescreen_corpus_blob=blob
-    )
-    assert splits(with_blob) == splits(eng.curate(corpus, overlapping_holdout))

@@ -484,126 +484,6 @@ def test_cms_string_keys_bit_exact_with_jvm(spark):
     assert got["apple"] >= 3
 
 
-def test_theta_blob_exact_detection_and_disjointness_gate(spark):
-    """The decontamination pre-screen may only claim proof when both
-    sketches are exact-mode: pin the blob-preamble exactness detector
-    against real theta_sketch_agg output on both sides of the capacity
-    cliff, then the gate itself on disjoint vs overlapping corpora."""
-    import pyspark.sql.functions as F
-
-    from hadoop_stuff_spark.operators.sketches import (
-        shingle_overlap_gate,
-        theta_blob_is_exact,
-    )
-
-    def blob(n):
-        return bytes(
-            spark.range(n)
-            .agg(F.theta_sketch_agg(F.col("id").cast("string"), F.lit(12)).alias("s"))
-            .collect()[0]
-            .s
-        )
-
-    assert theta_blob_is_exact(blob(0))  # empty form (serVer 3)
-    assert theta_blob_is_exact(blob(1))  # single-item form (serVer 3)
-    assert theta_blob_is_exact(blob(4096))  # at capacity: still exact
-    assert not theta_blob_is_exact(blob(4097))  # over capacity: estimating
-    assert not theta_blob_is_exact(b"")  # unreadable: never claim proof
-
-    docs_a = spark.createDataFrame(
-        [(i, f"alpha bravo charlie delta echo{i} foxtrot") for i in range(30)],
-        "doc_id long, text string",
-    )
-    disjoint = spark.createDataFrame(
-        [(i, f"golf hotel india juliet kilo{i} lima") for i in range(30)],
-        "doc_id long, text string",
-    )
-    overlapping = spark.createDataFrame(
-        [(0, "alpha bravo charlie november oscar")], "doc_id long, text string"
-    )
-    g1 = shingle_overlap_gate(docs_a, disjoint)
-    assert g1["provably_disjoint"] and g1["est_shared"] == 0
-    assert g1["corpus_exact"] and g1["holdout_exact"]
-    g2 = shingle_overlap_gate(docs_a, overlapping)
-    assert not g2["provably_disjoint"] and g2["est_shared"] >= 1  # "alpha bravo charlie"
-
-
-def test_shingle_sketch_blobs_merge_losslessly_and_gate_from_blob(spark):
-    """Incremental gate path: per-slice shingle sketch blobs folded with
-    merge_theta_blobs must give the gate the same answers as one
-    whole-corpus sketch, and over-capacity unions must refuse proof."""
-    from hadoop_stuff_spark.operators.sketches import (
-        merge_theta_blobs,
-        shingle_overlap_gate,
-        sketch_shingles_blob,
-        theta_blob_is_exact,
-    )
-
-    slice_a = spark.createDataFrame(
-        [(i, f"alpha bravo charlie delta echo{i} foxtrot") for i in range(20)],
-        "doc_id long, text string",
-    )
-    slice_b = spark.createDataFrame(
-        [(i, f"golf hotel india juliet kilo{i} lima") for i in range(20, 40)],
-        "doc_id long, text string",
-    )
-    whole = slice_a.unionByName(slice_b)
-    merged = merge_theta_blobs(
-        spark, [sketch_shingles_blob(slice_a), sketch_shingles_blob(slice_b)]
-    )
-    assert theta_blob_is_exact(merged)
-
-    disjoint_holdout = spark.createDataFrame(
-        [(99, "mike november oscar papa quebec romeo")], "doc_id long, text string"
-    )
-    overlapping_holdout = spark.createDataFrame(
-        [(99, "golf hotel india zulu yankee")], "doc_id long, text string"
-    )
-    for holdout in (disjoint_holdout, overlapping_holdout):
-        from_blob = shingle_overlap_gate(whole, holdout, corpus_blob=merged)
-        direct = shingle_overlap_gate(whole, holdout)
-        assert from_blob["provably_disjoint"] == direct["provably_disjoint"]
-        assert from_blob["est_shared"] == direct["est_shared"]
-    assert shingle_overlap_gate(whole, disjoint_holdout, corpus_blob=merged)[
-        "provably_disjoint"
-    ]
-
-    # capacity regression (code review): a union of two exact lg_k=20
-    # slices totalling >4096 distinct shingles must STAY exact — the
-    # default theta_union caps at 2^12 and silently downsampled it
-    import pyspark.sql.functions as F
-
-    def chunk(lo, hi):
-        return spark.range(lo, hi).selectExpr(
-            "id AS doc_id",
-            "concat('a', id, ' b', id, ' c', id, ' d', id, ' e', id) AS text",
-        )
-
-    big_merged = merge_theta_blobs(
-        spark, [sketch_shingles_blob(chunk(0, 1500)), sketch_shingles_blob(chunk(1500, 3000))]
-    )
-    assert theta_blob_is_exact(big_merged)  # 9000 distinct, lg_k=20
-    est = (
-        spark.range(1)
-        .select(F.theta_sketch_estimate(F.lit(bytearray(big_merged))).alias("e"))
-        .collect()[0]
-        .e
-    )
-    assert est == 9000  # exact mode: estimate IS the distinct count
-
-    # over-capacity union leaves exact mode -> proof correctly withheld
-    # 3 shingles per doc, all distinct across docs -> 9000 distinct
-    # shingles, past lg_k=12's 4096 capacity
-    big = chunk(0, 3000)
-    over = merge_theta_blobs(
-        spark,
-        [sketch_shingles_blob(big, lg_k=12), sketch_shingles_blob(slice_a, lg_k=12)],
-    )
-    assert not theta_blob_is_exact(over)
-    g = shingle_overlap_gate(big, disjoint_holdout, corpus_blob=over)
-    assert not g["provably_disjoint"]
-
-
 def test_cms_string_buckets_vectorized_equals_scalar():
     """The numpy length-class murmur3 (`_string_buckets_np`) must agree
     bucket-for-bucket with the JVM-verified scalar `_string_buckets` on

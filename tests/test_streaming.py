@@ -13,11 +13,7 @@ import socketserver
 import threading
 
 from hadoop_stuff_spark.streaming.tail import tail_stream
-from hadoop_stuff_spark.streaming.wiretap import (
-    parse_subscription,
-    start_wiretap,
-    subscriptions_df,
-)
+from hadoop_stuff_spark.streaming.wiretap import parse_subscription, start_wiretap
 
 import pytest
 # full-sweep suite (see pytest.ini): deselected from the default
@@ -126,7 +122,7 @@ def test_wiretap_routing_and_dynamic_registration(spark, tmp_path):
         ]
         q = start_wiretap(
             tail_stream(spark, logdir),
-            get_subscriptions=lambda s: subscriptions_df(s, subs_rows),
+            get_subscriptions=lambda: subs_rows,
             checkpoint_dir=ckpt,
             trigger_available_now=True,
         )
@@ -154,7 +150,7 @@ def test_wiretap_routing_and_dynamic_registration(spark, tmp_path):
         r2.received.clear()
         q2 = start_wiretap(
             tail_stream(spark, logdir),
-            get_subscriptions=lambda s: subscriptions_df(s, subs_rows),
+            get_subscriptions=lambda: subs_rows,
             checkpoint_dir=ckpt,
             trigger_available_now=True,
         )
@@ -184,7 +180,7 @@ def test_multicast_one_record_many_subscribers(spark, tmp_path):
         ]
         q = start_wiretap(
             tail_stream(spark, logdir),
-            get_subscriptions=lambda s: subscriptions_df(s, rows),
+            get_subscriptions=lambda: rows,
             trigger_available_now=True,
         )
         q.awaitTermination(300)
@@ -203,13 +199,13 @@ def test_route_batch_literal_soak_2k_subscriptions(spark):
     (RealTimeCdrWiretap.java:30-47). A single match-vector projection at
     this size OOMs Janino on a default heap ("Code grows beyond 64 KB" /
     giant-class compile), so route_batch_literal chunks the subscription
-    set into codegen_chunk groups — this pins correctness, multicast
+    set into ROUTE_CHUNK groups — this pins correctness, multicast
     semantics, and the per-group plan shape at 2201 subscriptions."""
     from pyspark.sql import functions as F
 
-    from hadoop_stuff_spark.streaming.wiretap import route_batch_literal
+    from hadoop_stuff_spark.streaming.wiretap import ROUTE_CHUNK, route_batch_literal
 
-    n_subs, chunk = 2200, 256
+    n_subs = 2200
     subs = [
         {"sub_id": i, "regex": f"flow {i} ", "host": "h", "port": 1, "proto": "tcp"}
         for i in range(n_subs)
@@ -224,7 +220,7 @@ def test_route_batch_literal_soak_2k_subscriptions(spark):
             F.lit("record flow "), (F.col("id") % 4400).cast("string"), F.lit(" end")
         ).alias("value")
     )
-    out = route_batch_literal(batch, subs, codegen_chunk=chunk)
+    out = route_batch_literal(batch, subs)
     # ids 0..2199 each match exactly their own sub; id 13 also matches 9999
     got = [(r.sub_id, r.value) for r in out.collect()]
     assert len(got) == 2201
@@ -236,10 +232,10 @@ def test_route_batch_literal_soak_2k_subscriptions(spark):
     assert by_sub[9999] == ["record flow 13 end"]
     assert 2200 not in by_sub  # no record for subs beyond the id range
 
-    # plan shape: one scan per codegen chunk (9 groups for 2201 subs),
-    # every group JVM-side — no Python eval anywhere
+    # plan shape: one scan per ROUTE_CHUNK group (9 groups of 256 for
+    # 2201 subs), every group JVM-side — no Python eval anywhere
     plan = out._jdf.queryExecution().executedPlan().toString()
-    n_groups = -(-len(subs) // chunk)
+    n_groups = -(-len(subs) // ROUTE_CHUNK)
     assert plan.count("Range (0, 3000") == n_groups, plan[:2000]
     assert "BatchEvalPython" not in plan
 
@@ -281,7 +277,7 @@ def test_real_tcp_delivery_and_dead_subscriber_drop(spark, tmp_path):
     try:
         q = start_wiretap(
             tail_stream(spark, logdir),
-            get_subscriptions=lambda s: subscriptions_df(s, subs),
+            get_subscriptions=lambda: subs,
             trigger_available_now=True,
             drop_stats=drops,
         )
@@ -311,7 +307,7 @@ def test_udp_delivery(spark, tmp_path):
     try:
         q = start_wiretap(
             tail_stream(spark, logdir),
-            get_subscriptions=lambda s: subscriptions_df(s, subs),
+            get_subscriptions=lambda: subs,
             trigger_available_now=True,
         )
         q.awaitTermination(300)
@@ -365,43 +361,3 @@ def test_grep_to_wiretap_batch_stream_bridge(spark):
 
     assert sorted(live.received) == ["CALL alpha", "CALL gamma 42"]
     assert drops == {("127.0.0.1", dead_port): 1}
-
-
-def test_route_batch_strategies_agree(spark):
-    """Unified matcher entry point (PLAN_r7 #3): route_batch's default
-    literal strategy and the column-regex join escape hatch must return
-    the same (sub_id, record) multicast with the same column layout."""
-    from pyspark.sql import functions as F
-
-    from hadoop_stuff_spark.streaming.wiretap import route_batch, subscriptions_df
-
-    batch = spark.createDataFrame(
-        [("CALL alpha",), ("FLOW beta",), ("CALL FLOW both",), ("noise",)],
-        "value string",
-    )
-    subs = subscriptions_df(
-        spark,
-        [
-            {"sub_id": 1, "regex": "^CALL", "host": "h1", "port": 10},
-            {"sub_id": 2, "regex": "FLOW", "host": "h2", "port": 20, "proto": "udp"},
-        ],
-    )
-
-    def rows(df):
-        return {(r.sub_id, r.host, r.port, r.proto, r.value) for r in df.collect()}
-
-    lit = route_batch(batch, subs)  # default: literal
-    jn = route_batch(batch, subs, strategy="join")
-    assert lit.columns == jn.columns == ["sub_id", "host", "port", "proto", "value"]
-    assert rows(lit) == rows(jn)
-    assert rows(lit) == {
-        (1, "h1", 10, "tcp", "CALL alpha"),
-        (1, "h1", 10, "tcp", "CALL FLOW both"),
-        (2, "h2", 20, "udp", "FLOW beta"),
-        (2, "h2", 20, "udp", "CALL FLOW both"),
-    }
-
-    import pytest
-
-    with pytest.raises(ValueError, match="strategy"):
-        route_batch(batch, subs, strategy="bogus")
