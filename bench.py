@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from hadoop_stuff_spark.plans.registry import EXTRA_QUERIES, QUERIES  # noqa: E402
 
 ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
-from hadoop_stuff_spark.session import get_spark  # noqa: E402
+from hadoop_stuff_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 HEADLINE = [
     "flagship_grep_count",
@@ -159,9 +159,12 @@ def main() -> None:
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     noise_floor = {"before": _noise_probe(spark), "python_before": _python_floor(spark)}
     runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    compiles = []
     for i in range(n_passes):
+        before = codegen_compiles(spark)
         for name in HEADLINE:
             runs[name].append(_noop_s(spark, fns[name], sf_dir))
+        compiles.append(codegen_compiles(spark) - before)
         print(f"# pass {i + 1}/{n_passes} done", file=sys.stderr)
     slow = _slow_queries({name: _median(r) for name, r in runs.items()})
     for _ in range(EXTRA_RUNS):
@@ -212,6 +215,7 @@ def main() -> None:
         "queries_max": {name: max(r) for name, r in runs.items()},
         "runs": runs,
         "noise_floor": noise_floor,
+        "codegen": _codegen_block(spark, compiles),
         "scaling": scaling,
         "curate_stages": curate_stages,
         "ingest": ingest,
@@ -259,6 +263,16 @@ def _probe(action) -> dict:
         action()
         runs.append(round(time.perf_counter() - t0, 4))
     return {"runs": runs, "median": sorted(runs)[1]}
+
+
+def _codegen_block(spark, compiles: list[int]) -> dict:
+    """Classes compiled during each headline pass, beside the session's
+    generated-code cache cap: once the cache holds the headline's set, a
+    pass after the first compiles nothing."""
+    return {
+        "compiles_per_pass": compiles,
+        "cache_max_entries": int(spark.conf.get("spark.sql.codegen.cache.maxEntries")),
+    }
 
 
 def _noise_probe(spark) -> dict:

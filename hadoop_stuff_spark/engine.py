@@ -277,10 +277,11 @@ class Engine:
         given) are widened and pinned with EAGER localCheckpoints at
         construction, and near-dup removal runs MinHash's signature
         checkpoint and the connected-components rounds there too. So
-        merely calling ``curate()`` runs Spark jobs: 30 at sf0.1 on 4
-        cores with ``registry.curated_corpus``'s inputs (10 for the two
-        fan-outs and the signatures, 20 in `connected_components`: its
-        edge list, then two label rounds), against 5 for the action. The
+        merely calling ``curate()`` runs Spark jobs: 23 at sf0.001 and
+        sf0.1 on 4 cores with ``registry.curated_corpus``'s inputs (10 for
+        the two fan-outs and the signatures, 13 in `connected_components`:
+        4 for its edge list, 2 for its join-free first label round, 7 for
+        the round that confirms it), against 5 for the action. The
         checkpoint blocks are executor-local and non-replicated, so on a
         real cluster a lost executor fails the query instead of
         recomputing it; without the barriers Catalyst re-executes the

@@ -12,13 +12,20 @@ repeated until fixpoint. Components have small diameter in dedup graphs
 the bound is O(log n) rounds for any graph with doubling (pointer-jumping
 through the label graph — the standard large-star/small-star argument).
 
-Scale design: each round is one self-join on the edge list + one groupBy
-min — two shuffles over O(E) rows, no driver data movement. Each round's
-labels are materialized by one eager localCheckpoint, which truncates the
-lineage so plans stay O(1) deep. The only driver-side value per round is
-a single convergence scalar, the count of changed labels: a
-``DataFrame.observe`` metric on that same checkpoint, filled when the
-checkpoint job finishes, so reading it runs no job of its own.
+Scale design: the first round starts from identity labels, where the
+pointer jump changes nothing, so a vertex's round-1 label is
+``least(v, min over neighbors u of u)``: one groupBy over the edge list,
+with no label relation, no join and no convergence count (round 1 changes
+every vertex that has a smaller neighbor, so it is a fixpoint only on an
+empty graph). Every later round is one self-join on the edge list + one
+groupBy min — two shuffles over O(E) rows, no driver data movement — and
+a pointer jump. Each round's labels are materialized by one eager
+localCheckpoint, which truncates the lineage so plans stay O(1) deep.
+The only driver-side value per later round is a single convergence
+scalar, the count of changed labels: a ``DataFrame.observe`` metric on
+that same checkpoint, filled when the checkpoint job finishes, so reading
+it runs no job of its own. The edge list is not deduplicated: labels
+depend only on the edge set, and a repeated edge only repeats a min.
 """
 
 from __future__ import annotations
@@ -42,22 +49,28 @@ def connected_components(
     Deterministic; raises if ``max_iters`` rounds don't converge (dedup
     graphs converge in ~log(diameter); 25 covers any realistic corpus).
     """
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
+    edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
+        pairs.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
     edges = edges.localCheckpoint(eager=True)  # pair-gen lineage ends here
+    # round 1 — from identity labels the pointer jump is a no-op, so the
+    # new label is the least of a vertex and its neighbors (every vertex
+    # is some edge's u, because the edge list is symmetric)
     labels = (
-        edges.select(F.col("u").alias("doc_id"))
-        .distinct()
-        .select("doc_id", F.col("doc_id").alias("cluster_id"))
+        edges.groupBy("u")
+        .agg(F.least(F.col("u"), F.min("v")).alias("cluster_id"))
+        .select(F.col("u").alias("doc_id"), "cluster_id")
+        .localCheckpoint(eager=True)
     )
-    for _ in range(max_iters):
+    for _ in range(max_iters - 1):
         # step 1 — neighbor propagation: candidate for v is the min label
-        # among its neighbors
+        # among its neighbors. Sort-merge by hint: when every component
+        # is one edge, edges and labels shuffle the same row count, and
+        # AQE's broadcast build side then flipped between calls with a
+        # few bytes of compression, so a warm session compiled the round
+        # anew (and it saves the broadcast's job)
         neighbor_min = (
-            edges.join(labels, edges.u == labels.doc_id)
+            edges.hint("merge").join(labels, edges.u == labels.doc_id)
             .groupBy(F.col("v").alias("doc_id"))
             .agg(F.min("cluster_id").alias("nbr_min"))
         )
@@ -94,6 +107,9 @@ def connected_components(
         )
         if round_obs.get["changed"] == 0:
             return labels
+    # round 1 is a fixpoint only on an empty graph
+    if max_iters == 1 and labels.isEmpty():
+        return labels
     raise RuntimeError(f"connected_components did not converge in {max_iters} rounds")
 
 

@@ -380,6 +380,27 @@ def minhash_signature(col: Column | str, n: int = 3, perms: int = MINHASH_PERMS)
     return _sig(T.tokens(col))
 
 
+def minhash_bands(
+    sig: str, bands: int = LSH_BANDS, rows: int = MINHASH_PERMS // LSH_BANDS
+) -> Column:
+    """The LSH bands of MinHash signature column ``sig``, exploded: one
+    struct<band: int, bucket: long> row per band, ``bucket`` the xxhash64
+    of the band's ``rows`` signature values joined as decimal strings.
+
+    One SQL expression, so the driver builds it in one parse. Built as
+    ``bands`` Python-side struct Columns, one py4j call per Column
+    operation, a banded select took 160-200 ms of driver time against
+    30-60 ms for this one (4 cores). The buckets are the same bits either
+    way, so signature stores written before stay probe-compatible."""
+    return F.explode(
+        F.expr(
+            f"transform(sequence(0, {bands - 1}), b -> named_struct("
+            f"'band', b, 'bucket', xxhash64(array_join(transform("
+            f"slice(`{sig}`, b * {rows} + 1, {rows}), x -> cast(x AS string)), ','))))"
+        )
+    )
+
+
 def minhash_candidates(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -408,28 +429,9 @@ def minhash_candidates(
     # band on (band, bucket, id) ONLY — the 512 B signature must not ride
     # the bands-way explode through the candidate shuffle (16x payload
     # replication); surviving pairs re-join it below, once each side
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.array_join(
-                                F.transform(
-                                    F.slice("sig", b * rows + 1, rows),
-                                    lambda x: x.cast("string"),
-                                ),
-                                ",",
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    banded = sigs.select("id", minhash_bands("sig", bands, rows).alias("bb")).select(
+        "id", "bb.band", "bb.bucket"
+    )
     # the candidate set is the pair ids alone: an aggregate over two
     # longs is a plain HashAggregate (an array-carrying dropDuplicates
     # would force SortAggregate)

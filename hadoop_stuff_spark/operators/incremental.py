@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 
 from hadoop_stuff_spark.functions.text import fingerprint_md5
 from hadoop_stuff_spark.operators.dedup import (
-    LSH_BANDS,
     MINHASH_PERMS,
+    minhash_bands,
     minhash_signature,
 )
 
@@ -74,34 +74,13 @@ def update_fingerprint_store(
 
 
 def _banded_sigs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    rows = MINHASH_PERMS // LSH_BANDS
     sigs = docs.select(
         F.col(id_col).alias("doc_id"),
         minhash_signature(text_col).alias("sig"),
     )
-    return sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.array_join(
-                                F.transform(
-                                    F.slice("sig", b * rows + 1, rows),
-                                    lambda x: x.cast("string"),
-                                ),
-                                ",",
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    return sigs.select("doc_id", "sig", minhash_bands("sig").alias("bb")).select(
+        "doc_id", "sig", "bb.band", "bb.bucket"
+    )
 
 
 def build_signature_store(docs: DataFrame, path: str, text_col: str = "text") -> None:

@@ -1,8 +1,9 @@
 """Contract checks for bench.py: the headline names resolve before any
 warm-up, the >= 2 s extra-runs rule, the shape of the stdout contract
-line, the curate breakdown's link to the registry, and the two floors
-timed beside the headline (the JVM noise probe and the Python-boundary
-floor, which is the only check here that runs Spark jobs)."""
+line, the curate breakdown's link to the registry, the codegen block, and
+the two floors timed beside the headline (the JVM noise probe and the
+Python-boundary floor, which is the only check here that runs Spark
+jobs)."""
 
 import json
 
@@ -74,3 +75,11 @@ def test_python_floor_is_one_arrow_udf_task(spark):
     floor = bench._python_floor(spark)
     assert len(floor["runs"]) == 3 and all(r > 0 for r in floor["runs"])
     assert floor["median"] == sorted(floor["runs"])[1]
+
+
+def test_codegen_block_reports_compiles_per_pass_and_the_cache_cap(spark):
+    from hadoop_stuff_spark.session import CODEGEN_CACHE_ENTRIES
+
+    block = bench._codegen_block(spark, [1182, 0, 0])
+    assert block == {"compiles_per_pass": [1182, 0, 0], "cache_max_entries": CODEGEN_CACHE_ENTRIES}
+    assert json.loads(json.dumps(block)) == block

@@ -5,8 +5,9 @@ DuckDB-differential certification (recursive-CTE transitive closure over
 the exact Jaccard pairs) runs via EXTRA_QUERIES in test_oracle_parity.
 """
 
+import random
+
 import pytest
-from pyspark.sql import functions as F
 
 from hadoop_stuff_spark.operators.clusters import connected_components, dedup_clusters
 
@@ -67,6 +68,49 @@ def test_connected_components_fails_loudly_without_convergence(spark):
     df = spark.createDataFrame(edges, "doc_a: long, doc_b: long")
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, max_iters=1)
+
+
+@pytest.mark.parametrize("max_iters", [1, 2, 25])
+def test_connected_components_of_no_pairs_is_empty(spark, max_iters):
+    df = spark.createDataFrame([], "doc_a: long, doc_b: long")
+    out = connected_components(df, max_iters=max_iters)
+    assert out.columns == ["doc_id", "cluster_id"]
+    assert out.collect() == []
+
+
+def test_connected_components_random_graph_matches_union_find(spark):
+    """A seeded sparse random graph over 200 vertices: its components have
+    long paths, so it needs at least 3 label rounds (2 raise), and the
+    converged labels are union-find's."""
+    rng = random.Random(13)
+    edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(170)]
+    edges = [(a, b) for a, b in edges if a != b]
+    df = spark.createDataFrame(edges, "doc_a: long, doc_b: long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iters=2)
+    got = {(r.doc_id, r.cluster_id) for r in connected_components(df).collect()}
+    assert got == set(_union_find(edges).items())
+
+
+def test_connected_components_of_stars_runs_11_jobs(spark):
+    """Components that are stars around their minimum converge in round 1
+    (every leaf's least neighbor is the centre), and the second round only
+    confirms it: 11 jobs in all. 2 checkpoint the edge list of the local
+    input, 2 run round 1 (one groupBy, no join), and 7 run the confirming
+    round, whose changed-label count rides its own checkpoint."""
+    edges = [(c, c + k) for c in range(0, 1000, 10) for k in range(1, 5)]
+    df = spark.createDataFrame(edges, "doc_a: long, doc_b: long")
+    sc = spark.sparkContext
+    group = "connected-components-stars"
+    sc.setJobGroup(group, group)
+    try:
+        out = connected_components(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 11
+    assert {(r.doc_id, r.cluster_id) for r in out.collect()} == set(
+        _union_find(edges).items()
+    )
 
 
 def test_dedup_clusters_sizes(spark):

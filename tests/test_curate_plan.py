@@ -1,28 +1,40 @@
 """Engine.curate's barrier plan: which Spark jobs run when the pipeline is
-merely built, and what the MinHash pass reads in staged and fused mode.
-Both tests curate as `registry.curated_corpus` does (every 20th document
-held out, max_contamination 0.5) over the sf0.001 documents."""
+merely built, what the MinHash pass reads in staged and fused mode, and
+that a warm session compiles no code for it. The tests curate as
+`registry.curated_corpus` does (every 20th document held out,
+max_contamination 0.5) over the sf0.001 documents."""
 
 from pyspark.sql import functions as F
 
 from hadoop_stuff_spark.catalog import load_table
 from hadoop_stuff_spark.engine import Engine
+from hadoop_stuff_spark.operators import textstats
 from hadoop_stuff_spark.plans.qlog import QueryLog
 from hadoop_stuff_spark.plans.registry import curated_corpus
+from hadoop_stuff_spark.session import codegen_compiles
 
 
-def test_curate_construction_runs_30_jobs(spark, sf_dir):
-    """Building the pipeline, with no action, runs exactly 30 jobs: 4 for
-    the exact-dedup fan-out checkpoint, 1 for MinHash's signature
-    checkpoint, 20 inside connected_components (5 for its edge list, then
-    7 and 8 for its two label rounds, each round's changed-label count
-    observed on the round's own checkpoint) and 5 for the near-dup
-    survivors' fan-out checkpoint. Each AQE query stage is its own job.
-    The same count holds at sf0.1 on 4 cores. The tables load outside the
-    counted group: loading is not curate's work."""
+def _curate_inputs(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     holdout = docs.filter(F.col("doc_id") % 20 == 0)
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
+    return corpus, holdout
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def test_curate_construction_runs_23_jobs(spark, sf_dir):
+    """Building the pipeline, with no action, runs exactly 23 jobs: 4 for
+    the exact-dedup fan-out checkpoint, 1 for MinHash's signature
+    checkpoint, 13 inside connected_components (4 for its edge list, 2 for
+    its join-free first label round, 7 for the confirming round, whose
+    changed-label count is observed on the round's own checkpoint) and 5
+    for the near-dup survivors' fan-out checkpoint. Each AQE query stage
+    is its own job. The same count holds at sf0.1 on 4 cores. The tables
+    load outside the counted group: loading is not curate's work."""
+    corpus, holdout = _curate_inputs(spark, sf_dir)
     sc = spark.sparkContext
     group = "curate-construction"
     sc.setJobGroup(group, group)
@@ -30,7 +42,22 @@ def test_curate_construction_runs_30_jobs(spark, sf_dir):
         Engine(spark).curate(corpus, holdout, max_contamination=0.5)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 30
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 23
+
+
+def test_warm_curate_compiles_no_code(spark, sf_dir):
+    """After one curate and one text-signature pair, a second curate finds
+    every generated class in the session's code cache: it compiles none.
+    Spark's default cache of 100 classes is smaller than curate's own set,
+    so at that cap every curate call recompiles part of it."""
+    corpus, holdout = _curate_inputs(spark, sf_dir)
+    eng = Engine(spark)
+    _noop(eng.curate(corpus, holdout, max_contamination=0.5))
+    _noop(textstats.winnowed_fingerprints(spark, sf_dir))
+    _noop(textstats.repetition_signals(spark, sf_dir))
+    before = codegen_compiles(spark)
+    _noop(eng.curate(corpus, holdout, max_contamination=0.5))
+    assert codegen_compiles(spark) - before == 0
 
 
 def test_staged_and_fused_curate_read_minhash_input_at_one_width(
