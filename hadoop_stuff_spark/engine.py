@@ -17,7 +17,7 @@ replacing each task invocation with the corresponding method here (or the
 
 Besides those entry points (plus `grep_count` and `grep_to_wiretap`) the
 class holds only composites that hide a decision: `curate` (the stage
-order and its checkpoint barriers), `audit` (six reports and which error
+order and its checkpoint barrier), `audit` (six reports and which error
 it tolerates) and `score_by_frequency` (the estimator picked by key
 type). Every other operator is called directly from its module
 (`operators/`, `plans/`, `sources/`), with that module's defaults.
@@ -44,6 +44,16 @@ from hadoop_stuff_spark.streaming.wiretap import (
     route_and_deliver_batch,
     start_wiretap,
 )
+
+# Engine.curate's fixed stage rules: its documents are ``doc_id``-keyed
+# ``text`` rows; pairs whose estimated MinHash Jaccard reaches
+# NEAR_THRESHOLD are near-duplicates; a doc whose words are more than
+# MAX_DUP_WORD_FRAC repeats is dropped; survivors split by SPLIT_WEIGHTS.
+TEXT_COL = "text"
+ID_COL = "doc_id"
+NEAR_THRESHOLD = 0.4
+MAX_DUP_WORD_FRAC = 0.9
+SPLIT_WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}
 
 
 class Engine:
@@ -240,25 +250,23 @@ class Engine:
         self,
         docs: DataFrame,
         holdout: DataFrame | None = None,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        near_threshold: float = 0.4,
         max_contamination: float = 0.05,
-        max_dup_word_frac: float = 0.9,
-        weights: dict[str, float] | None = None,
         qlog=None,
     ) -> DataFrame:
         """One-call LLM training-data curation — the certified pipeline
-        (tests/test_llm_pipeline_e2e.py) as product API:
+        (tests/test_llm_pipeline_e2e.py) as product API, over ``docs``
+        rows keyed by ``doc_id`` with their words in ``text``:
 
-        clean → exact dedup (content fingerprint) → MinHash-LSH near-dup
-        removal (banded candidates, min-id canonical per cluster) →
-        contamination filter vs ``holdout`` (drop docs whose CONTAMINATED
-        3-gram FRACTION exceeds ``max_contamination`` — a fractional
-        threshold, because generic prose always shares a few n-grams with
-        any benchmark and an any-overlap rule empties real corpora; pass
-        0.0 for the strict drop-on-any-overlap posture) → repetition gate
-        (duplicate-word fraction) → deterministic train/val/test split.
+        clean → exact dedup (content fingerprint, min doc_id kept) →
+        MinHash-LSH near-dup removal (estimated Jaccard at least
+        ``NEAR_THRESHOLD``, min-id canonical per cluster) →
+        `contamination.decontaminate` vs ``holdout`` (drop docs whose
+        contaminated 3-gram fraction exceeds ``max_contamination`` — a
+        fractional threshold, because generic prose always shares a few
+        n-grams with any benchmark and an any-overlap rule empties real
+        corpora; pass 0.0 for the strict drop-on-any-overlap posture) →
+        repetition gate (duplicate-word fraction at most
+        ``MAX_DUP_WORD_FRAC``) → deterministic split by ``SPLIT_WEIGHTS``.
 
         Returns the surviving rows with a ``split`` column. Every stage
         is the scale-path operator (no all-pairs anywhere); determinism
@@ -272,27 +280,30 @@ class Engine:
         is the fused one, and the extra checkpoints change scheduling,
         not results (every stage is deterministic).
 
-        Eager side effect (ADVICE r12): in both modes the two fan-out
-        stages (exact dedup; the near-dup survivors when a ``holdout`` is
-        given) are widened and pinned with EAGER localCheckpoints at
+        Eager side effect (ADVICE r12): in both modes the exact-dedup
+        stage is widened and pinned with an EAGER localCheckpoint at
         construction, and near-dup removal runs MinHash's signature
         checkpoint and the connected-components rounds there too. So
-        merely calling ``curate()`` runs Spark jobs: 23 at sf0.001 and
-        sf0.1 on 4 cores with ``registry.curated_corpus``'s inputs (10 for
-        the two fan-outs and the signatures, 13 in `connected_components`:
-        4 for its edge list, 2 for its join-free first label round, 7 for
-        the round that confirms it), against 5 for the action. The
-        checkpoint blocks are executor-local and non-replicated, so on a
-        real cluster a lost executor fails the query instead of
-        recomputing it; without the barriers Catalyst re-executes the
-        scan+clean+dedup subtree per fan-out consumer (8 documents scans
-        in the fused plan)."""
+        merely calling ``curate()`` runs Spark jobs: 18 at sf0.001 and
+        sf0.1 on 4 cores with ``registry.curated_corpus``'s inputs (4 for
+        the exact-dedup checkpoint, 1 for the signatures, 13 in
+        `connected_components`: 4 for its edge list, 2 for its join-free
+        first label round, 7 for the round that confirms it), against 5
+        for the action. The exact-dedup checkpoint is the one fan-out
+        barrier: it is the only subtree that holds the documents scan
+        and the regex clean, and MinHash, the near-dup anti-join and
+        (through the survivors) both contamination branches read it.
+        The survivors are that checkpoint anti-joined with the small
+        loser set, so their two consumers re-read checkpoints, not the
+        scan. The checkpoint blocks are executor-local and
+        non-replicated, so on a real cluster a lost executor fails the
+        query instead of recomputing it."""
         from pyspark.sql import functions as F
 
-        from hadoop_stuff_spark.functions import text as T
+        from hadoop_stuff_spark.functions.text import dup_word_frac
         from hadoop_stuff_spark.operators.cleaning import clean_text
         from hadoop_stuff_spark.operators.clusters import connected_components
-        from hadoop_stuff_spark.operators.contamination import overlap_report
+        from hadoop_stuff_spark.operators.contamination import decontaminate
         from hadoop_stuff_spark.operators.dedup import (
             drop_exact_duplicates,
             minhash_candidates,
@@ -315,73 +326,54 @@ class Engine:
             int(self.spark.conf.get("spark.sql.shuffle.partitions")),
         )
 
-        def stage(name: str, build, fan_out: bool = False) -> DataFrame:
-            # A fan-out stage feeds two consumers (the next stage and an
-            # anti-join back onto itself), so it is checkpointed in both
-            # modes. It is widened first: the checkpoint keeps its input's
-            # partitioning, which the exchange before it AQE-coalesces to
-            # ~1 partition at bench scale, and that would serialize the
-            # CPU-heavy pass reading it (MinHash signatures, the shingle
-            # explode). A qlog wall includes construction, where
-            # iterative operators already run jobs.
+        def stage(name: str, build) -> DataFrame:
+            # staged mode: one timed, checkpointed log row per stage. A
+            # qlog wall includes construction, where iterative operators
+            # already run jobs.
             t0 = _time.perf_counter()
             df = build()
-            if fan_out:
-                df = df.repartition(_wide)
-            if qlog is not None:
-                return qlog.run(
-                    f"curate:{name}",
-                    df,
-                    action=lambda d: d.localCheckpoint(eager=True),
-                    extra_wall_s=_time.perf_counter() - t0,
-                )
-            return df.localCheckpoint(eager=True) if fan_out else df
+            if qlog is None:
+                return df
+            return qlog.run(
+                f"curate:{name}",
+                df,
+                action=lambda d: d.localCheckpoint(eager=True),
+                extra_wall_s=_time.perf_counter() - t0,
+            )
 
+        # Widened before its checkpoint: the checkpoint keeps its input's
+        # partitioning, which the exchange before it AQE-coalesces to ~1
+        # partition at bench scale, and that would serialize the
+        # CPU-heavy passes reading it (MinHash signatures, the shingle
+        # explode).
         exact = stage(
             "clean_exact_dedup",
             lambda: drop_exact_duplicates(
-                docs.withColumn(text_col, clean_text(text_col)), text_col
-            ),
-            fan_out=True,
+                docs.withColumn(TEXT_COL, clean_text(TEXT_COL)), TEXT_COL
+            ).repartition(_wide),
         )
+        if qlog is None:
+            exact = exact.localCheckpoint(eager=True)
 
-        def build_near_dedup() -> DataFrame:
-            pairs = minhash_candidates(exact, id_col, text_col).filter(
-                F.col("est_jaccard") >= near_threshold
+        def near_dedup() -> DataFrame:
+            pairs = minhash_candidates(exact, ID_COL, TEXT_COL).filter(
+                F.col("est_jaccard") >= NEAR_THRESHOLD
             )
             losers = (
                 connected_components(pairs)
                 .filter(F.col("doc_id") != F.col("cluster_id"))
-                .select(F.col("doc_id").alias(id_col))
+                .select(ID_COL)
             )
-            return exact.join(losers, id_col, "left_anti")
+            return exact.join(losers, ID_COL, "left_anti")
 
-        survivors = stage("near_dedup", build_near_dedup, fan_out=holdout is not None)
+        survivors = stage("near_dedup", near_dedup)
         if holdout is not None:
-            base = survivors
-
-            def build_contamination() -> DataFrame:
-                contaminated = (
-                    overlap_report(base, holdout, text_col, id_col, n=3)
-                    .filter(F.col("contam_frac") > max_contamination)
-                    .select(id_col)
-                )
-                return base.join(contaminated, id_col, "left_anti")
-
-            survivors = stage("contamination", build_contamination)
-        toks = T.tokens(text_col)
+            survivors = stage(
+                "contamination",
+                lambda: decontaminate(survivors, holdout, max_contamination),
+            )
         gated = stage(
             "repetition_gate",
-            lambda: survivors.withColumn(
-                "_dup_frac",
-                1 - F.size(F.array_distinct(toks)) / F.greatest(F.size(toks), F.lit(1)),
-            )
-            .filter(F.col("_dup_frac") <= max_dup_word_frac)
-            .drop("_dup_frac"),
+            lambda: survivors.filter(dup_word_frac(TEXT_COL) <= MAX_DUP_WORD_FRAC),
         )
-        return stage(
-            "split",
-            lambda: split_corpus(
-                gated, id_col, weights or {"train": 0.9, "val": 0.05, "test": 0.05}
-            ),
-        )
+        return stage("split", lambda: split_corpus(gated, ID_COL, SPLIT_WEIGHTS))

@@ -91,6 +91,13 @@ def distinct_token_ratio(col: Column | str) -> Column:
     return F.size(F.array_distinct(toks)) / F.size(toks)
 
 
+def dup_word_frac(col: Column | str) -> Column:
+    """Duplicate-word fraction: the share of tokens that repeat an earlier
+    one (the Gopher repetition signal; 0 for all-distinct text). Null text
+    gives null."""
+    return 1 - distinct_token_ratio(col)
+
+
 def quality_score(col: Column | str) -> Column:
     """Composite quality heuristic in [0, ~1]: rewards lexical diversity and
     sane token lengths, penalizes stopword stuffing. Deterministic algebra

@@ -36,21 +36,21 @@ from pyspark.sql import functions as F
 from hadoop_stuff_spark.operators.pairs import pair_counts
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Components of the undirected graph given by ``pairs`` →
-    DataFrame[doc_id, cluster_id] for every vertex that appears in an edge
-    (cluster_id = min vertex id of the component — the canonical doc).
+# the two vertex columns of a pair relation (every pair builder's output)
+SRC, DST = "doc_a", "doc_b"
+
+
+def connected_components(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
+    """Components of the undirected graph given by the ``SRC``–``DST``
+    pairs → DataFrame[doc_id, cluster_id] for every vertex that appears in
+    an edge (cluster_id = min vertex id of the component — the canonical
+    doc).
 
     Deterministic; raises if ``max_iters`` rounds don't converge (dedup
     graphs converge in ~log(diameter); 25 covers any realistic corpus).
     """
-    edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
-        pairs.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    edges = pairs.select(F.col(SRC).alias("u"), F.col(DST).alias("v")).union(
+        pairs.select(F.col(DST).alias("u"), F.col(SRC).alias("v"))
     )
     edges = edges.localCheckpoint(eager=True)  # pair-gen lineage ends here
     # round 1 — from identity labels the pointer jump is a no-op, so the
@@ -113,12 +113,10 @@ def connected_components(
     raise RuntimeError(f"connected_components did not converge in {max_iters} rounds")
 
 
-def dedup_clusters(
-    pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b"
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Cluster assignment + per-cluster size for near-dup pairs. The
     canonical document of each cluster is its min doc_id (== cluster_id)."""
-    comp = connected_components(pairs, src, dst)
+    comp = connected_components(pairs)
     sizes = comp.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "cluster_id").select("doc_id", "cluster_id", "cluster_size")
 

@@ -72,38 +72,20 @@ def overlap_report(
 
 
 def decontaminate(
-    corpus: DataFrame,
-    holdout: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    max_overlap: int = 0,
+    corpus: DataFrame, holdout: DataFrame, max_contamination: float
 ) -> DataFrame:
-    """Engine API: corpus rows whose holdout n-gram overlap is <= max_overlap
-    distinct shingles (default: drop on ANY overlap). Schema-preserving."""
-    sh = shingles(text_col, n)
-    holdout_sh = holdout.select(F.explode(sh).alias("shingle")).distinct()
-    # Deterministic row id: a CONTENT hash over every column, never a
-    # synthetic monotonic id — the marked frame feeds two plan branches
-    # (the overlap aggregate and the anti-join), and a non-deterministic
-    # id can be re-evaluated differently per branch so the anti-join
-    # silently keeps contaminated rows or drops clean ones (the exact
-    # flake class test_streaming_upsert caught). Exactly-identical rows
-    # share an id, which is semantically right — they have identical
-    # contamination — and the (id, shingle) distinct below keeps the
-    # per-row overlap count exact despite the sharing.
-    marked = corpus.withColumn(
-        "_rid", F.xxhash64(*[F.col(c) for c in corpus.columns])
+    """Corpus rows whose contaminated 3-gram fraction (`overlap_report`'s
+    ``contam_frac``) is at most ``max_contamination``; 0.0 drops a doc that
+    shares any 3-gram with the holdout. Rows are ``doc_id``-keyed ``text``
+    documents and keep their columns. The report and the anti-join both
+    read ``corpus``, so pass a materialized or cheap-to-recompute frame
+    (`Engine.curate` passes checkpoints)."""
+    contaminated = (
+        overlap_report(corpus, holdout)
+        .filter(F.col("contam_frac") > max_contamination)
+        .select("doc_id")
     )
-    hits = (
-        marked.select("_rid", F.explode(sh).alias("shingle"))
-        .join(F.broadcast(holdout_sh), "shingle")
-        .select("_rid", "shingle")
-        .distinct()
-        .groupBy("_rid")
-        .agg(F.count(F.lit(1)).alias("_n_overlap"))
-        .filter(F.col("_n_overlap") > max_overlap)
-    )
-    return marked.join(hits, "_rid", "left_anti").drop("_rid")
+    return corpus.join(contaminated, "doc_id", "left_anti")
 
 
 def contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:

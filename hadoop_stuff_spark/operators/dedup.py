@@ -322,7 +322,7 @@ def _minhash_perm_coeffs(perms: int) -> tuple:
     return a, b
 
 
-def minhash_signature(col: Column | str, n: int = 3, perms: int = MINHASH_PERMS) -> Column:
+def minhash_signature(col: Column | str, n: int = 3) -> Column:
     """Deterministic MinHash signature, Arrow-batched numpy: base-hash
     each n-gram shingle (vectorized murmur3 double-hash, 64-bit), then
     perm i = min over shingles of the multiply-shift universal hash
@@ -350,11 +350,11 @@ def minhash_signature(col: Column | str, n: int = 3, perms: int = MINHASH_PERMS)
 
     from hadoop_stuff_spark.operators.sketches import murmur3_64_np
 
-    a_co, b_co = _minhash_perm_coeffs(perms)
+    a_co, b_co = _minhash_perm_coeffs(MINHASH_PERMS)
 
     @pandas_udf(ArrayType(LongType()))
     def _sig(token_arrays: pd.Series) -> pd.Series:
-        sentinel = np.full(perms, _LONG_MAX, dtype=np.int64)
+        sentinel = np.full(MINHASH_PERMS, _LONG_MAX, dtype=np.int64)
         shingle_lists: list[list[bytes]] = []
         flat: list[bytes] = []
         for arr in token_arrays:
@@ -406,16 +406,14 @@ def minhash_candidates(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    bands: int = LSH_BANDS,
-    perms: int = MINHASH_PERMS,
 ) -> DataFrame:
     """LSH candidate pairs (id_a < id_b) with estimated Jaccard from
-    signature agreement. Plan shape: one scan computing signatures →
-    explode to (band_hash, id) → self-join per bucket → dedup pairs.
-    The shuffle never carries document text."""
-    rows = perms // bands
+    signature agreement (``MINHASH_PERMS`` values in ``LSH_BANDS``
+    bands). Plan shape: one scan computing signatures → explode to
+    (band_hash, id) → self-join per bucket → dedup pairs. The shuffle
+    never carries document text."""
     sigs = spread(docs).select(
-        F.col(id_col).alias("id"), minhash_signature(text_col, n, perms).alias("sig")
+        F.col(id_col).alias("id"), minhash_signature(text_col, n).alias("sig")
     )
     # signatures are reused by the banding branch AND the two estimation
     # joins — materialize so the pandas-UDF signature pass runs once. An
@@ -429,7 +427,7 @@ def minhash_candidates(
     # band on (band, bucket, id) ONLY — the 512 B signature must not ride
     # the bands-way explode through the candidate shuffle (16x payload
     # replication); surviving pairs re-join it below, once each side
-    banded = sigs.select("id", minhash_bands("sig", bands, rows).alias("bb")).select(
+    banded = sigs.select("id", minhash_bands("sig").alias("bb")).select(
         "id", "bb.band", "bb.bucket"
     )
     # the candidate set is the pair ids alone: an aggregate over two
@@ -447,7 +445,7 @@ def minhash_candidates(
                 lambda v: v == 1,
             )
         )
-        / F.lit(perms * 1.0),
+        / F.lit(MINHASH_PERMS * 1.0),
         6,
     )
     return (

@@ -207,9 +207,7 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         n_toks.alias("n_tokens"),
-        F.round(F.lit(1.0) - F.size(F.array_distinct(toks)) / n_toks, 6).alias(
-            "dup_word_frac"
-        ),
+        F.round(T.dup_word_frac("text"), 6).alias("dup_word_frac"),
         F.round(T.top_element_count(toks) / n_toks, 6).alias("top_word_frac"),
         F.when(
             n_bigs >= 1, F.round(T.top_element_count(bigs) / n_bigs, 6)

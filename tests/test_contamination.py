@@ -42,12 +42,15 @@ def test_overlap_report_counts(spark):
 
 def test_decontaminate_drops_only_overlapping(spark):
     corpus = _docs(spark, CORPUS)
-    clean = decontaminate(corpus, _docs(spark, HOLDOUT))
+    clean = decontaminate(corpus, _docs(spark, HOLDOUT), 0.0)
     assert sorted(r["doc_id"] for r in clean.collect()) == [2, 3]
     assert clean.columns == corpus.columns
-    # tolerance: allow up to 3 overlapping shingles -> doc 1 survives too
-    lax = decontaminate(corpus, _docs(spark, HOLDOUT), max_overlap=3)
+    # the rule is a fraction: doc 1 shares 3 of its 7 shingles (0.428571),
+    # so it survives a 0.5 cap and falls at 0.4
+    lax = decontaminate(corpus, _docs(spark, HOLDOUT), 0.5)
     assert sorted(r["doc_id"] for r in lax.collect()) == [1, 2, 3]
+    tight = decontaminate(corpus, _docs(spark, HOLDOUT), 0.4)
+    assert sorted(r["doc_id"] for r in tight.collect()) == [2, 3]
 
 
 def test_repetition_helpers_known_values(spark):

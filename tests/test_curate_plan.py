@@ -25,15 +25,17 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def test_curate_construction_runs_23_jobs(spark, sf_dir):
-    """Building the pipeline, with no action, runs exactly 23 jobs: 4 for
-    the exact-dedup fan-out checkpoint, 1 for MinHash's signature
-    checkpoint, 13 inside connected_components (4 for its edge list, 2 for
-    its join-free first label round, 7 for the confirming round, whose
-    changed-label count is observed on the round's own checkpoint) and 5
-    for the near-dup survivors' fan-out checkpoint. Each AQE query stage
-    is its own job. The same count holds at sf0.1 on 4 cores. The tables
-    load outside the counted group: loading is not curate's work."""
+def test_curate_construction_runs_18_jobs(spark, sf_dir):
+    """Building the pipeline, with no action, runs exactly 18 jobs: 4 for
+    the exact-dedup fan-out checkpoint (scan, spread exchange, exact-dedup
+    exchange, checkpoint), 1 for MinHash's signature checkpoint and 13
+    inside connected_components (4 for its edge list, 2 for its join-free
+    first label round, 7 for the confirming round, whose changed-label
+    count is observed on the round's own checkpoint). The near-dup
+    survivors are no barrier: they are the exact-dedup checkpoint
+    anti-joined with the loser set. Each AQE query stage is its own job.
+    The same count holds at sf0.1 on 4 cores. The tables load outside the
+    counted group: loading is not curate's work."""
     corpus, holdout = _curate_inputs(spark, sf_dir)
     sc = spark.sparkContext
     group = "curate-construction"
@@ -42,7 +44,7 @@ def test_curate_construction_runs_23_jobs(spark, sf_dir):
         Engine(spark).curate(corpus, holdout, max_contamination=0.5)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 23
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 18
 
 
 def test_warm_curate_compiles_no_code(spark, sf_dir):

@@ -27,3 +27,11 @@ def test_engine_public_methods_are_entry_points_and_composites():
         "audit",
         "score_by_frequency",
     }
+
+
+def test_curate_takes_only_the_options_callers_set():
+    """curate's stage rules are module constants; its parameters are the
+    inputs and the two settings callers pass. A removed option that comes
+    back fails here."""
+    params = list(inspect.signature(Engine.curate).parameters)
+    assert params == ["self", "docs", "holdout", "max_contamination", "qlog"]

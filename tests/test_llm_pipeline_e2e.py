@@ -51,7 +51,7 @@ def test_full_training_data_pipeline(spark, sf_dir):
     # --- stage 4: decontaminate against the held-out slice
     holdout = docs.filter(F.col("doc_id") % 20 == 0)
     corpus = neardeduped.filter(F.col("doc_id") % 20 != 0)
-    clean_corpus = decontaminate(corpus, holdout, n=3)
+    clean_corpus = decontaminate(corpus, holdout, 0.0)  # drop on any overlap
     n_clean = clean_corpus.count()
     assert 0 < n_clean <= n_near
     # no surviving doc shares a 3-gram with the holdout (spot-check via
@@ -64,10 +64,7 @@ def test_full_training_data_pipeline(spark, sf_dir):
     assert resid == 0
 
     # --- stage 5: repetition/quality gate (keep docs under the dup-word cap)
-    toks = T.tokens("text")
-    gated = clean_corpus.withColumn(
-        "_dup_frac", 1 - F.size(F.array_distinct(toks)) / F.size(toks)
-    ).filter(F.col("_dup_frac") <= 0.9).drop("_dup_frac")
+    gated = clean_corpus.filter(T.dup_word_frac("text") <= 0.9)
     n_gated = gated.count()
     assert 0 < n_gated <= n_clean
 
