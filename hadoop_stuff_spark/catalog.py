@@ -28,10 +28,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Dimension tables small enough to broadcast at any scale factor (region ~5
-# rows, nation ~25 rows even at 100 TB TPC-H scale).
-BROADCAST_DIMS = {"region", "nation"}
-
 
 @functools.lru_cache(maxsize=256)
 def _nano_ts_columns(path: str) -> tuple[str, ...]:
@@ -89,14 +85,19 @@ def _parse_bytes(v: str) -> int:
 
 
 def _scan_partition_estimate(df: DataFrame) -> int | None:
-    """Upper-bound estimate of a file-scan frame's partition count from
+    """Upper-bound estimate of a file scan's partition count from
     driver-side metadata only: sum over input files of
     ceil(size / maxPartitionBytes) — Spark's own split formula, minus the
     small-file packing (openCostInBytes), so actual <= estimate. Costs a
     file listing, NOT the physical-planning + RDD-conversion round trip
-    a getNumPartitions probe pays per call (r3 VERDICT nit). Returns
-    None for non-scan frames (post-shuffle frames already carry
-    shuffle.partitions-sized partitioning and never need spreading)."""
+    a getNumPartitions probe pays per call (r3 VERDICT nit).
+
+    The files are ``Dataset.inputFiles``: every file relation anywhere in
+    the frame's optimized plan. So a derived frame (a filter, a
+    projection, even an aggregate or join that shuffles) is estimated by
+    the files it reads, not by its own partitioning. Returns None only
+    when the plan reads no file (a checkpoint, a local relation) or a
+    file cannot be sized."""
     import math
 
     try:
@@ -131,7 +132,10 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     ESTIMATED from file metadata (`_scan_partition_estimate`) so the
     check itself stays off the job path; because the estimate is an
     upper bound, a scan it calls wide enough may still arrive narrower
-    (small-file packing) — an under-spread, never a wrong result."""
+    (small-file packing) — an under-spread, never a wrong result. The
+    estimate counts the input files of the whole plan, so a frame derived
+    from a narrow scan is spread too, even after a shuffle; a frame that
+    reads no file (a checkpoint) is returned as it is."""
     par = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     est = _scan_partition_estimate(df)
     if est is not None and est < par:

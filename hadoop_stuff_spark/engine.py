@@ -362,16 +362,14 @@ class Engine:
             losers = (
                 connected_components(pairs)
                 .filter(F.col("doc_id") != F.col("cluster_id"))
-                .select(ID_COL)
+                .select(F.col("doc_id").alias(ID_COL))
             )
             return exact.join(losers, ID_COL, "left_anti")
 
-        survivors = stage("near_dedup", near_dedup)
-        if holdout is not None:
-            survivors = stage(
-                "contamination",
-                lambda: decontaminate(survivors, holdout, max_contamination),
-            )
+        near = stage("near_dedup", near_dedup)
+        survivors = near if holdout is None else stage(
+            "contamination", lambda: decontaminate(near, holdout, max_contamination)
+        )
         gated = stage(
             "repetition_gate",
             lambda: survivors.filter(dup_word_frac(TEXT_COL) <= MAX_DUP_WORD_FRAC),

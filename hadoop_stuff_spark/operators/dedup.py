@@ -64,8 +64,19 @@ FROM documents GROUP BY 1
 
 
 def drop_exact_duplicates(df: DataFrame, content_col: str = "text") -> DataFrame:
-    """Engine API: keep one row per distinct normalized content."""
-    return df.withColumn("_fp", fingerprint_md5(content_col)).dropDuplicates(["_fp"]).drop("_fp")
+    """Engine API: keep one row per distinct normalized content, the one
+    with the least ``doc_id`` — the canonical copy every exact-dup
+    operator picks (`dedup_exact_groups`, `_canonical_first`). Spark
+    limits each fingerprint group to that row before the shuffle
+    (WindowGroupLimit), so the exchange carries at most one row per
+    fingerprint per input partition."""
+    first = Window.partitionBy("_fp").orderBy("doc_id")
+    return (
+        df.withColumn("_fp", fingerprint_md5(content_col))
+        .withColumn("_rank", F.row_number().over(first))
+        .filter(F.col("_rank") == 1)
+        .drop("_fp", "_rank")
+    )
 
 
 # ---------------------------------------------------------------------------

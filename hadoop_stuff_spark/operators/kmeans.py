@@ -9,22 +9,22 @@ Every iteration is:
   matrix collected to the driver (:func:`_assign_np` — control-plane-sized,
   the IVF coarse-quantizer pattern, similarity.py). Distances are squared
   L2 rounded to 6 dp BEFORE the argmin; ties break to the smallest cell.
-  A fully-declarative variant (:func:`kmeans_assign`: broadcast crossJoin
-  + fold + row_number window) is kept as the collect-free building block,
-  but the unrolled no-action plan re-evaluates every earlier iteration
-  inside each centroid reference — measured 6.4 s vs ~3.5 s at sf0.1 —
-  so the query functions iterate with one k-row collect per round
-  instead (the clusters.py convergence-scalar pattern). The remaining
+  A fully-declarative assignment (broadcast crossJoin + fold + row_number
+  window) re-evaluated every earlier iteration inside each centroid
+  reference of the unrolled no-action plan — measured 6.4 s vs ~3.5 s at
+  sf0.1 — so the query functions iterate with one k-row collect per
+  round instead (the clusters.py convergence-scalar pattern). The remaining
   ~3.5 s at sf0.1 is fixed per-round job overhead (3 assignment passes
   + 2 collect rounds over only 2000 vectors); the per-vector work that
   actually scales is the numpy matmul, and the prepared vector frame is
   checkpointed once so no round re-runs scan + cast + repartition.
-- **update**: per-cell per-dimension means as 64 plain SUM aggregates over
-  fixed-point bigints (``round(x·10⁶)``), so the partial aggregation is
-  map-side and the result is EXACT and order-independent across
-  partitionings — the engine-wide fixed-point rule (functions/money.py)
-  applied to float reductions. No posexplode: the shuffle carries one row
-  per (cell) with 64 long sums, not 64 rows per vector.
+- **update**: in the same Arrow pass (:func:`_lloyd_round_np`), each
+  batch emits per-cell counts and sums of fixed-point bigints
+  (``round(x·10⁶)``); they reduce JVM-side to k×64 (cell, dimension)
+  longs and the new centroids are formed on the driver. Integer sums make
+  the result EXACT and order-independent across partitionings — the
+  engine-wide fixed-point rule (functions/money.py) applied to float
+  reductions.
 
 Cross-engine exactness (the reason this is oracle-backed where most
 k-means implementations could never be): initial centroids are the first
@@ -58,64 +58,6 @@ DIM = 64
 FP = 1_000_000  # fixed-point scale for order-independent float sums
 
 
-def _sqdist(a, b) -> F.Column:
-    """Squared L2 distance as a sequential left-to-right fold — the same
-    accumulation order as DuckDB's list_aggregate('sum'), so doubles match
-    bitwise (seed 0.0 + t1 == t1 exactly in IEEE)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def kmeans_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: (vec_id, vec) × broadcast (cell, cent)
-    → (vec_id, vec, cell, dist). dist is squared L2 rounded to 6 dp BEFORE
-    the argmin; ties break on cell id, so the assignment is deterministic
-    and engine-portable."""
-    scored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "vec",
-        "cell",
-        F.round(_sqdist(F.col("vec"), F.col("cent")), 6).alias("dist"),
-    )
-    w = Window.partitionBy("vec_id").orderBy("dist", "cell")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "vec", "cell", "dist")
-    )
-
-
-def kmeans_update(assigned: DataFrame, dim: int = DIM) -> DataFrame:
-    """New centroids: per-cell per-dimension mean via ``dim`` exact
-    fixed-point SUM aggregates (map-side partial, one output row per cell).
-    Cells with no members vanish — Lloyd's standard empty-cell drop.
-
-    dim-bound: one aggregate with ``dim`` SUM expressions stays inside
-    Janino/WSCG limits for dim ≲ 500 (the engine's wiretap soak pinned
-    codegen breakdown around 500 expressions in one operator) — fine for
-    this table's 64 and typical 128-384-dim embeddings; for 1k-4k-dim
-    vectors switch the update to a posexplode (cell, dim, fx) aggregate —
-    the same exact integers at the cost of one wider shuffle."""
-    sums = assigned.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(
-                F.round(F.element_at("vec", i + 1) * F.lit(float(FP)), 0).cast(
-                    "long"
-                )
-            ).alias(f"s{i}")
-            for i in range(dim)
-        ],
-    )
-    cent = F.array(
-        *[(F.col(f"s{i}") / F.lit(float(FP))) / F.col("n") for i in range(dim)]
-    )
-    return sums.select("cell", cent.alias("cent"))
-
-
 def _assign_np(vecs: DataFrame, cent_rows: list, n_assign: int = 1) -> DataFrame:
     """Nearest-centroid assignment against DRIVER-COLLECTED centroids (k×64
     doubles — a control-plane-sized artifact, same footprint class as the
@@ -126,10 +68,9 @@ def _assign_np(vecs: DataFrame, cent_rows: list, n_assign: int = 1) -> DataFrame
     Emits ``n_assign`` (vec_id, vec, cell, dist) rows per vector. dist is
     squared L2 rounded to 6 dp BEFORE the argmin; numpy's stable argsort
     breaks ties by centroid position, and ``cent_rows`` arrives
-    cell-sorted, so ties resolve to the smallest cell — identical ordering
-    semantics to the declarative :func:`kmeans_assign` (whose fold this
-    replaces: ±1 ulp summation differences are erased by the 6 dp round;
-    outputs verified identical at sf0.001/0.01/0.1)."""
+    cell-sorted, so ties resolve to the smallest cell — the same ordering
+    as the oracle's (dist, cell) argmin. Against the oracle's sequential
+    fold, ±1 ulp summation differences are erased by the 6 dp round."""
     cent_rows = sorted(cent_rows, key=lambda r: r.cell)
     C = np.stack([np.asarray(r.cent, dtype=np.float64) for r in cent_rows])
     cells = np.array([r.cell for r in cent_rows], dtype=np.int64)
@@ -195,9 +136,9 @@ def _lloyd_round_np(vecs: DataFrame, cent_rows: list, dim: int = DIM) -> list:
 
     Exactness unchanged: per-element fixed points use the identical
     ROUND_HALF_UP rule (:func:`_fp_round_half_up`), integer partial
-    sums are associative so the per-cell totals are the SAME integers
-    ``kmeans_update`` produced, and each centroid coordinate is the
-    same (s/10⁶)/n double division of exact integers."""
+    sums are associative so the per-cell totals are the SAME integers a
+    JVM-side SUM of the rounded coordinates gives, and each centroid
+    coordinate is the same (s/10⁶)/n double division of exact integers."""
     cent_rows = sorted(cent_rows, key=lambda r: r.cell)
     C = np.stack([np.asarray(r.cent, dtype=np.float64) for r in cent_rows])
     cells = np.array([r.cell for r in cent_rows], dtype=np.int64)

@@ -132,8 +132,8 @@ LIMIT 10
 
 
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 6-way join with broadcast dims (region/nation tiny at
-    ANY scale — SURVEY.md catalog.BROADCAST_DIMS), revenue per nation."""
+    """TPC-H Q5 shape: 6-way join with broadcast dims (region ~5 and nation
+    ~25 rows at ANY scale), revenue per nation."""
     region = broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"))
     nation = broadcast(_t(spark, sf_dir, "nation"))
     cust = _t(spark, sf_dir, "customer")

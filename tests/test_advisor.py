@@ -94,3 +94,20 @@ def test_spread_survives_two_letter_max_partition_bytes(spark, tmp_path):
         assert spread(spark.read.parquet(p)).count() == 1000
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+
+def test_spread_estimates_derived_frames_by_their_input_files(spark, sf_dir):
+    """catalog.spread's estimate reads Dataset.inputFiles, the file
+    relations of the whole optimized plan: a shuffled aggregate over the
+    one-file documents scan is estimated at one partition and spread
+    again, while a checkpoint reads no file and is left as it is."""
+    from hadoop_stuff_spark.catalog import _scan_partition_estimate, load_table, spread
+
+    derived = load_table(spark, sf_dir, "documents").groupBy("source").count()
+    assert _scan_partition_estimate(derived) == 1
+    wide = spread(derived)
+    assert wide is not derived
+    assert wide.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    ckpt = derived.localCheckpoint(eager=True)
+    assert _scan_partition_estimate(ckpt) is None
+    assert spread(ckpt) is ckpt

@@ -1,5 +1,5 @@
-"""Text cleaning (PII redaction, markup stripping) and deterministic
-sampling / corpus mixing. Value oracles here are hand-built examples plus
+"""Text cleaning (PII redaction, markup stripping), the copy exact dedup
+keeps, and deterministic sampling / corpus mixing. Value oracles here are hand-built examples plus
 determinism/partitioning-invariance properties; the DuckDB-differential
 certification queries live in EXTRA_QUERIES (picked up by
 test_oracle_parity)."""
@@ -16,6 +16,21 @@ from hadoop_stuff_spark.operators.sampling import (
     sample_n_per_group,
     stratified_sample,
 )
+
+
+def test_exact_dedup_keeps_the_least_doc_id(spark):
+    """The surviving copy of an exact-duplicate group is its least doc_id,
+    as in dedup_exact_groups, wherever the copies sit in the input."""
+    from hadoop_stuff_spark.operators.dedup import drop_exact_duplicates
+
+    base = "the quick brown fox jumps over the lazy dog"
+    upper = "  THE quick brown fox jumps over the LAZY dog "
+    other = "spark shuffles partitions across executors"
+    rows = [(9, base), (5, base), (7, other), (2, upper), (8, other), (3, base)]
+    df = spark.createDataFrame(rows, "doc_id: long, text: string").repartition(3)
+    out = drop_exact_duplicates(df, "text")
+    assert out.columns == df.columns
+    assert sorted(tuple(r) for r in out.collect()) == [(2, upper), (7, other)]
 
 
 def _one(spark, text: str, expr) -> str:
