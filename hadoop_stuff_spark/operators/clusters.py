@@ -220,33 +220,20 @@ def pagerank_copurchase_parts(
     edges = pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
         pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
     )
-    # one materialization each, hash-partitioned on the join key so the
-    # checkpointed relation's partitioning survives into every
-    # iteration's join (LogicalRDD keeps outputPartitioning — the
-    # edge side of the contribution join never re-shuffles): edges
-    # carries its src degree pre-joined (one join total instead of one
-    # per iteration), and the (node, d, n) grid the rank rebuild needs
-    # is hoisted out of the loop the same way.
+    # one materialization each: edges carries its src degree pre-joined
+    # (one join total instead of one per iteration), and the (node, d, n)
+    # grid the rank rebuild needs is hoisted out of the loop the same way.
+    # Neither is hash-partitioned on src first: with repartition("src")
+    # before each checkpoint the final plan had one src exchange fewer
+    # (19 vs 20 at sf0.1), but the two extra shuffles cost as much as it
+    # saved (interleaved noop medians 2.98 s vs 2.97 s, 10 pairs, 4 cores),
+    # and widening them to core width lost in 3 of 4 interleaved pairs
+    # (the per-iteration relations are small here).
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    # r13 probe, NEGATIVE: widening these checkpoints to core width
-    # (repartition(P, "src")) lost narrowly in 3 of 4 same-session
-    # interleaved noop pairs (4.20-5.37 s narrow vs 4.49-5.62 s wide):
-    # the per-iteration join/agg relations are small enough here that
-    # the two wider materialization exchanges cost more than the
-    # iteration stages save. Kept at the r12-certified shape.
-    ew = (
-        edges.join(deg, "src")
-        .repartition("src")
-        .localCheckpoint(eager=True)
-    )
+    ew = edges.join(deg, "src").localCheckpoint(eager=True)
     deg = ew.select("src", "d").distinct()
     n = deg.agg(F.count(F.lit(1)).alias("n"))  # node count, 1-row scalar
-    grid = (
-        deg.crossJoin(n)
-        .select("src", "d", "n")
-        .repartition("src")
-        .localCheckpoint(eager=True)
-    )
+    grid = deg.crossJoin(n).select("src", "d", "n").localCheckpoint(eager=True)
     ranks = grid.select(
         F.col("src").alias("node"), (F.lit(1.0) / F.col("n")).alias("rank")
     )
