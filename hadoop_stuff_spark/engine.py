@@ -362,7 +362,7 @@ class Engine:
             losers = (
                 connected_components(pairs)
                 .filter(F.col("doc_id") != F.col("cluster_id"))
-                .select(F.col("doc_id").alias(ID_COL))
+                .select(ID_COL)
             )
             return exact.join(losers, ID_COL, "left_anti")
 
