@@ -1,8 +1,8 @@
 """Text cleaning (PII redaction, markup stripping), the copy exact dedup
-keeps, and deterministic sampling / corpus mixing. Value oracles here are hand-built examples plus
-determinism/partitioning-invariance properties; the DuckDB-differential
-certification queries live in EXTRA_QUERIES (picked up by
-test_oracle_parity)."""
+keeps, and deterministic sampling / corpus mixing. Value oracles here are
+hand-built examples plus determinism/partitioning-invariance properties;
+the DuckDB-differential certification queries live in EXTRA_QUERIES
+(picked up by test_oracle_parity)."""
 
 from pyspark.sql import functions as F
 
